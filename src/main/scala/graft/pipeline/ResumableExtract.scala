@@ -16,11 +16,13 @@ import graft.core._
   * is bucketed by hash(conv_id); each bucket is one atomic unit of COMMIT.
   * Since round 3 the WORK is a single pass: all todo buckets are extracted
   * in one job (input scanned once, not once per bucket) and written with
-  * `partitionBy(bucket)`; each bucket directory is then validated and
-  * committed individually through the [[TableIO]] seam, preserving
-  * bucket-granular resume. A crash mid-write redoes only the uncommitted
-  * buckets of THAT run (their directories are pre-cleaned and overwritten on
-  * redo); committed buckets are pruned before the scan.
+  * `partitionBy(bucket)`. One landed-row pass then counts, per (table,
+  * bucket), the rows on disk in the todo buckets' directories of both
+  * tables, and each bucket is committed individually with its counts
+  * through the [[TableIO]] seam, preserving bucket-granular resume. A
+  * crash mid-write redoes only the uncommitted buckets of THAT run (their
+  * directories are pre-cleaned and overwritten on redo); committed buckets
+  * are pruned before the scan.
   *
   * At deployment the input is an Iceberg table bucket-partitioned on
   * hash(conv_id), so the todo filter prunes at the FILE level and the
@@ -80,11 +82,13 @@ object ResumableExtract {
       writePartitioned(errors.withColumn("bucket",
         format_string("%05d", bucketOf(col("conv_id"), buckets))), s"$outDir/errors")
 
-      // validate + commit each bucket individually (bucket stays the atomic
-      // unit of visibility even though the work was one pass)
+      // validate all todo buckets in one landed-row pass, then commit each
+      // bucket individually (bucket stays the atomic unit of visibility
+      // even though the work and the validation were one pass each)
+      val landed = countLanded(spark, outDir, todo)
       todo.map { b =>
-        val modCount = countLanded(spark, s"$outDir/modules", b)
-        val errCount = countLanded(spark, s"$outDir/errors", b)
+        val modCount = landed.getOrElse(("modules", b), 0L)
+        val errCount = landed.getOrElse(("errors", b), 0L)
         val turnCount = turnCounts.getOrElse(b, 0L)
         io.commitBucket(outDir, BucketStat(b, turnCount, modCount, errCount))
         BucketResult(b, turnCount, modCount, errCount)
@@ -102,13 +106,27 @@ object ResumableExtract {
       .partitionBy("bucket")
       .parquet(dir)
 
-  /** Rows that actually landed in a bucket directory (the committed truth,
-    * not the plan). A bucket ALL of whose rows were filtered produces no
-    * directory — that is a valid empty commit. */
-  private def countLanded(spark: SparkSession, tableDir: String, bucket: Int): Long = {
-    val dir = bucketDir(tableDir, bucket)
-    if (!Files.isDirectory(Paths.get(dir))) 0L
-    else spark.read.parquet(dir).count()
+  /** Rows that actually landed per (table, bucket) in the `buckets`
+    * directories of both tables (the committed truth, not the plan), in ONE
+    * pass: each table's bucket directories are read with `basePath` and a
+    * partition-column-only schema, so no schema-inference job runs and no
+    * data column is decoded. Every file's footer is still read, so a torn
+    * data file fails the pass before any commit. A bucket ALL of whose rows
+    * were filtered produces no directory and is absent from the result —
+    * that is a valid empty commit (count 0). */
+  private[pipeline] def countLanded(spark: SparkSession, outDir: String,
+      buckets: Seq[Int]): Map[(String, Int), Long] = {
+    val landed = Seq("modules", "errors").flatMap { t =>
+      val dirs = buckets.map(bucketDir(s"$outDir/$t", _))
+        .filter(d => Files.isDirectory(Paths.get(d)))
+      if (dirs.isEmpty) None
+      else Some(spark.read.schema("bucket INT").option("basePath", s"$outDir/$t")
+        .parquet(dirs: _*).select(lit(t).as("table"), col("bucket")))
+    }
+    landed.reduceOption(_ unionByName _).fold(Map.empty[(String, Int), Long]) {
+      _.groupBy("table", "bucket").count().collect()
+        .map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2)).toMap
+    }
   }
 
   private def deleteDir(p: java.nio.file.Path): Unit =

@@ -4,7 +4,6 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.core._
-import graft.fixtures.TranscriptGen
 import graft.operators.SharedSpark
 import graft.sources.{CsvSinks, CsvSources}
 
@@ -34,111 +33,6 @@ class EntityMergeSpec extends AnyFunSuite {
     assert(once.conflicts.count() == 0)
     assert(once.inserted.count() == 0)
     assert(once.merged.collect().toSet == existing.collect().toSet)
-  }
-}
-
-class ResumableExtractSpec extends AnyFunSuite {
-  private lazy val spark = SharedSpark.spark
-
-  // the same kill/rerun lifecycle must hold through EITHER commit layer —
-  // the TableIO seam is compile-checked AND behavior-checked
-  for ((ioName, io) <- Seq("parquet-manifest" -> ParquetManifestIO,
-      "snapshot-log" -> SnapshotLogIO)) {
-    test(s"[$ioName] single-pass run commits per bucket; resume skips committed") {
-      val dir = java.nio.file.Files.createTempDirectory("graft_resume").toString
-      val ctx = ExtractPipeline.makeContext(TranscriptGen.allEntityIds)
-      val turns = ExtractPipeline.transcripts(spark, 12L, 3)
-
-      val first = ResumableExtract.run(spark, turns, ctx, dir, buckets = 4, io = io)
-      assert(first.map(_.bucket).toSet == Set(0, 1, 2, 3))
-      assert(first.map(_.turns).sum == turns.count())
-      val allModules = ResumableExtract.readModules(spark, dir, io).count()
-      assert(allModules == first.map(_.modules).sum)
-
-      // resume: nothing left to do
-      val second = ResumableExtract.run(spark, turns, ctx, dir, buckets = 4, io = io)
-      assert(second.isEmpty)
-
-      // partial resume: roll back one bucket's commit (= crash between data
-      // write and commit) -> readModules must NOT leak that bucket's rows,
-      // and exactly that bucket reruns with identical output afterwards
-      io.rollback(dir, 2)
-      val bucket2 = first.find(_.bucket == 2).get.modules
-      assert(ResumableExtract.readModules(spark, dir, io).count()
-        == allModules - bucket2)
-      val third = ResumableExtract.run(spark, turns, ctx, dir, buckets = 4, io = io)
-      assert(third.map(_.bucket) == Seq(2))
-      assert(third.head.modules == bucket2)
-      assert(ResumableExtract.readModules(spark, dir, io).count() == allModules)
-    }
-  }
-
-  test("snapshot log: every commit is an immutable version; hint flips last") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_snap").toString
-    SnapshotLogIO.init(dir)
-    assert(SnapshotLogIO.committedBuckets(dir).isEmpty)
-    SnapshotLogIO.commitBucket(dir, BucketStat(3, 10, 5, 1))
-    SnapshotLogIO.commitBucket(dir, BucketStat(1, 7, 2, 0))
-    assert(SnapshotLogIO.committedBuckets(dir) == Seq(1, 3))
-    // re-commit of the same bucket replaces its stats, not duplicates
-    SnapshotLogIO.commitBucket(dir, BucketStat(3, 11, 6, 0))
-    assert(SnapshotLogIO.committedBuckets(dir) == Seq(1, 3))
-    SnapshotLogIO.rollback(dir, 3)
-    assert(SnapshotLogIO.committedBuckets(dir) == Seq(1))
-    // immutable log: all versions still present on disk
-    val meta = java.nio.file.Paths.get(dir, "metadata")
-    val versions = java.nio.file.Files.list(meta).iterator()
-    var vs = List.empty[String]
-    while (versions.hasNext) vs ::= versions.next().getFileName.toString
-    assert(vs.count(_.matches("v\\d+\\.json")) == 4)
-  }
-
-  test("snapshot log CAS: two committers at the same version — one loses loudly") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cas").toString
-    SnapshotLogIO.init(dir)
-    SnapshotLogIO.commitBucket(dir, BucketStat(0, 1, 1, 0)) // v1
-    // deterministic race: both committers computed target v2; the first
-    // publish wins, the second MUST refuse instead of clobbering it
-    SnapshotLogIO.publishAt(dir, 2, Seq(BucketStat(0, 1, 1, 0), BucketStat(1, 2, 2, 0)))
-    val loser = intercept[SnapshotLogIO.CommitConflictException] {
-      SnapshotLogIO.publishAt(dir, 2, Seq(BucketStat(0, 1, 1, 0), BucketStat(7, 9, 9, 9)))
-    }
-    assert(loser.getMessage.contains("v2"))
-    // the winner's snapshot is intact — bucket 7 never landed
-    assert(SnapshotLogIO.committedBuckets(dir) == Seq(0, 1))
-    // no stray staged tmp left behind by the loser
-    val meta = java.nio.file.Paths.get(dir, "metadata")
-    val files = java.nio.file.Files.list(meta).iterator()
-    while (files.hasNext) assert(!files.next().getFileName.toString.endsWith(".tmp"))
-  }
-
-  test("snapshot log: concurrent committers all land via CAS retry, none lost") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_casmt").toString
-    SnapshotLogIO.init(dir)
-    val threads = (0 until 8).map { b =>
-      new Thread(() => SnapshotLogIO.commitBucket(dir, BucketStat(b, b + 1, b, 0)))
-    }
-    threads.foreach(_.start()); threads.foreach(_.join())
-    // every bucket committed exactly once despite contention on the version file
-    assert(SnapshotLogIO.committedBuckets(dir) == (0 until 8))
-  }
-
-  test("snapshot log: orphan vN.json (crash before hint flip) is adopted, not wedged") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_orphan").toString
-    SnapshotLogIO.init(dir)
-    SnapshotLogIO.commitBucket(dir, BucketStat(0, 5, 3, 0)) // v1, hint=1
-    // simulate a crash between the v2.json publish and the hint flip: the
-    // snapshot file exists but the hint still says 1
-    val meta = java.nio.file.Paths.get(dir, "metadata")
-    java.nio.file.Files.writeString(meta.resolve("v2.json"),
-      """{"version":2,"buckets":[{"bucket":0,"turns":5,"modules":3,"errors":0},""" +
-        """{"bucket":4,"turns":8,"modules":6,"errors":1}]}""")
-    // probe-forward discovery adopts the orphan as committed
-    assert(SnapshotLogIO.committedBuckets(dir) == Seq(0, 4))
-    // and the next commit targets v3 — it does not wedge on the orphan
-    SnapshotLogIO.commitBucket(dir, BucketStat(9, 1, 1, 0))
-    assert(SnapshotLogIO.committedBuckets(dir) == Seq(0, 4, 9))
-    assert(java.nio.file.Files.readString(meta.resolve("version-hint.text")).trim == "3")
   }
 }
 
