@@ -183,22 +183,24 @@ object Bench {
   }
 
   /** Streaming interval-join leg: the q58 incident-attribution shape driven
-    * through the native stream-stream join (StreamingExtract
-    * .intervalJoinStream), events fed in 4 micro-batches per side from the
+    * through StreamingExtract.intervalJoinStream (one flatMapGroupsWithState
+    * keyed by user), events fed in 4 micro-batches per side from the
     * sf dir's events table. Timed: feeding + processing to completion.
     * Driver-side collect of the events table is measurement plumbing at
     * bench scale (100k tiny rows), not a pipeline pattern. */
   /** State-partition sizing is the first-order knob for a stateful stream:
     * each shuffle partition is a state-store instance paying per-batch
     * checkpoint/maintenance cost, and the count locks in at query start.
-    * Measured on this leg (sf0.1, 4 micro-batches): 8 partitions ~10-14 s,
-    * 32 ~35 s, 64 ~44 s (tools/StreamLegProbe reproduces the sweep) — the
+    * Measured on this leg when it still ran Spark's stream-stream join
+    * (sf0.1, 4 micro-batches): 8 partitions ~10-14 s, 32 ~35 s, 64 ~44 s
+    * (tools/StreamLegProbe reproduces the sweep) — the
     * batch default (one per core) is an anti-pattern for bounded-state
     * joins. The settings are scoped to this query: streaming locks their
     * values at start(), batch queries re-read the restored conf at their
     * own planning.
     *
-    * Round-5 overhead profile (StreamLegProbe sweep, warm minima):
+    * Round-5 overhead profile of the stream-stream join form (StreamLegProbe
+    * sweep, warm minima):
     *  - no-data micro-batches OFF is the second-order knob (6.3 -> 4.4 s):
     *    by default every processAllAvailable() appends a data-less batch
     *    purely to advance the watermark and evict state — for an
@@ -209,11 +211,13 @@ object Bench {
     *    ~0.3 s; RocksDB (with or without changelog checkpointing) is ~1 s
     *    SLOWER here — its native-store overhead only pays off when state
     *    outgrows the JVM heap, and this leg's state is bounded and tiny.
-    *  - the residual ~0.8 s/micro-batch is fixed Structured Streaming
-    *    cost at this scale: per-batch incremental planning plus 2 stateful
-    *    stages x (task scheduling + state-store commit) across 4 state
-    *    stores per partition — it shrinks only by cutting batch count,
-    *    which is the leg's shape, not a tunable.
+    *  - that form's residual ~0.8 s/micro-batch was mostly state-store
+    *    commit: its symmetric hash join kept 4 state stores per partition
+    *    (2 per side), 16 commits per micro-batch at 4 partitions. The
+    *    one-operator form keeps 1 per partition; on the perfbench
+    *    `event_joins` stream (traced, seeds 11-13, 4 vCPUs) the median
+    *    micro-batch went from 83-105 to 18-20 ms planning, 629-697 to
+    *    370-396 ms execution and 1,224-1,348 to 421-448 ms of commits.
     * formatValidation and minBatchesToRetain measured within noise;
     * left at their safe defaults. */
   def streamingIntervalJoinLeg(spark: SparkSession, sfDir: String,

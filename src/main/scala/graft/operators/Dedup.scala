@@ -383,6 +383,11 @@ object Dedup {
       .select("id_a", "id_b", "jaccard")
   }
 
+  /** Characters of each sampled document `ngramStrategyFor` reads: far
+    * above a typical document (the bench corpora top out under 600), so
+    * only outliers are cut. */
+  val StrategySampleChars = 4096
+
   /** Statistics-based physical-strategy pick for the n-gram join — the
     * engine-side analog of Spark's size-statistics join selection: instead
     * of asking the caller to know their corpus's df regime, estimate it
@@ -396,12 +401,18 @@ object Dedup {
     * (bench documents: mean df ≈ 17) has nothing rare and the count-join
     * wins (measured ~6×). Sample-df underestimates global df, which only
     * biases TOWARD "prefix" near the boundary — the safer side, since
-    * prefix degrades gradually while count-join explodes on Σdf². */
+    * prefix degrades gradually while count-join explodes on Σdf².
+    *
+    * Each sampled text is cut to its first `StrategySampleChars` characters
+    * in the plan, so the collect is bounded in bytes as well as rows: at
+    * most `sampleDocs` × 4 × `StrategySampleChars` bytes of UTF-8 text,
+    * however long the documents are. */
   def ngramStrategyFor(
       docs: DataFrame, idCol: String, textCol: String,
       shingleK: Int = 3, sampleDocs: Int = 2048,
       meanDfCutoff: Double = 3.0): String = {
-    val base = docs.select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
+    val base = docs.select(col(idCol).cast("long").as("id"),
+      substring(col(textCol), 1, StrategySampleChars).as("text"))
     // the sample is bounded by construction (sampleDocs rows), so the df
     // statistics are computed DRIVER-SIDE over the collected rows — the
     // Ivf.fit/Pq.fit trainer pattern — instead of a cluster aggregation

@@ -242,6 +242,38 @@ class DedupSpec extends AnyFunSuite {
     assert(auto == explicit)
   }
 
+  test("ngramStrategyFor collects at most StrategySampleChars of each document") {
+    // 3 documents of ~5 MB of distinct hex words among 97 short ones on a
+    // 4-word vocabulary: whole texts would ship several MB of task results,
+    // even compressed, and their unique shingles would tip the sample to
+    // "prefix"
+    val n = 100
+    val dense = array(Seq("aa", "bb", "cc", "dd").map(lit): _*)
+    val docs = spark.range(n).select(col("id").as("doc_id"),
+      when(col("id") < 3, concat_ws(" ", transform(sequence(lit(1), lit(150000)),
+        x => md5(concat(col("id").cast("string"), lit("-"), x.cast("string"))))))
+        .otherwise(concat_ws(" ", transform(sequence(lit(1), lit(60)),
+          x => element_at(dense, (pmod(hash(col("id"), x), lit(4)) + 1).cast("int")))))
+        .as("text"))
+    var resultBytes = 0L
+    val results = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null) resultBytes += e.taskMetrics.resultSize
+    }
+    spark.sparkContext.addSparkListener(results)
+    val strategy =
+      try {
+        val s = Dedup.ngramStrategyFor(docs, "doc_id", "text")
+        org.apache.spark.ListenerBusDrain(spark.sparkContext)
+        s
+      } finally spark.sparkContext.removeSparkListener(results)
+    // every document's share of the collect is within the cap (ASCII: one
+    // byte a character), plus task-result overhead
+    assert(resultBytes < n * Dedup.StrategySampleChars + (256L << 10),
+      s"$resultBytes bytes of task results")
+    assert(strategy == "count")
+  }
+
   test("ngram join at threshold 1.0 finds exactly the identical-shingle-set pairs") {
     val docs = Seq((1L, "a b c d e"), (2L, "a b c d e"), (3L, "a b c d x"))
       .toDF("doc_id", "text")
