@@ -350,10 +350,10 @@ object SparkEntry {
         .groupBy(col("user_id"), col("ts"))
         .agg(max(col("event_id")).as("click_id"))
         .select(col("user_id"), col("ts").as("click_ts"), col("click_id"))
-      // bucketed form: no per-key window ever sees the raw event stream, so
-      // one hyperactive user cannot own a whole task at 100 TB (1-day
-      // buckets; any width is correct — differential spec pins equality)
-      graft.operators.AsOf.asofJoinBucketed(
+      // asofJoin splits by (user, day) only when the inputs outgrow one
+      // partition, so one hyperactive user cannot own a whole task at
+      // 100 TB; below that, one per-key window (same rows, spec-pinned)
+      graft.operators.AsOf.asofJoin(
         purchases, clicks, key = "user_id", leftTs = "purchase_ts",
         rightTs = "click_ts")
         .select(col("user_id"), col("purchase_id"), col("purchase_ts"),
@@ -377,12 +377,12 @@ object SparkEntry {
       val purchases = e.filter(col("event_type") === "purchase")
         .select(col("user_id"), col("event_id").as("purchase_id"),
           col("ts").as("p_ts"))
-      val pc = graft.operators.AsOf.asofJoinBucketed(
+      val pc = graft.operators.AsOf.asofJoin(
         purchases, leg("click", "c_ts", "click_id"),
         key = "user_id", leftTs = "p_ts", rightTs = "c_ts")
         .select(col("user_id"), col("purchase_id"),
           col("asof.click_id").as("click_id"), col("asof.c_ts").as("c_ts"))
-      val pcv = graft.operators.AsOf.asofJoinBucketed(
+      val pcv = graft.operators.AsOf.asofJoin(
         pc, leg("view", "v_ts", "view_id"),
         key = "user_id", leftTs = "c_ts", rightTs = "v_ts")
         .select(col("user_id"), col("click_id"),

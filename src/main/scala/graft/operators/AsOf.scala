@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 /** As-of join — for every left row, the LATEST right row of the same key
@@ -22,11 +23,17 @@ import org.apache.spark.sql.types._
   * match among equal-ts right rows is plan-dependent. Left-outer
   * semantics: left rows with no prior right row get a null match struct.
   *
-  * At 100 TB: the shuffle is the same hash-on-key exchange a groupBy
-  * costs; a hot key concentrates ONE user's history in a task. That skew
-  * defense is no longer prose — [[asofJoinBucketed]] bounds every task by
+  * Cells are chosen from the size of the inputs ([[asofJoin]] is the one
+  * entry point). A hot key concentrates ONE user's history in a task, so
+  * large inputs take [[asofJoinBucketed]], which bounds every task by
   * (key, time-bucket) via the GapAudit two-phase pattern: join within the
-  * bucket, fix boundaries with the previous bucket's closing state.
+  * bucket, fix boundaries with the previous bucket's closing state. Inputs
+  * that together fit the partition size AQE aims for
+  * (`spark.sql.adaptive.advisoryPartitionSizeInBytes`) take the single
+  * per-key window: the split exists so no key can make one task much larger
+  * than the others, and when the WHOLE input fits one ordinary partition no
+  * key can — the split's second phase (closing aggregate, left-bucket
+  * distinct, carry window) would only add jobs to the critical path.
   */
 object AsOf {
 
@@ -58,14 +65,7 @@ object AsOf {
       default: Long = 86400L * 1000000L): Long = {
     require(targetRowsPerCell >= 1, "targetRowsPerCell must be >= 1")
     require(topKeys >= 1, "topKeys must be >= 1")
-    val tsCol = right.schema(rightTs).dataType match {
-      case TimestampType | TimestampNTZType | DateType =>
-        unix_micros(col(rightTs).cast("timestamp"))
-      case LongType | IntegerType | ShortType | ByteType =>
-        col(rightTs).cast("long")
-      case other => throw new IllegalArgumentException(
-        s"autoBucketWidth needs a timestamp or integral ts column, got $other")
-    }
+    val tsCol = tsUnits(col(rightTs), right.schema(rightTs).dataType, "autoBucketWidth")
     val stats = right
       .filter(col(key).isNotNull && col(rightTs).isNotNull)
       .select(col(key).as("_k"), tsCol.as("_t"))
@@ -90,21 +90,73 @@ object AsOf {
       math.min(bestSpan, (targetRowsPerCell / bestDensity).toLong))
   }
 
+  /** Column names the operator uses while it runs, on either path. An
+    * input carrying one (or a left input carrying the output column
+    * `asof`) is rejected by every entry point, so whether a call is
+    * accepted never depends on which path its input size picks. */
+  private val Reserved = Seq("_k", "_t", "_tag", "_r", "_l", "_b", "_vb", "_in", "_cin")
+
+  /** Rejects reserved column names and ts columns the time split cannot
+    * bucket (see [[Reserved]]). */
+  private def checkInputs(op: String, left: DataFrame, right: DataFrame,
+      leftTs: String, rightTs: String): Unit = {
+    val clash = (left.columns ++ right.columns).filter(Reserved.contains) ++
+      left.columns.filter(_ == "asof")
+    require(clash.isEmpty,
+      s"$op reserves column names ${Reserved.mkString(", ")} and the " +
+        s"output column 'asof'; input carries ${clash.mkString(", ")}")
+    tsUnits(col(leftTs), left.schema(leftTs).dataType, op)
+    tsUnits(col(rightTs), right.schema(rightTs).dataType, op)
+  }
+
+  /** A ts column `c` of type `dt` as a long: microseconds for timestamp
+    * and date columns, the column's own units for integral ones. */
+  private def tsUnits(c: Column, dt: DataType, op: String): Column = dt match {
+    case TimestampType | TimestampNTZType | DateType =>
+      unix_micros(c.cast("timestamp"))
+    case LongType | IntegerType | ShortType | ByteType =>
+      c.cast("long")
+    case other => throw new IllegalArgumentException(
+      s"$op needs a timestamp or integral ts column, got $other")
+  }
+
+  /** Whether [[asofJoin]] splits by time: true when the optimizer's size
+    * estimates of the two inputs sum to more than
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes`. Read on the driver
+    * from plan statistics, once per input; starts no job. An input built
+    * from an RDD has no estimate, and Spark reports it as
+    * `spark.sql.defaultSizeInBytes`, so it splits. */
+  private[operators] def splitsByTime(left: DataFrame, right: DataFrame): Boolean = {
+    val budget = left.sparkSession.sessionState.conf
+      .getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+    def estimate(df: DataFrame): BigInt = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    estimate(left) + estimate(right) > BigInt(budget)
+  }
+
   /** `left` as-of `right` on key/ts columns; returns every left column
     * plus a nullable `asof` struct holding the matched right row.
     *
     * NULL semantics follow SQL ASOF (the DuckDB oracle): a NULL key or
     * NULL ts never matches — right rows with either are dropped up front
     * (they could otherwise be carried as a bogus "earliest ever" match),
-    * left rows with either survive with a null `asof` struct. */
+    * left rows with either survive with a null `asof` struct.
+    *
+    * Runs one per-key union-window when the inputs together fit the
+    * partition size AQE aims for, and [[asofJoinBucketed]] with 1-day
+    * cells otherwise ([[splitsByTime]]; the object doc says why that is
+    * safe). Both give the same rows. The ts columns must be timestamp,
+    * date or integral, as the time split needs. */
   def asofJoin(left: DataFrame, right: DataFrame,
       key: String, leftTs: String, rightTs: String): DataFrame = {
-    val reserved = Seq("_k", "_t", "_tag", "_r", "_l")
-    val clash = (left.columns ++ right.columns).filter(reserved.contains) ++
-      left.columns.filter(_ == "asof")
-    require(clash.isEmpty,
-      s"asofJoin reserves column names ${reserved.mkString(", ")} and the " +
-        s"output column 'asof'; input carries ${clash.mkString(", ")}")
+    checkInputs("asofJoin", left, right, leftTs, rightTs)
+    if (splitsByTime(left, right)) asofJoinBucketed(left, right, key, leftTs, rightTs)
+    else perKeyWindow(left, right, key, leftTs, rightTs)
+  }
+
+  /** The single-window body of [[asofJoin]]: one shuffle on the key, and
+    * a key's whole history in one window partition. */
+  private def perKeyWindow(left: DataFrame, right: DataFrame,
+      key: String, leftTs: String, rightTs: String): DataFrame = {
     val rPayload = struct(right.columns.map(col).toIndexedSeq: _*)
     val lPayload = struct(left.columns.map(col).toIndexedSeq: _*)
     val r = right
@@ -128,8 +180,10 @@ object AsOf {
       .select(col("_l.*"), col("asof"))
   }
 
-  /** Time-bucketed as-of join — identical contract and output to
-    * [[asofJoin]], but NO per-key window ever sees the raw row stream, so a
+  /** Time-bucketed as-of join — the split side of [[asofJoin]], which
+    * calls it with the default width above its size budget; call it
+    * directly to force the split or pick the width. Identical contract and
+    * output, but NO per-key window ever sees the raw row stream, so a
     * mega-key (one user owning a measurable fraction of all events — the
     * 100 TB skew case) is bounded by its densest (key, bucket) cell instead
     * of its entire history in one task.
@@ -140,7 +194,7 @@ object AsOf {
     *     bucket SUMMARIES (≤ #buckets rows per key, never row-scaled) gives
     *     each left bucket its carry-in state — the latest closing state of
     *     any strictly earlier bucket;
-    *  2. the in-bucket as-of runs the [[asofJoin]] union-window partitioned
+    *  2. the in-bucket as-of runs the per-key union-window partitioned
     *     by (key, bucket); rows with no in-bucket match fall back to the
     *     carry-in, joined on the same (key, bucket) hash partitioning the
     *     window already established (no extra exchange for the big side).
@@ -155,21 +209,9 @@ object AsOf {
       key: String, leftTs: String, rightTs: String,
       bucketWidth: Long = 86400L * 1000000L): DataFrame = {
     require(bucketWidth >= 1, s"bucketWidth must be >= 1, got $bucketWidth")
-    val reserved = Seq("_k", "_t", "_tag", "_r", "_l", "_b", "_vb", "_in", "_cin")
-    val clash = (left.columns ++ right.columns).filter(reserved.contains) ++
-      left.columns.filter(_ == "asof")
-    require(clash.isEmpty,
-      s"asofJoinBucketed reserves column names ${reserved.mkString(", ")} and " +
-        s"the output column 'asof'; input carries ${clash.mkString(", ")}")
-
-    def bucketOf(c: Column, dt: DataType): Column = dt match {
-      case TimestampType | TimestampNTZType | DateType =>
-        RangeJoin.idiv(unix_micros(c.cast("timestamp")), bucketWidth)
-      case LongType | IntegerType | ShortType | ByteType =>
-        RangeJoin.idiv(c.cast("long"), bucketWidth)
-      case other => throw new IllegalArgumentException(
-        s"asofJoinBucketed needs a timestamp or integral ts column, got $other")
-    }
+    checkInputs("asofJoinBucketed", left, right, leftTs, rightTs)
+    def bucketOf(c: Column, dt: DataType): Column =
+      RangeJoin.idiv(tsUnits(c, dt, "asofJoinBucketed"), bucketWidth)
 
     val rPayload = struct(right.columns.map(col).toIndexedSeq: _*)
     val lPayload = struct(left.columns.map(col).toIndexedSeq: _*)

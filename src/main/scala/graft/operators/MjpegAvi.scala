@@ -1,8 +1,7 @@
 package graft.operators
 
 import java.awt.image.BufferedImage
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
-import javax.imageio.ImageIO
+import java.io.ByteArrayOutputStream
 
 /** Minimal pure-Java MJPEG-in-AVI codec — just enough of the public RIFF/AVI
   * container format (Microsoft "AVI RIFF File Reference", public since 1992)
@@ -25,7 +24,7 @@ object MjpegAvi {
     def durationMs: Long = microSecPerFrame * frames.length / 1000L
     /** Decode one frame's JPEG payload; None if undecodable. */
     def decodeFrame(i: Int): Option[BufferedImage] =
-      try Option(ImageIO.read(new ByteArrayInputStream(frames(i))))
+      try Option(Multimodal.readImage(frames(i)))
       catch { case scala.util.control.NonFatal(_) => None }
   }
 
@@ -198,8 +197,6 @@ object MjpegAvi {
       }
       y += 1
     }
-    val baos = new ByteArrayOutputStream()
-    ImageIO.write(img, "jpg", baos)
-    baos.toByteArray
+    Multimodal.writeImage(img, "jpg")
   }
 }

@@ -3,6 +3,7 @@ package graft.operators
 import java.awt.image.BufferedImage
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import javax.imageio.ImageIO
+import javax.imageio.stream.{MemoryCacheImageInputStream, MemoryCacheImageOutputStream}
 import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream, AudioSystem}
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
@@ -76,9 +77,7 @@ object Multimodal {
               }
               y += 1
             }
-            val baos = new ByteArrayOutputStream()
-            ImageIO.write(img, "png", baos)
-            MediaRow(id, kind, baos.toByteArray, MediaMeta("png", w, h, 0L))
+            MediaRow(id, kind, writeImage(img, "png"), MediaMeta("png", w, h, 0L))
           case "audio" =>
             // a REAL mono 16-bit PCM WAV (JDK javax.sound.sampled encodes
             // it): deterministic waveform keyed by (id, sample index)
@@ -114,6 +113,29 @@ object Multimodal {
               MediaMeta("mjpeg-avi", w, h, nFrames * 1000L / fps))
         }
     }
+  }
+
+  /** Decode an in-memory image blob; null when no reader knows its format.
+    * `ImageIO.read(InputStream)` wraps the stream in a DISK-backed cache when
+    * `ImageIO.getUseCache` is on (its default): a temp file created and
+    * deleted per decode, pure overhead for bytes already in memory. A
+    * per-read memory cache avoids it without touching that process-global
+    * flag. Decoders throw on corrupt blobs; callers map that to a stub. */
+  private[operators] def readImage(bytes: Array[Byte]): BufferedImage = {
+    val in = new MemoryCacheImageInputStream(new ByteArrayInputStream(bytes))
+    val img = ImageIO.read(in) // closes `in` once a reader has taken it
+    if (img == null) in.close() // no reader matched: `in` was left open
+    img
+  }
+
+  /** Encode `img` as `format` bytes through a per-write memory cache (the
+    * write-side twin of [[readImage]]). */
+  private[operators] def writeImage(img: BufferedImage, format: String): Array[Byte] = {
+    val baos = new ByteArrayOutputStream()
+    val out = new MemoryCacheImageOutputStream(baos)
+    try ImageIO.write(img, format, out)
+    finally out.close() // flushes the cache into `baos`; leaves `baos` open
+    baos.toByteArray
   }
 
   /** Accumulate the 256-bucket integer-luma histogram of a decoded image
@@ -175,12 +197,6 @@ object Multimodal {
     val spark = media.sparkSession
     import spark.implicits._
     media.mapPartitions { it =>
-      // ImageIO defaults to DISK-backed image-input-stream caches (a temp
-      // file created and deleted per decode); the blobs here are in-memory
-      // byte arrays, so the file cache is pure overhead — switch this
-      // JVM's decoders to memory caching once per task (global, idempotent,
-      // output-identical; covers the MjpegAvi per-frame reads too)
-      ImageIO.setUseCache(false)
       it.grouped(BatchSize).flatMap { batch =>
         batch.iterator.map { row =>
           val bytes = row.media
@@ -190,7 +206,7 @@ object Multimodal {
               // magic bytes throw CMMException/IllegalArgumentException from
               // deep inside ImageIO — the contract is "undecodable -> stub
               // row", never a task failure
-              val img = try ImageIO.read(new ByteArrayInputStream(bytes))
+              val img = try readImage(bytes)
                 catch { case scala.util.control.NonFatal(_) => null }
               if (img == null) stubFeatures(row, frameStride) // undecodable blob
               else {
@@ -291,9 +307,8 @@ object Multimodal {
     val spark = media.sparkSession
     import spark.implicits._
     media.mapPartitions { it =>
-      ImageIO.setUseCache(false) // see decode(): blobs are in-memory
       it.filter(_.kind == "image").flatMap { row =>
-        val img = try ImageIO.read(new ByteArrayInputStream(row.media))
+        val img = try readImage(row.media)
           catch { case scala.util.control.NonFatal(_) => null } // see decode()
         if (img == null) Iterator.empty
         else {
@@ -312,9 +327,7 @@ object Multimodal {
             }
             y += 1
           }
-          val baos = new ByteArrayOutputStream()
-          ImageIO.write(out, "png", baos)
-          Iterator.single(Thumbnail(row.doc_id, tw, th, baos.toByteArray))
+          Iterator.single(Thumbnail(row.doc_id, tw, th, writeImage(out, "png")))
         }
       }
     }

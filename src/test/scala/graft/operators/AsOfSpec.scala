@@ -73,6 +73,11 @@ class AsOfSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       AsOf.asofJoin(l2, r, "k", "lts", "rts")
     }
+    // reserved by the time split only; rejected on this small input too
+    val l3 = Seq((1L, 1L, 1L)).toDF("k", "lts", "_b")
+    intercept[IllegalArgumentException] {
+      AsOf.asofJoin(l3, r, "k", "lts", "rts")
+    }
   }
 
   test("per-key window only: no unpartitioned window in the plan") {
@@ -219,5 +224,76 @@ class AsOfSpec extends AnyFunSuite {
     assert(AsOf.autoBucketWidth(zeroSpan, "k", "rts", default = 123L) == 123L)
     val empty = Seq.empty[(Long, Long, Long)].toDF("k", "rts", "rid")
     assert(AsOf.autoBucketWidth(empty, "k", "rts", default = 77L) == 77L)
+  }
+
+  private val Budget = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+
+  private def asofRows(df: org.apache.spark.sql.DataFrame) = df
+    .select(col("k"), col("lts"), col("lid"), col("asof.rid").as("rid"))
+    .collect()
+    .map(row => (row.getLong(0), row.getLong(1), row.getLong(2),
+      if (row.isNullAt(3)) None else Some(row.getLong(3))))
+    .sortBy(t => (t._1, t._2, t._3)).toSeq
+
+  /** Latest right row at or before each left row, by a driver-side scan. */
+  private def naive(lefts: Seq[(Long, Long, Long)], rights: Seq[(Long, Long, Long)]) = {
+    val byKey = rights.groupBy(_._1)
+    lefts.map { case (k, lt, lid) =>
+      (k, lt, lid, byKey.getOrElse(k, Nil).filter(_._2 <= lt).sortBy(_._2)
+        .lastOption.map(_._3))
+    }.sortBy(t => (t._1, t._2, t._3))
+  }
+
+  test("asofJoin splits by time above the size budget: mega-key corpus == naive") {
+    import spark.implicits._
+    // the corpus of the bucketed mega-key test above (seed 47)
+    val rnd = new scala.util.Random(47)
+    def key() = if (rnd.nextInt(10) < 7) 0L else 1L + rnd.nextInt(5)
+    val lefts = Seq.fill(600)((key(), rnd.nextInt(1000).toLong, rnd.nextLong()))
+    val rights = Seq.fill(80)((key(), rnd.nextInt(1000).toLong))
+      .distinct.map { case (k, t) => (k, t, k * 100000 + t) }
+    val l = lefts.toDF("k", "lts", "lid").repartition(7)
+    val r = rights.toDF("k", "rts", "rid").repartition(5)
+    assert(!AsOf.splitsByTime(l, r)) // a few KB: one per-key window
+    val expect = naive(lefts, rights)
+    assert(asofRows(AsOf.asofJoin(l, r, "k", "lts", "rts")) == expect)
+    SharedSpark.withConf(Budget, "1") {
+      assert(AsOf.splitsByTime(l, r))
+      assert(asofRows(AsOf.asofJoin(l, r, "k", "lts", "rts")) == expect)
+    }
+  }
+
+  test("asofJoin null semantics are the same on both sides of the size budget") {
+    import spark.implicits._
+    val l = Seq((Some(1L), Some(100L), 1L), (None, Some(100L), 2L),
+      (Some(1L), None, 3L)).toDF("k", "lts", "lid")
+    val r = Seq((Some(1L), Some(50L), 10L), (Some(1L), None, 11L),
+      (None, Some(10L), 12L)).toDF("k", "rts", "rid")
+    def run() = AsOf.asofJoin(l, r, "k", "lts", "rts")
+      .select(col("lid"), col("asof.rid").as("rid")).collect()
+      .map(row => row.getLong(0) ->
+        (if (row.isNullAt(1)) None else Some(row.getLong(1)))).toMap
+    val expect = Map(1L -> Some(10L), 2L -> None, 3L -> None)
+    assert(!AsOf.splitsByTime(l, r))
+    assert(run() == expect)
+    SharedSpark.withConf(Budget, "1") {
+      assert(AsOf.splitsByTime(l, r))
+      assert(run() == expect)
+    }
+  }
+
+  test("asofJoin: an input built from an RDD has no size estimate and splits") {
+    import spark.implicits._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val schema = StructType(Seq("k", "lts", "lid").map(StructField(_, LongType)))
+    val lefts = Seq((1L, 100L, 1L), (1L, 20L, 2L), (2L, 5L, 3L))
+    val l = spark.createDataFrame(
+      spark.sparkContext.parallelize(lefts.map { case (a, b, c) => Row(a, b, c) }, 2),
+      schema)
+    val rights = Seq((1L, 50L, 10L), (1L, 10L, 11L), (2L, 9L, 12L))
+    val r = rights.toDF("k", "rts", "rid")
+    assert(AsOf.splitsByTime(l, r))
+    assert(asofRows(AsOf.asofJoin(l, r, "k", "lts", "rts")) == naive(lefts, rights))
   }
 }

@@ -12,6 +12,18 @@ object SharedSpark {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
+
+  /** Runs `body` with the session conf `key` set to `value`, then puts back
+    * the value it had (or unsets it). */
+  def withConf[T](key: String, value: String)(body: => T): T = {
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body
+    finally old match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
 }
 
 class TextStatsSpec extends AnyFunSuite {
@@ -697,6 +709,25 @@ class MultimodalSpec extends AnyFunSuite {
     assert(feats.forall(_.kind == "image"))
     assert(feats.forall(_.decoded))
     assert(feats.map(f => (f.width, f.height)).toSeq == Seq((64, 64), (67, 64)))
+  }
+
+  test("decode and resize leave the process-global ImageIO cache flag as found") {
+    import javax.imageio.ImageIO
+    // doc ids 0..5: two each of image, audio and MJPEG video
+    val docs = (0L until 6L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
+    val media = Multimodal.synthesizeMedia(docs, spark)
+    val before = ImageIO.getUseCache
+    try {
+      val feats = Seq(true, false).map { flag =>
+        ImageIO.setUseCache(flag)
+        val f = Multimodal.decode(media).collect().sortBy(_.doc_id).toSeq
+        Multimodal.resizeImages(media, 16, 16).collect()
+        assert(ImageIO.getUseCache == flag, s"decode changed the flag from $flag")
+        f
+      }
+      assert(feats.head.forall(_.decoded)) // image and video frames decoded
+      assert(feats.head == feats.last)
+    } finally ImageIO.setUseCache(before)
   }
 
   test("resize: aspect-preserving thumbnails, deterministic pixels, a/v dropped") {
