@@ -834,7 +834,13 @@ object SparkEntry {
     * the bench leg times DECODE (the operator under test) instead of
     * re-paying fixture synthesis (PNG/WAV/MJPEG-AVI encode) every round:
     * synthesis stands in for reading real blobs, which a production run
-    * scans from the table once, not per query. */
+    * scans from the table once, not per query.
+    *
+    * The fast path reads the slot without the lock, so it can return a
+    * dataset that a concurrent caller for another (session, dir) is
+    * unpersisting while it swaps the slot. Results stay correct: an
+    * unpersisted dataset recomputes from its plan. Only the cache benefit
+    * is lost for that consumer. */
   @volatile private var mediaSlot: Option[(SparkSession, String,
     org.apache.spark.sql.Dataset[Multimodal.MediaRow])] = None
   private val mediaSlotLock = new Object

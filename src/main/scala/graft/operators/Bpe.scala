@@ -46,7 +46,7 @@ object Bpe {
   final case class Merge(merge_rank: Long, lhs: String, rhs: String)
 
   /** Split into single-code-point symbols (surrogate pairs stay whole). */
-  private def symbols(w: String): mutable.ArrayBuffer[String] = {
+  private[operators] def symbols(w: String): mutable.ArrayBuffer[String] = {
     val out = new mutable.ArrayBuffer[String](w.length)
     var i = 0
     while (i < w.length) {
@@ -58,7 +58,7 @@ object Bpe {
   }
 
   /** One greedy left-to-right non-overlapping pass of (a,b)→ab, in place. */
-  private def applyMerge(syms: mutable.ArrayBuffer[String],
+  private[operators] def applyMerge(syms: mutable.ArrayBuffer[String],
       a: String, b: String): Unit = {
     var r = 0
     var w = 0
@@ -77,65 +77,17 @@ object Bpe {
 
   /** Trainer instrumentation: `rounds` = merges actually learned,
     * `pairUpdates` = mutations applied to the pair-count structure (the
-    * work unit both trainers share, so the ratio is apples-to-apples). */
+    * work unit this trainer and BpeSpec's naive recount share, so the
+    * ratio is apples-to-apples). */
   final case class TrainStats(rounds: Int, pairUpdates: Long)
 
   /** Learn `nMerges` merges from (word, count) pairs, driver-side.
-    * Selection rule (shared by both trainers, so they are bit-identical):
-    * most frequent adjacent symbol pair, weighted by word count; ties
-    * broken to the lexicographically smallest (lhs, rhs); stop early when
-    * no pair occurs at least twice (merging a count-1 pair is pure vocab
-    * noise). This is the NAIVE O(nMerges × Σ|word|) recount trainer, kept
-    * as the differential baseline for [[trainFromCountsIncremental]]. */
-  def trainFromCounts(wordCounts: Seq[(String, Long)],
-      nMerges: Int): IndexedSeq[Merge] =
-    trainFromCountsNaive(wordCounts, nMerges)._1
-
-  /** Naive recount trainer with its pair-count-update ledger: every round
-    * re-tallies EVERY adjacent position of every word into a fresh map, so
-    * updates ≈ nMerges × (total adjacent positions). */
-  def trainFromCountsNaive(wordCounts: Seq[(String, Long)],
-      nMerges: Int): (IndexedSeq[Merge], TrainStats) = {
-    require(nMerges >= 0, s"nMerges must be >= 0, got $nMerges")
-    val words = wordCounts.iterator
-      .filter(_._1.nonEmpty)
-      .map { case (wd, c) => (symbols(wd), c) }
-      .toArray
-    val out = IndexedSeq.newBuilder[Merge]
-    var rank = 0L
-    var updates = 0L
-    var exhausted = false
-    while (rank < nMerges && !exhausted) {
-      val pairCounts = mutable.HashMap.empty[(String, String), Long]
-      for ((syms, c) <- words) {
-        var i = 0
-        while (i + 1 < syms.length) {
-          val k = (syms(i), syms(i + 1))
-          pairCounts.update(k, pairCounts.getOrElse(k, 0L) + c)
-          updates += 1
-          i += 1
-        }
-      }
-      var best: (String, String) = null
-      var bestC = 1L // demand count >= 2
-      for ((k, c) <- pairCounts) {
-        if (c > bestC || (c == bestC && best != null &&
-            (k._1 < best._1 || (k._1 == best._1 && k._2 < best._2)))) {
-          best = k
-          bestC = c
-        }
-      }
-      if (best == null) exhausted = true
-      else {
-        for ((syms, _) <- words) applyMerge(syms, best._1, best._2)
-        out += Merge(rank, best._1, best._2)
-        rank += 1
-      }
-    }
-    (out.result(), TrainStats(rank.toInt, updates))
-  }
-
-  /** INCREMENTAL pair-count trainer — the classic heap-based BPE trainer
+    * Selection rule: most frequent adjacent symbol pair, weighted by word
+    * count; ties broken to the lexicographically smallest (lhs, rhs); stop
+    * early when no pair occurs at least twice (merging a count-1 pair is
+    * pure vocab noise).
+    *
+    * INCREMENTAL pair-count trainer — the classic heap-based BPE trainer
     * (maintained pair counts + candidate index, public knowledge; the
     * structure every production subword trainer uses, cf. Sennrich et al.
     * 2016's released `learn_bpe` and SentencePiece's BPE trainer):
@@ -150,15 +102,15 @@ object Bpe {
     *  - `queue` is an ordered set over (count desc, lhs asc, rhs asc),
     *    kept in lockstep with `pairCounts` (remove old entry / insert new
     *    on every delta), so selection is O(log P) and uses the SAME
-    *    max-count-then-lexicographic rule as the naive trainer.
+    *    max-count-then-lexicographic rule as a naive recount would.
     *
     * Complexity: O(Σ|word| + Σ_merges |affected words| × log P) total vs
     * the naive trainer's O(nMerges × Σ|word|). For Zipfian corpora the
     * affected set shrinks rapidly with rank, so a 2k–100k-merge vocabulary
     * is minutes-of-driver-time, not hours (see BpeSpec's measured ratio:
     * the update ledger is ≥50× smaller than naive at nMerges=2000).
-    * Returns bit-identical merges to [[trainFromCountsNaive]] (asserted
-    * differentially in BpeSpec). */
+    * Returns bit-identical merges to the naive recount trainer
+    * (BpeSpec's `trainFromCountsNaive`, asserted differentially there). */
   def trainFromCountsIncremental(wordCounts: Seq[(String, Long)],
       nMerges: Int): (IndexedSeq[Merge], TrainStats) = {
     require(nMerges >= 0, s"nMerges must be >= 0, got $nMerges")

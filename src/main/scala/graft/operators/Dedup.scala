@@ -683,45 +683,6 @@ object Dedup {
     (labels, round)
   }
 
-  /** The round-3 one-hop smallest-label propagation, kept as the
-    * differential-test baseline for [[nearDupClusters]]: same contract,
-    * O(component diameter) rounds instead of O(log n). */
-  def nearDupClustersOneHop(pairs: DataFrame, maxRounds: Int = 50): DataFrame = {
-    val edges = pairs.select(col("id_a"), col("id_b"))
-      .union(pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
-      .dropDuplicates("id_a", "id_b")
-      .cache()
-    // localCheckpoint each round: iterative self-joins otherwise grow the
-    // logical plan exponentially (lineage doubles per round) — the plan
-    // itself OOMs long before the data does
-    var labels = edges.select(col("id_a").as("id")).distinct()
-      .withColumn("cluster_id", col("id"))
-      .localCheckpoint()
-    var changedCount = 1L
-    var round = 0
-    while (changedCount > 0 && round < maxRounds) {
-      // each node adopts min(own label, neighbors' labels)
-      val neighborMin = edges
-        .join(labels.withColumnRenamed("id", "id_b"), Seq("id_b"))
-        .groupBy(col("id_a").as("id"))
-        .agg(min(col("cluster_id")).as("n_min"))
-      val updated = labels.join(neighborMin, Seq("id"), "left")
-        .select(col("id"),
-          least(col("cluster_id"), coalesce(col("n_min"), col("cluster_id")))
-            .as("new_cluster_id"),
-          col("cluster_id"))
-        .localCheckpoint() // eager: truncates lineage, materializes once
-      changedCount = updated.filter(col("new_cluster_id") =!= col("cluster_id")).count()
-      labels = updated.select(col("id"), col("new_cluster_id").as("cluster_id"))
-      round += 1
-    }
-    if (changedCount > 0)
-      throw new IllegalStateException(
-        s"nearDupClusters did not converge within $maxRounds rounds " +
-          s"($changedCount labels still changing) — raise maxRounds")
-    labels
-  }
-
   /** End-to-end corpus dedup: exact groups collapse first (cheap), then
     * MinHash near-dup pairs cluster via connected components; one keeper
     * (min id) survives per cluster. Returns the deduplicated corpus. */

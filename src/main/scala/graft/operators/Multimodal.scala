@@ -10,7 +10,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multimodal column plumbing: image/audio/video as opaque `binary` columns
-  * with typed metadata, decode/feature-extract/resize/frame-sample as
+  * with typed metadata, decode/feature-extract/frame-sample as
   * *batched* partition-local transforms.
   *
   * Image decode is REAL (`javax.imageio`, JDK built-in: PNG/JPEG → pixels;
@@ -291,43 +291,6 @@ object Multimodal {
               }
             case _ => stubFeatures(row, frameStride)
           }
-        }
-      }
-    }
-  }
-
-  final case class Thumbnail(doc_id: Long, width: Int, height: Int, png: Array[Byte])
-
-  /** Deterministic nearest-neighbor resize of decoded image rows to fit
-    * within (maxW, maxH), preserving aspect ratio, re-encoded as PNG.
-    * Hand-rolled sampling (not Graphics2D interpolation) so the output
-    * bytes are identical on any JVM/platform. Non-image / undecodable rows
-    * are dropped. Batched like decode: one pass, partition-local. */
-  def resizeImages(media: Dataset[MediaRow], maxW: Int, maxH: Int): Dataset[Thumbnail] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions { it =>
-      it.filter(_.kind == "image").flatMap { row =>
-        val img = try readImage(row.media)
-          catch { case scala.util.control.NonFatal(_) => null } // see decode()
-        if (img == null) Iterator.empty
-        else {
-          val (w, h) = (img.getWidth, img.getHeight)
-          val scale = math.min(1.0, math.min(maxW.toDouble / w, maxH.toDouble / h))
-          val tw = math.max(1, (w * scale).toInt)
-          val th = math.max(1, (h * scale).toInt)
-          val out = new BufferedImage(tw, th, BufferedImage.TYPE_INT_RGB)
-          var y = 0
-          while (y < th) {
-            val sy = y * h / th
-            var x = 0
-            while (x < tw) {
-              out.setRGB(x, y, img.getRGB(x * w / tw, sy))
-              x += 1
-            }
-            y += 1
-          }
-          Iterator.single(Thumbnail(row.doc_id, tw, th, writeImage(out, "png")))
         }
       }
     }

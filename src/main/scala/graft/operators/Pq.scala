@@ -196,135 +196,6 @@ object Pq {
       .select(col("query_id"), col("id"))
   }
 
-  /** (id, cell, code): the IVF×PQ index — one mapPartitions pass computes
-    * both the coarse IVF cell (cosine assignment, ties to lowest index —
-    * identical to Ivf.cellOf's array_position rule) and the PQ byte code,
-    * with both models broadcast. This is the persistent structure a
-    * production pipeline materializes: grouped by cell, a query touches
-    * only probes/k of the code stream. */
-  def encodeWithCells(corpus: DataFrame, idCol: String, vecCol: String,
-      pq: Model, ivf: Ivf.Model): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast((pq, ivf.centroids))
-    corpus.select(col(idCol).cast("long").as("id"),
-        col(vecCol).cast("array<double>").as("v"))
-      .as[(Long, Seq[Double])]
-      .mapPartitions { it =>
-        val (mod, cents) = bc.value
-        val dsub = mod.dsub
-        it.map { case (id, vs) =>
-          val raw = vs.toArray
-          require(raw.length == mod.dim,
-            s"vector $id has dim ${raw.length}, model expects ${mod.dim}")
-          // IVF cell on the RAW vector (cosine is scale-invariant, so this
-          // matches Ivf.cellOf bit-for-bit); PQ code on the normalized one
-          var cell = 0
-          var bestCos = Double.MinValue
-          var c = 0
-          while (c < cents.length) {
-            var dot = 0.0; var na = 0.0; var nb = 0.0
-            var i = 0
-            while (i < raw.length) {
-              dot += raw(i) * cents(c)(i); na += raw(i) * raw(i)
-              nb += cents(c)(i) * cents(c)(i); i += 1
-            }
-            val den = math.sqrt(na) * math.sqrt(nb)
-            val cs = if (den > 0) dot / den else 0.0
-            if (cs > bestCos) { bestCos = cs; cell = c }
-            c += 1
-          }
-          val v = normalize(raw)
-          val code = new Array[Byte](mod.m)
-          var j = 0
-          while (j < mod.m) {
-            code(j) = nearest(v, j * dsub, mod.codebooks(j)).toByte
-            j += 1
-          }
-          (id, cell, code)
-        }
-      }
-      .toDF("id", "cell", "code")
-  }
-
-  /** IVF×PQ ANN top-k (the composed FAISS-style index, Jégou et al. §V):
-    * each query probes its `probes` nearest coarse cells, ADC-scans ONLY
-    * the codes in those cells (a broadcast semi-join on the tiny
-    * (query, cell) probe set — scan cost drops to ~probes/k of the code
-    * stream ON TOP of the m-byte compression), then exact-re-ranks its
-    * top-r survivors. Recall depends on the corpus having coarse cluster
-    * structure, exactly as [[Ivf.topK]] does. */
-  def ivfPqTopK(corpus: DataFrame, idCol: String, vecCol: String,
-      queries: DataFrame, qidCol: String, qvecCol: String, k: Int,
-      pq: Model, ivf: Ivf.Model, probes: Int = 4, r: Int = 64): DataFrame = {
-    require(probes >= 1, s"probes must be >= 1, got $probes")
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val codes = encodeWithCells(corpus, idCol, vecCol, pq, ivf)
-
-    val qRows = queries.select(col(qidCol).cast("long").as("query_id"),
-      col(qvecCol).cast("array<double>").as("qv")).collect()
-    // per-query probe cells, driver-side (queries are small by contract)
-    val probePairs = qRows.flatMap { row =>
-      val qv = row.getSeq[Double](1).toArray
-      ivf.centroids.zipWithIndex.map { case (cvec, i) =>
-        var dot = 0.0; var na = 0.0; var nb = 0.0
-        var d = 0
-        while (d < qv.length) {
-          dot += qv(d) * cvec(d); na += qv(d) * qv(d)
-          nb += cvec(d) * cvec(d); d += 1
-        }
-        val den = math.sqrt(na) * math.sqrt(nb)
-        (i, if (den > 0) dot / den else 0.0)
-      }.sortBy { case (i, cs) => (-cs, i) }.take(probes)
-        .map { case (cell, _) => (row.getLong(0), cell) }
-    }.toSeq.toDF("query_id", "cell")
-
-    // probe-filter THEN score: rows are (query_id, id, code) pairs, so the
-    // ADC sum runs only on probed cells; the heap is the shared partial-agg
-    val tables = qRows.map { row =>
-      val qv = normalize(row.getSeq[Double](1).toArray)
-      val t = new Array[Double](pq.m * pq.ksub)
-      var j = 0
-      while (j < pq.m) {
-        var c = 0
-        while (c < pq.ksub) {
-          t(j * pq.ksub + c) = l2sq(qv, j * pq.dsub, pq.codebooks(j)(c))
-          c += 1
-        }
-        j += 1
-      }
-      row.getLong(0) -> t
-    }.toMap
-    val bc = spark.sparkContext.broadcast((tables, pq.m, pq.ksub))
-    val scored = codes.join(broadcast(probePairs), Seq("cell"))
-      .filter(col("id") =!= col("query_id"))
-      .select(col("query_id").cast("long"), col("id").cast("long"), col("code"))
-      .as[(Long, Long, Array[Byte])]
-      .mapPartitions { it =>
-        val (tabs, m, ksub) = bc.value
-        it.map { case (q, id, code) =>
-          val t = tabs(q)
-          var d = 0.0
-          var j = 0
-          while (j < m) { d += t(j * ksub + (code(j) & 0xff)); j += 1 }
-          (q, id, -d)
-        }
-      }
-      .toDF("query_id", "id", "_adc")
-    val candIds = TopK.topKPerGroup(scored, "query_id", "id", "_adc", r)
-      .select(col("query_id"), col("id"))
-
-    val vecs = corpus.select(col(idCol).cast("long").as("id"),
-      col(vecCol).cast("array<double>").as("v"))
-    val qv = queries.select(col(qidCol).cast("long").as("query_id"),
-      col(qvecCol).cast("array<double>").as("qv"))
-    Similarity.rerankTopK(
-      vecs.join(broadcast(candIds), Seq("id"))
-        .join(broadcast(qv), Seq("query_id"))
-        .select(col("query_id"), col("id"), col("v"), col("qv")), k)
-  }
-
   /** Full PQ ANN top-k: encode → ADC top-r candidates → EXACT cosine
     * re-rank on the original vectors (the tiny candidate set is broadcast
     * into both joins — the row-scaled corpus never shuffles). */

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Explicit key-salting for skewed aggregations and joins — the north-rule
+/** Explicit key-salting for skewed aggregations — the north-rule
   * mega-conversation treatment, as a named, reusable primitive.
   *
   * Context: AQE's skew handling splits oversized SHUFFLE JOIN partitions but
@@ -23,15 +23,8 @@ import org.apache.spark.sql.functions._
   */
 object Salting {
 
-  def saltCol(fineGrain: Column, buckets: Int): Column =
+  private def saltCol(fineGrain: Column, buckets: Int): Column =
     pmod(hash(fineGrain), lit(buckets))
-
-  /** Salted count of rows per key. */
-  def saltedCount(df: DataFrame, key: Column, fineGrain: Column, buckets: Int = 32): DataFrame =
-    df.groupBy(key.as("key"), saltCol(fineGrain, buckets).as("_salt"))
-      .agg(count(lit(1)).as("_c"))
-      .groupBy(col("key"))
-      .agg(sum(col("_c")).as("count"))
 
   /** Salted sum of `value` per key. */
   def saltedSum(df: DataFrame, key: Column, value: Column, fineGrain: Column,
@@ -40,21 +33,4 @@ object Salting {
       .agg(sum(value).as("_s"), count(lit(1)).as("_c"))
       .groupBy(col("key"))
       .agg(sum(col("_s")).as("sum"), sum(col("_c")).as("count"))
-
-  /** Broadcast-replicated salted join for a skewed LEFT key joining a small
-    * dimension: the dimension is exploded `buckets`-ways so every salted
-    * left partition finds its match — the classic skew-join salt when the
-    * dimension is too large for a plain broadcast but the key histogram is
-    * brutal. (With truly small dims, prefer broadcast(); this is the
-    * pattern for the middle regime.) */
-  def saltedJoin(
-      bigSkewed: DataFrame, key: String, fineGrain: Column,
-      dim: DataFrame, dimKey: String, buckets: Int = 32): DataFrame = {
-    val salted = bigSkewed.withColumn("_salt", saltCol(fineGrain, buckets))
-    val replicated = dim
-      .withColumn("_salt", explode(sequence(lit(0), lit(buckets - 1))))
-    salted.join(replicated,
-      salted(key) === replicated(dimKey) && salted("_salt") === replicated("_salt"))
-      .drop("_salt")
-  }
 }

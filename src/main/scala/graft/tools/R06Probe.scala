@@ -127,7 +127,7 @@ object R06Probe {
         leg("click", "c_ts", "click_id").unionByName(
           leg("view", "c_ts", "click_id")))
       t("q63.asof hop1 only")(
-        AsOf.asofJoinBucketed(purchases, leg("click", "c_ts", "click_id"),
+        AsOf.asofJoin(purchases, leg("click", "c_ts", "click_id"),
           key = "user_id", leftTs = "p_ts", rightTs = "c_ts"))
     }
 

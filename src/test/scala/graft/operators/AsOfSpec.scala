@@ -91,19 +91,34 @@ class AsOfSpec extends AnyFunSuite {
     assert(bad.isEmpty)
   }
 
+  private val Budget = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+
+  /** `f` of `asofJoin(l, r)` at the default budget (one per-key window)
+    * and at a 1-byte budget (split by time), each path asserted. */
+  private def bothPaths[T](l: org.apache.spark.sql.DataFrame,
+      r: org.apache.spark.sql.DataFrame)(f: org.apache.spark.sql.DataFrame => T): (T, T) = {
+    assert(!AsOf.splitsByTime(l, r))
+    val plain = f(AsOf.asofJoin(l, r, "k", "lts", "rts"))
+    val split = SharedSpark.withConf(Budget, "1") {
+      assert(AsOf.splitsByTime(l, r))
+      f(AsOf.asofJoin(l, r, "k", "lts", "rts"))
+    }
+    (plain, split)
+  }
+
   test("bucketed == plain asofJoin on a randomized corpus with one MEGA-key") {
     import spark.implicits._
+    val W = AsOf.CellWidth
     val rnd = new scala.util.Random(47)
     // key 0 is the mega-key: it owns ~70% of all rows and spans every
-    // bucket — the exact skew shape the bucketing exists for. Width 100
-    // over ts range [0,1000) -> ~10 buckets; plenty of left rows land in
-    // buckets with no in-bucket right row, exercising the carry-in path.
+    // cell — the exact skew shape the split exists for. Drawn over
+    // [0, 1000) and scaled by W / w, so the split's W-wide cells cut the
+    // rows where w-wide cells cut the unscaled ones: w = 100 gives ~10
+    // cells, with plenty of left rows in cells that hold no right row of
+    // their key (the carry-in path); w = 5000 keeps every key in one cell.
     def key() = if (rnd.nextInt(10) < 7) 0L else 1L + rnd.nextInt(5)
-    val lefts = Seq.fill(600)((key(), rnd.nextInt(1000).toLong, rnd.nextLong()))
-    val rights = Seq.fill(80)((key(), rnd.nextInt(1000).toLong))
-      .distinct.map { case (k, t) => (k, t, k * 100000 + t) }
-    val l = lefts.toDF("k", "lts", "lid").repartition(7)
-    val r = rights.toDF("k", "rts", "rid").repartition(5)
+    val lefts0 = Seq.fill(600)((key(), rnd.nextInt(1000).toLong, rnd.nextLong()))
+    val rights0 = Seq.fill(80)((key(), rnd.nextInt(1000).toLong)).distinct
     def norm(df: org.apache.spark.sql.DataFrame) = df
       .select(col("k"), col("lts"), col("lid"),
         col("asof.rid").as("rid"), col("asof.rts").as("rts"))
@@ -113,37 +128,54 @@ class AsOfSpec extends AnyFunSuite {
         if (row.isNullAt(4)) None else Some(row.getLong(4))))
       .sortBy(t => (t._1, t._2, t._3))
       .toSeq
-    val plain = norm(AsOf.asofJoin(l, r, "k", "lts", "rts"))
-    for (width <- Seq(1L, 7L, 100L, 5000L)) {
-      val bucketed = norm(AsOf.asofJoinBucketed(l, r, "k", "lts", "rts", width))
-      assert(bucketed == plain, s"width=$width diverged")
+    for (w <- Seq(1L, 8L, 100L, 5000L)) {
+      val scale = W / w
+      assert(scale * w == W) // the largest ts, 999 * W, still fits a long
+      val lefts = lefts0.map { case (k, t, id) => (k, t * scale, id) }
+      val rights = rights0.map { case (k, t) => (k, t * scale, k * 100000 + t) }
+      val l = lefts.toDF("k", "lts", "lid").repartition(7)
+      val r = rights.toDF("k", "rts", "rid").repartition(5)
+      val (plain, split) = bothPaths(l, r)(norm)
+      assert(split == plain, s"w=$w diverged")
+      val cellsPerKey = (lefts.map(x => x._1 -> x._2) ++ rights.map(x => x._1 -> x._2))
+        .groupBy(_._1).values.map(_.map(_._2 / W).distinct.size)
+      // a left row matched to a right row of an earlier cell took the carry-in
+      val carried = plain.exists { case (_, lts, _, _, rts) => rts.exists(_ / W < lts / W) }
+      if (w < 1000) {
+        assert(cellsPerKey.max >= 2, s"w=$w: no key spans two cells")
+        assert(carried, s"w=$w: no match crosses a cell edge")
+      } else assert(cellsPerKey.max == 1 && !carried, s"w=$w: expected one cell per key")
     }
   }
 
   test("bucketed: null semantics, inclusive bound, and timestamp ts match plain") {
     import spark.implicits._
-    val l = Seq((Some(1L), Some(100L), 1L), (None, Some(100L), 2L),
-      (Some(1L), None, 3L), (Some(1L), Some(99L), 4L)).toDF("k", "lts", "lid")
-    val r = Seq((Some(1L), Some(100L), 10L), (Some(1L), None, 11L),
-      (None, Some(10L), 12L), (Some(1L), Some(40L), 13L)).toDF("k", "rts", "rid")
-    val got = AsOf.asofJoinBucketed(l, r, "k", "lts", "rts", bucketWidth = 50L)
-      .select(col("lid"), col("asof.rid").as("rid")).collect()
-      .map(row => row.getLong(0) ->
-        (if (row.isNullAt(1)) None else Some(row.getLong(1)))).toMap
-    // equal-ts inclusive (1 -> 10), carry-in across bucket edge (4 -> 13,
-    // right row in bucket 0, left in bucket 1), nulls unmatched
-    assert(got == Map(1L -> Some(10L), 2L -> None, 3L -> None, 4L -> Some(13L)))
+    def rids(l: org.apache.spark.sql.DataFrame, r: org.apache.spark.sql.DataFrame) =
+      bothPaths(l, r)(_.select(col("lid"), col("asof.rid").as("rid")).collect()
+        .map(row => row.getLong(0) ->
+          (if (row.isNullAt(1)) None else Some(row.getLong(1)))).toMap)
+    // integral ts scaled so a cell spans 50 of the listed units
+    val s = AsOf.CellWidth / 50
+    val l = Seq((Some(1L), Some(100L * s), 1L), (None, Some(100L * s), 2L),
+      (Some(1L), None, 3L), (Some(1L), Some(99L * s), 4L)).toDF("k", "lts", "lid")
+    val r = Seq((Some(1L), Some(100L * s), 10L), (Some(1L), None, 11L),
+      (None, Some(10L * s), 12L), (Some(1L), Some(40L * s), 13L)).toDF("k", "rts", "rid")
+    val (plain, split) = rids(l, r)
+    // equal-ts inclusive (1 -> 10), carry-in across a cell edge (4 -> 13,
+    // right row in cell 0, left in cell 1), nulls unmatched
+    assert(split == Map(1L -> Some(10L), 2L -> None, 3L -> None, 4L -> Some(13L)))
+    assert(plain == split)
 
-    // timestamp-typed ts goes through unix_micros bucketing
-    val ts0 = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
-    def at(s: Int) = new java.sql.Timestamp(ts0.getTime + s * 1000L)
+    // timestamp-typed ts: cells are UTC days of unix_micros. Offsets are in
+    // 1/60 day, so a cell spans 60 of them
+    val day0 = 20454L * 86400000L // 2026-01-01T00:00Z in epoch ms, a cell edge
+    def at(u: Int) = new java.sql.Timestamp(day0 + u * 1440000L)
     val lt = Seq((1L, at(100), 1L), (1L, at(30), 2L)).toDF("k", "lts", "lid")
     val rt = Seq((1L, at(50), 10L), (1L, at(10), 11L)).toDF("k", "rts", "rid")
-    val gotTs = AsOf.asofJoinBucketed(lt, rt, "k", "lts", "rts",
-      bucketWidth = 60L * 1000000L) // 1-minute buckets
-      .select(col("lid"), col("asof.rid").as("rid")).collect()
-      .map(row => row.getLong(0) -> row.getLong(1)).toMap
-    assert(gotTs == Map(1L -> 10L, 2L -> 11L))
+    val (plainTs, splitTs) = rids(lt, rt)
+    // 1 (cell 1) matches 10 (cell 0) by carry-in; 2 matches 11 in-cell
+    assert(splitTs == Map(1L -> Some(10L), 2L -> Some(11L)))
+    assert(plainTs == splitTs)
   }
 
   test("bucketed: every window over the raw stream partitions by (key, bucket)") {
@@ -152,81 +184,25 @@ class AsOfSpec extends AnyFunSuite {
     import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
     val l = Seq((1L, 1L, 1L)).toDF("k", "lts", "lid")
     val r = Seq((1L, 1L, 1L)).toDF("k", "rts", "rid")
-    val plan = AsOf.asofJoinBucketed(l, r, "k", "lts", "rts", 100L)
-      .queryExecution.optimizedPlan
+    val plan = SharedSpark.withConf(Budget, "1") {
+      assert(AsOf.splitsByTime(l, r))
+      AsOf.asofJoin(l, r, "k", "lts", "rts").queryExecution.optimizedPlan
+    }
     val wins = plan.collect { case w: LWindow => w }
     assert(wins.nonEmpty)
     wins.foreach { w =>
       assert(w.partitionSpec.nonEmpty)
       // a window whose expressions touch the raw right payload (_r) must be
-      // partitioned by BOTH key and bucket — the mega-key defense; the
-      // key-only window is allowed solely over the bucket summaries (_cin)
+      // partitioned by BOTH key and cell — the mega-key defense; the
+      // key-only window is allowed solely over the cell summaries (_cin)
       val touchesRaw = w.windowExpressions.exists(_.collect {
         case a: AttributeReference if a.name == "_r" => a
       }.nonEmpty)
       if (touchesRaw)
         assert(w.partitionSpec.size >= 2,
-          s"raw-stream window is not bucket-partitioned: $w")
+          s"raw-stream window is not cell-partitioned: $w")
     }
   }
-
-  test("autoBucketWidth: density-derived width, correct on uniform AND " +
-    "mega-key fixtures, sized near the target cell bound") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(405)
-
-    // uniform fixture: 6 keys, ~100 rows each over span 10000
-    val uniR = (0 until 600).map { i =>
-      val k = (i % 6).toLong
-      (k, rnd.nextInt(10000).toLong, i.toLong)
-    }
-    // mega-key fixture: key 0 owns 90% of rows, same span
-    val megaR = (0 until 1000).map { i =>
-      val k = if (rnd.nextInt(10) < 9) 0L else 1L + rnd.nextInt(5)
-      (k, rnd.nextInt(10000).toLong, i.toLong)
-    }
-    val lefts = Seq.fill(300)(
-      (rnd.nextInt(6).toLong, rnd.nextInt(10000).toLong, rnd.nextLong()))
-    val l = lefts.toDF("k", "lts", "lid").repartition(5)
-
-    def norm(df: org.apache.spark.sql.DataFrame) = df
-      .select(col("k"), col("lts"), col("lid"), col("asof.rid").as("rid"))
-      .collect()
-      .map(row => (row.getLong(0), row.getLong(1), row.getLong(2),
-        if (row.isNullAt(3)) None else Some(row.getLong(3))))
-      .sortBy(t => (t._1, t._2, t._3)).toSeq
-
-    for ((rows, tag) <- Seq((uniR, "uniform"), (megaR, "mega"))) {
-      val r = rows.toDF("k", "rts", "rid").repartition(7)
-      val target = 100L
-      val w = AsOf.autoBucketWidth(r, "k", "rts", targetRowsPerCell = target)
-      // sized from the densest key: its expected rows per width-w cell
-      // lands within a small factor of the target (density estimate is
-      // span-uniform, so exactness isn't promised — boundedness is)
-      val byKey = rows.groupBy(_._1).view.mapValues(_.map(_._2))
-      val dMax = byKey.values.map { ts =>
-        ts.size.toDouble / math.max(1L, ts.max - ts.min)
-      }.max
-      val expCell = dMax * w
-      assert(w >= 1L, s"$tag: width $w")
-      assert(expCell <= target * 2 && expCell >= target / 4,
-        s"$tag: densest-cell estimate $expCell vs target $target (width $w)")
-      // any width must be CORRECT: differential vs the plain as-of
-      val plain = norm(AsOf.asofJoin(l, r, "k", "lts", "rts"))
-      val auto = norm(AsOf.asofJoinBucketed(l, r, "k", "lts", "rts", w))
-      val fixed = norm(AsOf.asofJoinBucketed(l, r, "k", "lts", "rts", 1000L))
-      assert(auto == plain, s"$tag: auto width $w diverged")
-      assert(fixed == plain, s"$tag: fixed width diverged")
-    }
-
-    // degenerate shapes fall back to the default width
-    val zeroSpan = Seq((1L, 5L, 1L), (1L, 5L, 2L)).toDF("k", "rts", "rid")
-    assert(AsOf.autoBucketWidth(zeroSpan, "k", "rts", default = 123L) == 123L)
-    val empty = Seq.empty[(Long, Long, Long)].toDF("k", "rts", "rid")
-    assert(AsOf.autoBucketWidth(empty, "k", "rts", default = 77L) == 77L)
-  }
-
-  private val Budget = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
 
   private def asofRows(df: org.apache.spark.sql.DataFrame) = df
     .select(col("k"), col("lts"), col("lid"), col("asof.rid").as("rid"))
@@ -246,7 +222,7 @@ class AsOfSpec extends AnyFunSuite {
 
   test("asofJoin splits by time above the size budget: mega-key corpus == naive") {
     import spark.implicits._
-    // the corpus of the bucketed mega-key test above (seed 47)
+    // the unscaled corpus of the mega-key test above (seed 47)
     val rnd = new scala.util.Random(47)
     def key() = if (rnd.nextInt(10) < 7) 0L else 1L + rnd.nextInt(5)
     val lefts = Seq.fill(600)((key(), rnd.nextInt(1000).toLong, rnd.nextLong()))

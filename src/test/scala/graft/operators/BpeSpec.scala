@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -28,21 +30,21 @@ class BpeSpec extends AnyFunSuite {
 
   test("training learns the planted most-frequent pair first, deterministically") {
     val counts = Seq(("abab", 10L), ("ab", 5L), ("cd", 3L))
-    val merges = Bpe.trainFromCounts(counts, nMerges = 3)
+    val merges = Bpe.trainFromCountsIncremental(counts, nMerges = 3)._1
     // (a,b) dominates (25 occurrences); then (ab,ab) in the 10 "abab"s;
     // then (c,d) with 3
     assert(merges.map(m => (m.lhs, m.rhs)) ==
       Seq(("a", "b"), ("ab", "ab"), ("c", "d")))
     assert(merges.map(_.merge_rank) == Seq(0L, 1L, 2L))
     // deterministic: retraining is bit-identical
-    assert(Bpe.trainFromCounts(counts, 3) == merges)
+    assert(Bpe.trainFromCountsIncremental(counts, 3)._1 == merges)
   }
 
   test("training stops when no pair occurs twice; ties break lexicographically") {
     // every pair occurs exactly once -> nothing to learn
-    assert(Bpe.trainFromCounts(Seq(("abcd", 1L)), 10).isEmpty)
+    assert(Bpe.trainFromCountsIncremental(Seq(("abcd", 1L)), 10)._1.isEmpty)
     // (x,y) and (p,q) both occur twice -> smallest (lhs, rhs) wins first
-    val m = Bpe.trainFromCounts(Seq(("xy", 2L), ("pq", 2L)), 1)
+    val m = Bpe.trainFromCountsIncremental(Seq(("xy", 2L), ("pq", 2L)), 1)._1
     assert(m.map(x => (x.lhs, x.rhs)) == Seq(("p", "q")))
   }
 
@@ -125,7 +127,7 @@ class BpeSpec extends AnyFunSuite {
     val enc = new Bpe.Encoder(IndexedSeq.empty)
     assert(enc.wordTokens("héllo") == 5)
     assert(enc.wordTokens("a😀b") == 3) // emoji = ONE symbol
-    val learned = Bpe.trainFromCounts(Seq(("😀😀", 5L)), 1)
+    val learned = Bpe.trainFromCountsIncremental(Seq(("😀😀", 5L)), 1)._1
     assert(learned.head.lhs == "😀" && learned.head.rhs == "😀")
   }
 
@@ -150,6 +152,52 @@ class BpeSpec extends AnyFunSuite {
     }.distinct
   }
 
+  /** The NAIVE O(nMerges × Σ|word|) recount trainer: every round
+    * re-tallies EVERY adjacent position of every word into a fresh map, so
+    * updates ≈ nMerges × (total adjacent positions). Same selection rule as
+    * `Bpe.trainFromCountsIncremental`, so the two are bit-identical — the
+    * differential baseline for it. */
+  private def trainFromCountsNaive(wordCounts: Seq[(String, Long)],
+      nMerges: Int): (IndexedSeq[Bpe.Merge], Bpe.TrainStats) = {
+    require(nMerges >= 0, s"nMerges must be >= 0, got $nMerges")
+    val words = wordCounts.iterator
+      .filter(_._1.nonEmpty)
+      .map { case (wd, c) => (Bpe.symbols(wd), c) }
+      .toArray
+    val out = IndexedSeq.newBuilder[Bpe.Merge]
+    var rank = 0L
+    var updates = 0L
+    var exhausted = false
+    while (rank < nMerges && !exhausted) {
+      val pairCounts = mutable.HashMap.empty[(String, String), Long]
+      for ((syms, c) <- words) {
+        var i = 0
+        while (i + 1 < syms.length) {
+          val k = (syms(i), syms(i + 1))
+          pairCounts.update(k, pairCounts.getOrElse(k, 0L) + c)
+          updates += 1
+          i += 1
+        }
+      }
+      var best: (String, String) = null
+      var bestC = 1L // demand count >= 2
+      for ((k, c) <- pairCounts) {
+        if (c > bestC || (c == bestC && best != null &&
+            (k._1 < best._1 || (k._1 == best._1 && k._2 < best._2)))) {
+          best = k
+          bestC = c
+        }
+      }
+      if (best == null) exhausted = true
+      else {
+        for ((syms, _) <- words) Bpe.applyMerge(syms, best._1, best._2)
+        out += Bpe.Merge(rank, best._1, best._2)
+        rank += 1
+      }
+    }
+    (out.result(), Bpe.TrainStats(rank.toInt, updates))
+  }
+
   test("incremental trainer is bit-identical to naive on randomized corpora") {
     val rnd = new scala.util.Random(1905)
     for (trial <- 0 until 15) {
@@ -159,7 +207,7 @@ class BpeSpec extends AnyFunSuite {
         (w, 1L + rnd.nextInt(20).toLong)
       }
       val n = rnd.nextInt(60)
-      val (naive, _) = Bpe.trainFromCountsNaive(corpus, n)
+      val (naive, _) = trainFromCountsNaive(corpus, n)
       val (inc, _) = Bpe.trainFromCountsIncremental(corpus, n)
       assert(inc == naive, s"trial $trial nMerges=$n")
     }
@@ -172,7 +220,7 @@ class BpeSpec extends AnyFunSuite {
     val (inc, sInc) = Bpe.trainFromCountsIncremental(corpus, 2000)
     val tInc = (System.nanoTime() - t0) / 1e9
     val t1 = System.nanoTime()
-    val (naive, sNaive) = Bpe.trainFromCountsNaive(corpus, 2000)
+    val (naive, sNaive) = trainFromCountsNaive(corpus, 2000)
     val tNaive = (System.nanoTime() - t1) / 1e9
     assert(inc == naive, "merge tables diverged")
     assert(inc.length == 2000,
@@ -189,8 +237,8 @@ class BpeSpec extends AnyFunSuite {
     import spark.implicits._
     val docs = Seq((1L, "abab ab cd"), (2L, "cd cd"), (3L, ""),
       (4L, null.asInstanceOf[String])).toDF("doc_id", "text")
-    val merges = Bpe.trainFromCounts(
-      Seq(("abab", 10L), ("ab", 5L), ("cd", 3L)), 3)
+    val merges = Bpe.trainFromCountsIncremental(
+      Seq(("abab", 10L), ("ab", 5L), ("cd", 3L)), 3)._1
     val enc = new Bpe.Encoder(merges)
     val v = Bpe.vocab(docs, "doc_id", col("text"), enc)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap

@@ -87,42 +87,6 @@ class PqSpec extends AnyFunSuite {
     }
   }
 
-  test("IVF x PQ composition: on clustered data, probing a fraction of " +
-    "cells keeps recall while scanning only the probed cells' codes") {
-    import spark.implicits._
-    // 16 well-separated clusters in 32-d: coarse structure IVF can exploit
-    val rnd = new scala.util.Random(5)
-    val centers = Array.fill(16)(Array.fill(32)(rnd.nextGaussian() * 10))
-    val vecs = (0L until 400L).map { i =>
-      val c = centers((i % 16).toInt)
-      (i, c.map(_ + rnd.nextGaussian() * 0.5).toSeq)
-    }
-    val df = vecs.toDF("vec_id", "embedding").repartition(6)
-    val queries = df.filter(col("vec_id") < 4)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val ivf = Ivf.fit(df, "vec_id", "embedding", k = 16, sampleSize = 400)
-    val pq = Pq.fit(df, "vec_id", "embedding", m = 8, ksub = 16,
-      sampleSize = 400)
-    val got = topMap(Pq.ivfPqTopK(df, "vec_id", "embedding",
-      queries, "qid", "qv", 10, pq, ivf, probes = 4, r = 64))
-    val brute = topMap(Similarity.bruteForceTopK(df, "vec_id", "embedding",
-      queries, "qid", "qv", 10))
-    val recalls = brute.map { case (q, ids) =>
-      got.getOrElse(q, Seq.empty).toSet.intersect(ids.toSet).size / 10.0
-    }
-    val recall = recalls.sum / recalls.size
-    assert(recall >= 0.9, s"clustered recall@10 $recall")
-    // the index carries the coarse cell: every probed query scanned only
-    // its probe cells (structural check on the encodeWithCells output)
-    val cells = Pq.encodeWithCells(df, "vec_id", "embedding", pq, ivf)
-    assert(cells.select("cell").distinct().count() > 1)
-    assert(cells.count() == 400)
-    cells.collect().foreach { row =>
-      assert(row.getAs[Array[Byte]]("code").length == 8)
-      assert(row.getInt(1) >= 0 && row.getInt(1) < 16)
-    }
-  }
-
   test("contract violations fail loudly") {
     import spark.implicits._
     val df = randVecs(20, 10, seed = 4).toDF("vec_id", "embedding")
