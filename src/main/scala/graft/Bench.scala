@@ -267,7 +267,7 @@ object Bench {
     import org.apache.spark.sql.streaming.OutputMode
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val rows = spark.read.parquet(s"$sfDir/events.parquet")
+    val rows = SparkEntry.load(spark, sfDir, "events")
       .select(col("user_id").cast("long"), col("event_id").cast("long"),
         col("event_type"), col("ts").cast("timestamp"))
       .collect()
@@ -402,7 +402,7 @@ object Bench {
     import org.apache.spark.sql.functions.col
     val recallEmb = try {
       val corpus = SparkEntry.withPlantedEmbDups(
-        spark.read.parquet(s"$sfDir/embeddings.parquet")
+        SparkEntry.load(spark, sfDir, "embeddings")
           .select(col("vec_id"), col("embedding")))
       val v = corpus.select(col("vec_id").cast("long").as("id"),
         col("embedding").cast("array<double>").as("v"))

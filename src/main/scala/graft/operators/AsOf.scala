@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.RowOrdering
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
@@ -18,9 +19,13 @@ import org.apache.spark.sql.types._
   * (bounded, partitioned — never a global window), linear in
   * |left| + |right|.
   *
-  * Precondition for deterministic output: the right side must be unique
-  * per (key, ts) — pre-aggregate ties (e.g. keep max id) or the carried
-  * match among equal-ts right rows is plan-dependent. Left-outer
+  * Ties: among right rows of one key at the same ts, the match is the
+  * greatest right row (whole-row struct order, nulls first), on both
+  * paths — so a caller that wants "max id per (key, ts)" passes the raw
+  * rows with the id first among the columns whose values can differ, and
+  * needs no pre-aggregation. For a right row type Spark cannot order (one
+  * holding a map column) the right side must be unique per (key, ts), or
+  * the match among equal-ts right rows is plan-dependent. Left-outer
   * semantics: left rows with no prior right row get a null match struct.
   *
   * Cells are chosen from the size of the inputs ([[asofJoin]] is the only
@@ -45,7 +50,7 @@ object AsOf {
     * input carrying one (or a left input carrying the output column
     * `asof`) is rejected at any input size, so whether a call is accepted
     * never depends on which path its input size picks. */
-  private val Reserved = Seq("_k", "_t", "_tag", "_r", "_l", "_b", "_vb", "_in", "_cin")
+  private val Reserved = Seq("_k", "_t", "_tag", "_r", "_l", "_b", "_vb", "_cin")
 
   /** Rejects reserved column names and ts columns the time split cannot
     * cut into cells (see [[Reserved]]). */
@@ -80,7 +85,9 @@ object AsOf {
   private[operators] def splitsByTime(left: DataFrame, right: DataFrame): Boolean = {
     val budget = left.sparkSession.sessionState.conf
       .getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
-    def estimate(df: DataFrame): BigInt = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    // the analyzed plan exists once the DataFrame does; asking the
+    // optimized plan would optimize each input once more than the query
+    def estimate(df: DataFrame): BigInt = df.queryExecution.analyzed.stats.sizeInBytes
     estimate(left) + estimate(right) > BigInt(budget)
   }
 
@@ -122,14 +129,21 @@ object AsOf {
     (r, l)
   }
 
+  /** `_r` itself as the last sort key, when Spark can order the right row
+    * type: equal-ts right rows then settle on the greatest row (see the
+    * object doc). Empty for a type it cannot order (a map column). */
+  private def tieBreak(rows: DataFrame): Seq[Column] =
+    if (RowOrdering.isOrderable(rows.schema("_r").dataType)) Seq(col("_r")) else Nil
+
   /** The union-window both paths run: over `rows` in the [[tagged]]
     * layout, each left row's `asof` is the latest non-null `_r` at or
-    * before it within its partition of `cells`. Ordered by (`_t`, `_tag`):
-    * right (tag 0) sorts before left (tag 1) at equal ts, which is the
-    * inclusive bound, and a null `_t` sorts first. Returns the left rows. */
+    * before it within its partition of `cells`. Ordered by (`_t`, `_tag`)
+    * and then [[tieBreak]]: right (tag 0) sorts before left (tag 1) at
+    * equal ts, which is the inclusive bound, a null `_t` sorts first, and
+    * the greatest of equal-ts right rows is carried. Returns the left rows. */
   private def lastRightAtOrBefore(rows: DataFrame, cells: Column*): DataFrame = {
     val w = Window.partitionBy(cells: _*)
-      .orderBy(col("_t"), col("_tag"))
+      .orderBy(Seq(col("_t"), col("_tag")) ++ tieBreak(rows): _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     rows
       .withColumn("asof", last(col("_r"), ignoreNulls = true).over(w))
@@ -137,13 +151,20 @@ object AsOf {
   }
 
   /** The single-window body of [[asofJoin]]: one shuffle on the key, and
-    * a key's whole history in one window partition. */
+    * a key's whole history in one window partition. The key column is
+    * output as the window's own `_k` (cast back to the left key's type, a
+    * no-op the optimizer drops when the types agree), so the window's hash
+    * partitioning on it survives: a `groupBy(key)` above needs no
+    * exchange. */
   private def perKeyWindow(left: DataFrame, right: DataFrame,
       key: String, leftTs: String, rightTs: String): DataFrame = {
     val (r, l) = tagged(left, right, key, leftTs, rightTs)
     val all = r.withColumn("_l",
       lit(null).cast(l.schema("_l").dataType)).unionByName(l)
-    lastRightAtOrBefore(all, col("_k")).select(col("_l.*"), col("asof"))
+    val keyType = left.schema(key).dataType
+    lastRightAtOrBefore(all, col("_k")).select(left.columns.toIndexedSeq.map(c =>
+      if (c == key) col("_k").cast(keyType).as(key) else col("_l").getField(c).as(c)) :+
+      col("asof"): _*)
   }
 
   /** The split body of [[asofJoin]]. Identical contract and output, but NO
@@ -154,7 +175,8 @@ object AsOf {
     *
     * Two phases (the GapAudit boundary-fixup pattern):
     *  1. per (key, cell): the cell's CLOSING right payload
-    *     (`max_by(payload, ts)`), then a per-key running `last` over the
+    *     (`max_by(payload, (ts, payload))`, the same tie rule as the
+    *     window), then a per-key running `last` over the
     *     cell SUMMARIES (≤ #cells rows per key, never row-scaled) gives
     *     each left cell its carry-in state — the latest closing state of
     *     any strictly earlier cell;
@@ -186,7 +208,7 @@ object AsOf {
     // equal visibility, so it is admitted); the window runs over cell
     // summaries only — per-key cardinality is #cells, not #rows.
     val closing = r.groupBy(col("_k"), col("_b"))
-      .agg(max_by(col("_r"), col("_t")).as("_cin"))
+      .agg(max_by(col("_r"), struct(col("_t") +: tieBreak(r): _*)).as("_cin"))
     val leftCells = lOk.select(col("_k"), col("_b")).distinct()
     val carrySrc = closing
       .select(col("_k"), (col("_b") + 1).as("_vb"), lit(0).as("_tag"), col("_cin"))

@@ -114,12 +114,10 @@ object R06Probe {
       t("q63 full (warm1)")(graft.SparkEntry.queries("q63_funnel_asof")(spark, sfDir))
       t("q63 full (warm2)")(graft.SparkEntry.queries("q63_funnel_asof")(spark, sfDir))
       t("q56 full (warm)")(graft.SparkEntry.queries("q56_asof_join")(spark, sfDir))
-      val e = spark.read.parquet(s"$sfDir/events.parquet")
+      val e = graft.SparkEntry.load(spark, sfDir, "events")
       def leg(kind: String, ts: String, id: String) =
         e.filter(col("event_type") === kind)
-          .groupBy(col("user_id"), col("ts"))
-          .agg(max(col("event_id")).as(id))
-          .select(col("user_id"), col("ts").as(ts), col(id))
+          .select(col("user_id"), col("ts").as(ts), col("event_id").as(id))
       val purchases = e.filter(col("event_type") === "purchase")
         .select(col("user_id"), col("event_id").as("purchase_id"),
           col("ts").as("p_ts"))

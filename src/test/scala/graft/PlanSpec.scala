@@ -148,6 +148,68 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  private val EventQueries = Seq("q56_asof_join", "q63_funnel_asof", "q58_range_join")
+
+  test("building q56/q63/q58 starts no Spark job once their table is loaded") {
+    // the parquet schema is inferred once per session and table; the
+    // as-of size estimate reads plan statistics
+    EventQueries.foreach(SparkEntry.queries(_)(spark, sf))
+    val group = "plan-spec-build"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "build the event queries")
+    try {
+      EventQueries.foreach(SparkEntry.queries(_)(spark, sf))
+      org.apache.spark.ListenerBusDrain(sc)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(jobs.get == 0, s"building the event queries started ${jobs.get} jobs")
+  }
+
+  test("q56/q63: no aggregate below an as-of window (ties settle in the window)") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Window => LWindow}
+    Seq("q56_asof_join", "q63_funnel_asof").foreach { name =>
+      val plan = SparkEntry.queries(name)(spark, sf).queryExecution.optimizedPlan
+      val wins = plan.collect { case w: LWindow => w }
+      assert(wins.nonEmpty, s"$name lost its windows")
+      wins.foreach { w =>
+        val aggs = w.child.collect { case a: Aggregate => a }
+        assert(aggs.isEmpty, s"$name aggregates below a window: ${aggs.headOption}")
+      }
+    }
+  }
+
+  test("q63: the final per-user aggregate rides the second window's partitioning") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.window.WindowExec
+    val root = SparkEntry.queries("q63_funnel_asof")(spark, sf).queryExecution
+      .executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.inputPlan
+        case p => p
+      }
+    // every node between the root and the first window below it
+    def above(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: WindowExec => Nil
+      case _ => p +: p.children.flatMap(above)
+    }
+    val path = above(root)
+    assert(root.collect { case w: WindowExec => w }.size == 2, root)
+    assert(path.exists(_.isInstanceOf[HashAggregateExec]), root)
+    assert(!path.exists(_.isInstanceOf[ShuffleExchangeLike]),
+      s"an exchange sits between q63's second window and its aggregate:\n$root")
+  }
+
   test("q65 paragraph dedup: partial-agg counts + anti-join, never a paragraph window") {
     // the hot boilerplate paragraph is exactly the key a
     // window-over-partitionBy(paragraph) would funnel into one task;

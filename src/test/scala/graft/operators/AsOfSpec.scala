@@ -74,10 +74,16 @@ class AsOfSpec extends AnyFunSuite {
       AsOf.asofJoin(l2, r, "k", "lts", "rts")
     }
     // reserved by the time split only; rejected on this small input too
-    val l3 = Seq((1L, 1L, 1L)).toDF("k", "lts", "_b")
-    intercept[IllegalArgumentException] {
-      AsOf.asofJoin(l3, r, "k", "lts", "rts")
+    for (name <- Seq("_b", "_cin")) {
+      val l3 = Seq((1L, 1L, 1L)).toDF("k", "lts", name)
+      intercept[IllegalArgumentException] {
+        AsOf.asofJoin(l3, r, "k", "lts", "rts")
+      }
     }
+    // no path of the operator uses `_in`: an input may carry it
+    val l4 = Seq((1L, 1L, 1L)).toDF("k", "lts", "_in")
+    assert(AsOf.asofJoin(l4, r, "k", "lts", "rts").select(col("_in"), col("asof.rid"))
+      .collect().map(row => (row.getLong(0), row.getLong(1))).toSeq == Seq((1L, 1L)))
   }
 
   test("per-key window only: no unpartitioned window in the plan") {
@@ -271,5 +277,49 @@ class AsOfSpec extends AnyFunSuite {
     val r = rights.toDF("k", "rts", "rid")
     assert(AsOf.splitsByTime(l, r))
     assert(asofRows(AsOf.asofJoin(l, r, "k", "lts", "rts")) == naive(lefts, rights))
+  }
+
+  test("equal-ts right rows: the greatest right row is the match, on both paths") {
+    import spark.implicits._
+    // few distinct ts per key, so most (key, ts) hold several right rows,
+    // also at the close of a cell (the split's closing state settles the
+    // same tie). Offsets are in 1/10 cell, so keys span ~5 cells.
+    val s = AsOf.CellWidth / 10
+    val rnd = new scala.util.Random(53)
+    val lefts = Seq.fill(300)((rnd.nextInt(4).toLong, rnd.nextInt(50).toLong * s,
+      rnd.nextLong()))
+    val rights = Seq.fill(400)((rnd.nextInt(4).toLong, rnd.nextInt(25).toLong * 2 * s,
+      rnd.nextInt(1000000).toLong))
+    assert(rights.groupBy(r => (r._1, r._2)).values.count(_.size > 1) > 20)
+    val byKey = rights.groupBy(_._1)
+    val expect = lefts.map { case (k, lt, lid) =>
+      (k, lt, lid, byKey.getOrElse(k, Nil).filter(_._2 <= lt)
+        .maxByOption(r => (r._2, r._3)).map(_._3))
+    }.sortBy(t => (t._1, t._2, t._3))
+    // greatest rid first: a window that kept arrival order among equal-ts
+    // rows would carry a smaller one
+    val r = rights.sortBy(-_._3).toDF("k", "rts", "rid")
+    val l = lefts.toDF("k", "lts", "lid").repartition(3)
+    val (plain, split) = bothPaths(l, r)(asofRows)
+    assert(plain == expect)
+    assert(split == expect)
+  }
+
+  test("a right row Spark cannot order (a map column) joins on both paths") {
+    import spark.implicits._
+    // unique per (key, ts): the precondition that stays for such rows
+    val lefts = Seq((1L, 100L, 1L), (1L, 20L, 2L), (2L, 5L, 3L), (2L, 60L, 4L))
+    val rights = Seq((1L, 50L, 10L), (1L, 10L, 11L), (2L, 9L, 12L), (2L, 60L, 13L))
+    val l = lefts.toDF("k", "lts", "lid")
+    val r = rights.map { case (k, t, id) => (k, t, id, Map("id" -> id)) }
+      .toDF("k", "rts", "rid", "m")
+    val (plain, split) = bothPaths(l, r)(df => asofRows(df) -> df
+      .select(col("lid"), col("asof.m").getItem("id")).collect()
+      .map(row => row.getLong(0) ->
+        (if (row.isNullAt(1)) None else Some(row.getLong(1)))).toMap)
+    val expect = naive(lefts, rights)
+    assert(plain._1 == expect && split._1 == expect)
+    assert(plain._2 == expect.map(t => t._3 -> t._4).toMap)
+    assert(split._2 == plain._2)
   }
 }
