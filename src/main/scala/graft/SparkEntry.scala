@@ -682,14 +682,14 @@ object SparkEntry {
       // unlike q41's probabilistic banding this returns EVERY pair with
       // J >= 0.7; the oracle re-verifies Jaccard over the materialized
       // candidate set exactly as for q41
-      // strategy picked from sampled df statistics (ngramStrategyFor): the
-      // bench documents table is a DENSE-vocabulary corpus (30k distinct
-      // shingles, mean df ~17 — nothing is rare), so the selector lands on
-      // the posting count-join (~6x over prefix+verify here); both
-      // strategies return identical rows (spec-checked) and the all-pairs
-      // oracle is strategy-independent
+      // the join picks its path from sampled df statistics: the bench
+      // documents table is a DENSE-vocabulary corpus (30k distinct
+      // shingles, mean df ~17 — nothing is rare), so it lands on the
+      // posting count-join (~6x over prefix+verify here); both paths
+      // return identical rows (spec-checked) and the all-pairs oracle is
+      // path-independent
       val base = load(s, dir, "documents").select(col("doc_id"), col("text"))
-      Dedup.ngramNearDupsAuto(withPlantedTextDups(base), "doc_id", "text",
+      Dedup.ngramNearDups(withPlantedTextDups(base), "doc_id", "text",
         threshold = 0.7)
         .withColumn("jaccard", round(col("jaccard"), 6))
     }),

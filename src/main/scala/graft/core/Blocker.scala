@@ -60,8 +60,6 @@ object Blocker {
     def lineStrings: Vector[(String, Int)] =
       lineBounds.iterator
         .map(l => (text.substring(lineStart(l), lineEnd(l)), lineStart(l))).toVector
-    def lineSpans: Vector[Span] =
-      lineBounds.iterator.map(l => Span(lineStart(l), lineEnd(l))).toVector
   }
 
   final case class ClassifiedBlock(block: Block, raw: RawBlock) {
@@ -131,8 +129,6 @@ object Blocker {
     }
     true
   }
-
-  def isSeparator(line: String): Boolean = isSeparatorRange(line, 0, line.length)
 
   /** Link-region chars in text[lo, hi) — hand scan with the exact semantics
     * of the regex `<[^>]*>|https?://[^\s<]+` applied per line

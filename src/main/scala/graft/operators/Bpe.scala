@@ -256,14 +256,6 @@ object Bpe {
     def wordTokens(w: String): Int =
       if (w.isEmpty) 0 else foldMerges(w).length
 
-    /** Token count of a whole text: whitespace words, summed. */
-    def textTokens(t: String): Long = {
-      if (t == null) return 0L
-      var n = 0L
-      for (w <- t.split("\\s+") if w.nonEmpty) n += wordTokens(w)
-      n
-    }
-
     /** The actual subword sequence of one word (same fold as
       * [[wordTokens]], returning the symbols instead of their count). */
     def wordSubwords(w: String): Array[String] =

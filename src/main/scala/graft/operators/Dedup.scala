@@ -22,6 +22,13 @@ import org.apache.spark.sql.functions._
   * the reference's dict-keyed first-wins insert
   * (/root/reference/src/diary/diary_data.py:33-49) generalized to *near*
   * duplicates.
+  *
+  * Physical paths are the operator's own choice, never the caller's: the
+  * exact n-gram join ([[ngramNearDups]]) picks prefix index or count-join
+  * from sampled df statistics and routes hot shingles itself, and
+  * [[nearDupClusters]] picks a local union-find or the distributed
+  * star loop by pair count. Neither takes a strategy, cap, sample or gate
+  * option.
   */
 object Dedup {
 
@@ -157,13 +164,31 @@ object Dedup {
       threshold, shingleK)
 
   /** Exact word-n-gram Jaccard between two text columns — the verification
-    * primitive exposed standalone (fused native expression; dedup happens
-    * inside ArrayJaccard). */
-  def ngramJaccard(textA: Column, textB: Column, k: Int = 3): Column =
+    * primitive as one Column (fused native expression; dedup happens inside
+    * ArrayJaccard). */
+  private[operators] def ngramJaccard(textA: Column, textB: Column, k: Int = 3): Column =
     coalesce(graft.functions.ArrayJaccard(
       TextStats.shinglesCol(textA, k), TextStats.shinglesCol(textB, k)), lit(0.0))
 
   // ---- n-gram Jaccard via prefix-filtered inverted index -------------------
+
+  /** (id, sz, shingle) postings via a typed one-pass kernel. NOT the Column
+    * size+explode form: projection collapse inlines the shingling chain
+    * under the Generate and re-evaluates it per exploded row — measured 13×
+    * slower at bench scale (explode of a projected shingle array: 5.45 s;
+    * the same explode over materialized arrays: 0.31 s). */
+  private def shinglePostings(
+      docs: DataFrame, idCol: String, textCol: String,
+      shingleK: Int): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    docs.select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
+      .as[(Long, String)]
+      .mapPartitions(_.flatMap { case (id, text) =>
+        val sh = HashCore.shingleStrings(text, shingleK)
+        sh.iterator.map(s => (id, sh.length, s))
+      }).toDF("id", "sz", "shingle")
+  }
 
   /** Prefix-filtered inverted-index candidate pairs for exact n-gram-Jaccard
     * join, UNVERIFIED — the third candidate-generation family next to
@@ -190,29 +215,9 @@ object Dedup {
     * the posting self-join on short lists. Size filter t*max ≤ min prunes
     * before dedup. Same mass-duplicate precondition as
     * minhashCandidates: collapse exact duplicates first. */
-  /** (id, sz, shingle) postings via a typed one-pass kernel. NOT the Column
-    * size+explode form: projection collapse inlines the shingling chain
-    * under the Generate and re-evaluates it per exploded row — measured 13×
-    * slower at bench scale (explode of a projected shingle array: 5.45 s;
-    * the same explode over materialized arrays: 0.31 s). */
-  private def shinglePostings(
-      docs: DataFrame, idCol: String, textCol: String,
-      shingleK: Int): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
-      .as[(Long, String)]
-      .mapPartitions(_.flatMap { case (id, text) =>
-        val sh = HashCore.shingleStrings(text, shingleK)
-        sh.iterator.map(s => (id, sh.length, s))
-      }).toDF("id", "sz", "shingle")
-  }
-
-  def ngramCandidates(
+  private[operators] def ngramCandidates(
       docs: DataFrame, idCol: String, textCol: String,
       threshold: Double, shingleK: Int = 3): DataFrame = {
-    require(threshold > 0.0 && threshold <= 1.0,
-      s"threshold must be in (0,1], got $threshold")
     import org.apache.spark.sql.expressions.Window
     // materialized ONCE: the posting table feeds the df aggregation AND the
     // join back AND (through `prefix`) both sides of the posting self-join —
@@ -258,6 +263,13 @@ object Dedup {
     greatest(col("sz_a"), col("sz_b")) * threshold - lit(FpEps) <=
       least(col("sz_a"), col("sz_b"))
 
+  /** Posting-list df above which [[ngramNearDupsByCount]] routes a shingle
+    * through the pairwise self-join instead of the grouped combination
+    * kernel: the kernel buffers one shingle's full (id, sz) posting list in
+    * aggregation state (≤ ~16 B × df), so the cap bounds that state at a
+    * few MB while hot shingles keep the join's graceful spill behavior. */
+  private[operators] val CountJoinHotDf: Long = 1L << 18
+
   /** Exact n-gram Jaccard join, count-join strategy: self-join the FULL
     * posting lists on shingle, partial-aggregate |a∩b| per pair, and compute
     * J = c / (|a| + |b| - c) directly — the inclusion–exclusion form. No
@@ -274,20 +286,12 @@ object Dedup {
     * median df 17): count-join ~6× faster than prefix+verify; on a planted
     * web-like corpus the ordering flips. The two strategies are the same
     * logical operator — pick by corpus df statistics, the engine's analog
-    * of Spark's broadcast-vs-sort-merge join choice. */
-  /** Posting-list df above which [[ngramNearDupsByCount]] routes a shingle
-    * through the pairwise self-join instead of the grouped combination
-    * kernel: the kernel buffers one shingle's full (id, sz) posting list in
-    * aggregation state (≤ ~16 B × df), so the cap bounds that state at a
-    * few MB while hot shingles keep the join's graceful spill behavior. */
-  val CountJoinHotDf: Long = 1L << 18
-
-  def ngramNearDupsByCount(
+    * of Spark's broadcast-vs-sort-merge join choice, made by
+    * [[ngramNearDups]]. */
+  private[operators] def ngramNearDupsByCount(
       docs: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.8, shingleK: Int = 3,
       hotDfCap: Long = CountJoinHotDf): DataFrame = {
-    require(threshold > 0.0 && threshold <= 1.0,
-      s"threshold must be in (0,1], got $threshold")
     require(hotDfCap >= 1, s"hotDfCap must be >= 1, got $hotDfCap")
     val spark = docs.sparkSession
     import spark.implicits._
@@ -386,7 +390,11 @@ object Dedup {
   /** Characters of each sampled document `ngramStrategyFor` reads: far
     * above a typical document (the bench corpora top out under 600), so
     * only outliers are cut. */
-  val StrategySampleChars = 4096
+  private[operators] val StrategySampleChars = 4096
+
+  /** Sampled mean shingle df at or below which [[ngramStrategyFor]] picks
+    * the prefix path. */
+  private val MeanDfCutoff = 3.0
 
   /** Statistics-based physical-strategy pick for the n-gram join — the
     * engine-side analog of Spark's size-statistics join selection: instead
@@ -407,10 +415,9 @@ object Dedup {
     * in the plan, so the collect is bounded in bytes as well as rows: at
     * most `sampleDocs` × 4 × `StrategySampleChars` bytes of UTF-8 text,
     * however long the documents are. */
-  def ngramStrategyFor(
+  private[operators] def ngramStrategyFor(
       docs: DataFrame, idCol: String, textCol: String,
-      shingleK: Int = 3, sampleDocs: Int = 2048,
-      meanDfCutoff: Double = 3.0): String = {
+      shingleK: Int = 3, sampleDocs: Int = 2048): String = {
     val base = docs.select(col(idCol).cast("long").as("id"),
       substring(col(textCol), 1, StrategySampleChars).as("text"))
     // the sample is bounded by construction (sampleDocs rows), so the df
@@ -429,41 +436,42 @@ object Dedup {
       postings += sh.length
       sh.foreach(distinct.add)
     }
-    if (distinct.isEmpty || postings.toDouble / distinct.size <= meanDfCutoff)
+    if (distinct.isEmpty || postings.toDouble / distinct.size <= MeanDfCutoff)
       "prefix"
     else "count"
   }
 
-  /** n-gram near-dup join with the physical strategy chosen from sampled
-    * corpus statistics (ngramStrategyFor). */
-  def ngramNearDupsAuto(
-      docs: DataFrame, idCol: String, textCol: String,
-      threshold: Double = 0.8, shingleK: Int = 3): DataFrame =
-    ngramNearDups(docs, idCol, textCol, threshold, shingleK,
-      strategy = ngramStrategyFor(docs, idCol, textCol, shingleK))
-
   /** Exact n-gram Jaccard near-dup join — deterministic AND complete: every
     * pair with word-shingle Jaccard ≥ threshold is returned, none missed
-    * (unlike minhashNearDups). Two physical strategies for the one logical
-    * result: `"prefix"` (prefix-filtered candidates + array verify — the
-    * Zipfian/web-corpus plan) and `"count"` (posting count-join — the
-    * dense-vocabulary plan; see ngramNearDupsByCount for the regime
-    * analysis); `ngramNearDupsAuto` picks by sampled df statistics.
-    * Returns (id_a, id_b, jaccard), id_a < id_b. */
+    * (unlike minhashNearDups). Returns (id_a, id_b, jaccard), id_a < id_b.
+    *
+    * The join picks its physical path itself from a bounded sample of the
+    * corpus ([[ngramStrategyFor]]): a sampled mean shingle df at or below
+    * 3 (a Zipfian/web corpus, with rare shingles to index) takes the
+    * prefix-filtered inverted index + exact verify; a denser vocabulary
+    * takes the posting count-join, which routes hot shingles through a
+    * spill-safe self-join on its own (see [[ngramNearDupsByCount]]). Both
+    * paths return the same rows. No option picks the path, caps hot
+    * shingles or sizes the sample: `threshold` and `shingleK` are the only
+    * parameters. */
   def ngramNearDups(
       docs: DataFrame, idCol: String, textCol: String,
-      threshold: Double = 0.8, shingleK: Int = 3,
-      strategy: String = "prefix"): DataFrame = strategy match {
-    case "prefix" =>
-      verifyJaccard(docs, idCol, textCol,
-        ngramCandidates(docs, idCol, textCol, threshold, shingleK),
-        threshold, shingleK)
-    case "count" =>
+      threshold: Double = 0.8, shingleK: Int = 3): DataFrame = {
+    require(threshold > 0.0 && threshold <= 1.0,
+      s"threshold must be in (0,1], got $threshold")
+    if (ngramStrategyFor(docs, idCol, textCol, shingleK) == "count")
       ngramNearDupsByCount(docs, idCol, textCol, threshold, shingleK)
-    case other =>
-      throw new IllegalArgumentException(
-        s"unknown ngram join strategy '$other' (expected 'prefix' or 'count')")
+    else ngramNearDupsByPrefix(docs, idCol, textCol, threshold, shingleK)
   }
+
+  /** The prefix path of [[ngramNearDups]]: prefix-filtered candidates
+    * ([[ngramCandidates]]) + exact Jaccard verify. */
+  private[operators] def ngramNearDupsByPrefix(
+      docs: DataFrame, idCol: String, textCol: String,
+      threshold: Double, shingleK: Int = 3): DataFrame =
+    verifyJaccard(docs, idCol, textCol,
+      ngramCandidates(docs, idCol, textCol, threshold, shingleK),
+      threshold, shingleK)
 
   // ---- SimHash -------------------------------------------------------------
 
@@ -534,19 +542,27 @@ object Dedup {
     * is (member, component-min). Adversarial template-drift chains (the
     * web-corpus case that defeats diameter-bound propagation) converge in
     * ~log₂(n) rounds instead of n; the loop still runs to a fixed point and
-    * THROWS if `maxRounds` is hit (silent non-convergence would leave
-    * duplicate keepers). Each round shuffles only the PAIR set — the corpus
-    * is never re-shuffled — and localCheckpoints to truncate lineage.
+    * THROWS if it takes more than `MaxStarRounds` (silent non-convergence
+    * would leave duplicate keepers). Each round shuffles only the PAIR set —
+    * the corpus is never re-shuffled — and localCheckpoints to truncate
+    * lineage. A pair set of at most 2^20 rows skips the loop for a
+    * union-find over the collected pairs, with the same labels (see
+    * [[nearDupClustersWithRounds]]); no option picks the path or the round
+    * budget.
     * Returns (id, cluster_id = min doc id of the component). */
-  def nearDupClusters(pairs: DataFrame, maxRounds: Int = 50): DataFrame =
-    nearDupClustersWithRounds(pairs, maxRounds)._1
+  def nearDupClusters(pairs: DataFrame): DataFrame =
+    nearDupClustersWithRounds(pairs)._1
+
+  /** Round budget of the star loop: at the spec-asserted 2·log₂(n) rounds
+    * it covers a 2^25-node chain. */
+  private val MaxStarRounds = 50
 
   /** Pair-count gate for the driver-local union-find finish of
     * [[nearDupClustersWithRounds]]: 2^20 pairs ≈ 16 MB collected — the same
     * budget class as a broadcast relation, far under the driver's
     * maxResultSize. Above the gate the distributed log-round loop runs
     * unchanged. */
-  val LocalSolveMaxPairs: Long = 1L << 20
+  private[operators] val LocalSolveMaxPairs: Long = 1L << 20
 
   /** [[nearDupClusters]] plus the number of (large-star, small-star) rounds
     * it took to reach the fixed point — asserted logarithmic by spec.
@@ -565,8 +581,8 @@ object Dedup {
     * collect is BOUNDED BY THE GATE, and a pair set above the gate takes
     * the unchanged O(log n) large/small-star path — differential-locked
     * against it in OperatorsSpec. Pass 0 to force the distributed loop. */
-  def nearDupClustersWithRounds(
-      pairs: DataFrame, maxRounds: Int = 50,
+  private[operators] def nearDupClustersWithRounds(
+      pairs: DataFrame, maxRounds: Int = MaxStarRounds,
       localSolveMaxPairs: Long = LocalSolveMaxPairs): (DataFrame, Int) = {
     val spark = pairs.sparkSession
     // Materialize the INPUT once and derive nodes + edges from it: two
@@ -674,7 +690,7 @@ object Dedup {
     if (!converged)
       throw new IllegalStateException(
         s"nearDupClusters did not converge within $maxRounds " +
-          "large/small-star rounds — raise maxRounds")
+          "large/small-star rounds")
     // fixed point: every edge is (member, component-min); centers label
     // themselves
     val labels = nodes

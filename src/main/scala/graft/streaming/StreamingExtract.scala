@@ -22,46 +22,14 @@ final case class ConvAssembly(conv_id: String, prose_turns: Long,
   * The reference is a resumable batch pipeline with NO streaming (SURVEY
   * §2.9) — this is additive capability, not a port: a transcript turn
   * stream (`readStream` on the same input_hint schema) flows through the
-  * identical per-turn extraction core (stateless per turn, so it is
-  * trivially streamable), plus a watermarked per-conversation windowed
+  * batch extraction itself — `ExtractPipeline.modules` / `errors` over
+  * `ExtractPipeline.extract(stream, ctx)`, stateless per turn, so it is
+  * trivially streamable — plus a watermarked per-conversation windowed
   * aggregate for the metrics channel. Resume in streaming mode is the
   * engine's checkpointing (`checkpointLocation`), the streaming twin of the
   * batch manifest (ResumableExtract).
   */
 object StreamingExtract {
-
-  /** Stateless per-turn extraction over a streaming Dataset[Turn]:
-    * same core, same outputs, append-mode safe. */
-  def extractStream(turns: Dataset[Turn], ctx: ModuleParser.Context): Dataset[ExtractedModule] = {
-    val spark = turns.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(ctx)
-    turns
-      .select(col("conv_id"), col("turn_idx"), col("text"))
-      .as[(String, Int, String)]
-      .mapPartitions { it =>
-        val c = bc.value
-        it.flatMap { case (conv, idx, text) =>
-          Extractor.extract(conv, idx, text, c).modules
-        }
-      }
-  }
-
-  /** Dead-letter stream (same error channel as batch). */
-  def errorStream(turns: Dataset[Turn], ctx: ModuleParser.Context): Dataset[ExtractionError] = {
-    val spark = turns.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(ctx)
-    turns
-      .select(col("conv_id"), col("turn_idx"), col("text"))
-      .as[(String, Int, String)]
-      .mapPartitions { it =>
-        val c = bc.value
-        it.flatMap { case (conv, idx, text) =>
-          Extractor.extract(conv, idx, text, c).errors
-        }
-      }
-  }
 
   /** Streaming first-wins entity dedup — the stateful-streaming twin of the
     * reference's `add_register` (insert iff key absent,

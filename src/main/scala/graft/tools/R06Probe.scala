@@ -59,24 +59,10 @@ object R06Probe {
       jobDesc("q57 stages")
       t("q57 full (warm1)")(graft.SparkEntry.queries("q57_dedup_ngram_jaccard")(spark, sfDir))
       t("q57 full (warm2)")(graft.SparkEntry.queries("q57_dedup_ngram_jaccard")(spark, sfDir))
-      val t0 = System.nanoTime()
-      val strat = Dedup.ngramStrategyFor(planted, "doc_id", "text")
-      println(f"[r06probe] q57.strategyFor ($strat) ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-      t("q57.byCount only")(
-        Dedup.ngramNearDupsByCount(planted, "doc_id", "text", 0.7))
+      t("q57.ngramNearDups only")(
+        Dedup.ngramNearDups(planted, "doc_id", "text", 0.7))
       val spark3 = spark
       import spark3.implicits._
-      t("q57.prefix+verify (typed verify)")(
-        Dedup.ngramNearDups(planted, "doc_id", "text", 0.7, strategy = "prefix"))
-      // the production grouped-combination kernel, forced all-cold (one
-      // shared implementation — a probe-local copy would drift from the
-      // shipped path and stop measuring it)
-      t("q57.byCount grouped-combos (C)")(
-        Dedup.ngramNearDupsByCount(planted, "doc_id", "text", 0.7,
-          hotDfCap = Long.MaxValue))
-      t("q57.byCount grouped-combos run2")(
-        Dedup.ngramNearDupsByCount(planted, "doc_id", "text", 0.7,
-          hotDfCap = Long.MaxValue))
       t("q57.postings pass only")(
         planted.select(col("doc_id").cast("long").as("id"), col("text"))
           .as[(Long, String)]
@@ -99,9 +85,9 @@ object R06Probe {
         .localCheckpoint()
       println(s"[r06probe] q49.pairs count = ${pairs.count()}")
       val t2 = System.nanoTime()
-      val (labels, rounds) = Dedup.nearDupClustersWithRounds(pairs)
+      val labels = Dedup.nearDupClusters(pairs)
       labels.write.format("noop").mode("overwrite").save()
-      println(f"[r06probe] q49.clusters (rounds=$rounds) ${(System.nanoTime() - t2) / 1e9}%7.2f s")
+      println(f"[r06probe] q49.clusters ${(System.nanoTime() - t2) / 1e9}%7.2f s")
       val losers = labels.filter(col("cluster_id") =!= col("id")).select(col("id"))
       t("q49.final anti-join + agg")(
         exact.join(losers.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left_anti")

@@ -137,7 +137,7 @@ class DedupSpec extends AnyFunSuite {
   test("ngram prefix-filter join is exact-complete: equals all-pairs Jaccard") {
     val docs = planted(corpus(25))
     val t = 0.6
-    val got = Dedup.ngramNearDups(docs, "doc_id", "text", threshold = t)
+    val got = Dedup.ngramNearDupsByPrefix(docs, "doc_id", "text", t)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .sortBy(p => (p._1, p._2))
     val texts = docs.collect().map(r => r.getLong(0) -> r.getString(1))
@@ -153,8 +153,7 @@ class DedupSpec extends AnyFunSuite {
     assert(expect.nonEmpty)
     got.zip(expect).foreach { case (g, e) => assert(math.abs(g._3 - e._3) < 1e-9) }
     // the count-join physical strategy returns the identical logical result
-    val gotCount = Dedup.ngramNearDups(docs, "doc_id", "text", threshold = t,
-      strategy = "count")
+    val gotCount = Dedup.ngramNearDupsByCount(docs, "doc_id", "text", t)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .sortBy(p => (p._1, p._2))
     assert(gotCount.toSeq == got.toSeq)
@@ -197,9 +196,11 @@ class DedupSpec extends AnyFunSuite {
     val w = (1 to 12).map(i => s"w$i")
     val docs8 = Seq((1L, w.take(7).mkString(" ")), (2L, w.slice(1, 7).mkString(" ")))
       .toDF("doc_id", "text")
-    for (strategy <- Seq("prefix", "count")) {
-      val got = Dedup.ngramNearDups(docs8, "doc_id", "text", threshold = 0.8,
-        strategy = strategy).collect()
+    val bodies = Seq[(String, (DataFrame, Double) => DataFrame)](
+      "prefix" -> ((d, t) => Dedup.ngramNearDupsByPrefix(d, "doc_id", "text", t)),
+      "count" -> ((d, t) => Dedup.ngramNearDupsByCount(d, "doc_id", "text", t)))
+    for ((strategy, join) <- bodies) {
+      val got = join(docs8, 0.8).collect()
       assert(got.length == 1 && got(0).getDouble(2) == 0.8, s"t=0.8 $strategy")
     }
     // t=0.9, sizes (10,9), intersection 9 -> J = 9/10 = fl(0.9) exactly.
@@ -207,9 +208,8 @@ class DedupSpec extends AnyFunSuite {
     // t*max <= min falsely rejected the pair in BOTH strategies.
     val docs9 = Seq((1L, w.mkString(" ")), (2L, w.drop(1).mkString(" ")))
       .toDF("doc_id", "text")
-    for (strategy <- Seq("prefix", "count")) {
-      val got = Dedup.ngramNearDups(docs9, "doc_id", "text", threshold = 0.9,
-        strategy = strategy).collect()
+    for ((strategy, join) <- bodies) {
+      val got = join(docs9, 0.9).collect()
       assert(got.length == 1 && got(0).getDouble(2) == 0.9, s"t=0.9 $strategy")
     }
   }
@@ -245,13 +245,37 @@ class DedupSpec extends AnyFunSuite {
     assert(Dedup.ngramStrategyFor(uniqueBig, "doc_id", "text",
       sampleDocs = 128) == "prefix")
 
-    // the auto form returns the same rows as the explicit default strategy
+    // the public join runs the body the statistics pick: the count body
+    // has no window, the prefix body ranks each doc's shingles in one
+    // (inside a checkpoint, so every query the call runs is inspected)
+    def ranWindow(docs: DataFrame): Boolean = {
+      import org.apache.spark.sql.execution.QueryExecution
+      import org.apache.spark.sql.execution.window.WindowExec
+      val plans = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      val found = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+        override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+          if (plans.find(qe.executedPlan)(_.isInstanceOf[WindowExec]).isDefined)
+            found.set(true)
+        override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      try {
+        Dedup.ngramNearDups(docs, "doc_id", "text").collect()
+        org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      } finally spark.listenerManager.unregister(listener)
+      found.get
+    }
+    assert(!ranWindow(dense), "dense vocab ran a Window: not the count body")
+    assert(ranWindow(unique), "Zipfian-tailed corpus ran no Window: not the prefix body")
+
+    // whichever body it picks, the public join returns the prefix body's rows
     val base = planted(corpus(25))
-    val auto = Dedup.ngramNearDupsAuto(base, "doc_id", "text",
+    val picked = Dedup.ngramNearDups(base, "doc_id", "text",
       threshold = 0.6).collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    val explicit = Dedup.ngramNearDups(base, "doc_id", "text",
-      threshold = 0.6).collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    assert(auto == explicit)
+    val prefix = Dedup.ngramNearDupsByPrefix(base, "doc_id", "text",
+      0.6).collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    assert(picked == prefix)
   }
 
   test("ngramStrategyFor collects at most StrategySampleChars of each document") {

@@ -20,7 +20,7 @@ class StreamingExtractSpec extends AnyFunSuite {
     val turns = TranscriptGen.corpus(TranscriptGen.DefaultSeed, 5)
 
     val stream = MemoryStream[Turn]
-    val q = StreamingExtract.extractStream(stream.toDS(), ctx)
+    val q = ExtractPipeline.modules(ExtractPipeline.extract(stream.toDS(), ctx))
       .writeStream.format("memory").queryName("stream_modules")
       .outputMode(OutputMode.Append).start()
     try {
@@ -67,8 +67,8 @@ class StreamingExtractSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val turns = TranscriptGen.corpus(TranscriptGen.DefaultSeed, 3)
     val stream = MemoryStream[Turn]
-    val q = StreamingExtract.extractStream(
-      StreamingExtract.dedupTurnsStream(stream.toDS()), ctx)
+    val q = ExtractPipeline.modules(ExtractPipeline.extract(
+      StreamingExtract.dedupTurnsStream(stream.toDS()), ctx))
       .writeStream.format("memory").queryName("stream_dedup_modules")
       .outputMode(OutputMode.Append).start()
     try {
