@@ -403,6 +403,29 @@ object SparkEntry {
           col("asof.click_ts").as("click_ts"))
     }),
 
+    "q74_asof_ties" -> ((s, dir) => {
+      // q56 over clicks with planted ties: every click with event_id % 4 = 0
+      // gains two copies at its (user, ts), ids 1e9 above and below its
+      // own, so the oracle compare sees which tied click asofJoin keeps
+      val e = load(s, dir, "events")
+      val purchases = e.filter(col("event_type") === "purchase")
+        .select(col("user_id"), col("event_id").as("purchase_id"),
+          col("ts").as("purchase_ts"), col("value").as("purchase_value"))
+      val clicks = e.filter(col("event_type") === "click")
+        .select(col("user_id"), col("ts").as("click_ts"), col("event_id").as("click_id"))
+      val planted = clicks.filter(col("click_id") % 4 === 0)
+      val tied = clicks
+        .unionByName(planted.withColumn("click_id", col("click_id") + 1000000000L))
+        .unionByName(planted.withColumn("click_id", col("click_id") - 1000000000L))
+      graft.operators.AsOf.asofJoin(
+        purchases, tied, key = "user_id", leftTs = "purchase_ts",
+        rightTs = "click_ts")
+        .select(col("user_id"), col("purchase_id"), col("purchase_ts"),
+          col("purchase_value"),
+          col("asof.click_id").as("click_id"),
+          col("asof.click_ts").as("click_ts"))
+    }),
+
     "q63_funnel_asof" -> ((s, dir) => {
       // conversion funnel by CHAINED as-of joins: each purchase -> latest
       // prior click -> latest view prior to that click. The second hop's
@@ -749,7 +772,7 @@ object SparkEntry {
       // oracle re-ranks the materialized candidate set exactly (the shared
       // ANN contract); candidate recall is gated in the bench.
       // m=16/ksub=32/r=128 measured at recall@10 = 0.94 on the sf0.1
-      // bench corpus (tools/PqProbe sweep) — near-isotropic embeddings are
+      // bench corpus (round-5 parameter sweep) — near-isotropic embeddings are
       // PQ's worst case exactly as they are IVF's (q47's probes=7 note);
       // 16 bytes/vec is still a 32x cut vs the raw float64 vectors.
       val e = embCorpus(s, dir)
@@ -984,9 +1007,7 @@ object SparkEntry {
     load(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
 
-  // private[graft]: tools/PqProbe sweeps parameters against the SAME query
-  // set the bench gates, so the two recall numbers cannot quietly diverge
-  private[graft] def annQueries(e: DataFrame): DataFrame =
+  private def annQueries(e: DataFrame): DataFrame =
     e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
 
@@ -1212,6 +1233,22 @@ object SparkEntry {
         |           FROM events WHERE event_type = 'purchase'),
         |c AS (SELECT user_id, ts AS click_ts, max(event_id) AS click_id
         |      FROM events WHERE event_type = 'click' GROUP BY user_id, ts)
+        |SELECT p.user_id, purchase_id, purchase_ts, purchase_value,
+        |  c.click_id, c.click_ts
+        |FROM p ASOF LEFT JOIN c
+        |  ON p.user_id = c.user_id AND p.purchase_ts >= c.click_ts""".stripMargin,
+    "q74_asof_ties" ->
+      """WITH p AS (SELECT user_id, event_id AS purchase_id, ts AS purchase_ts,
+        |             value AS purchase_value
+        |           FROM events WHERE event_type = 'purchase'),
+        |k AS (SELECT user_id, ts, event_id FROM events WHERE event_type = 'click'),
+        |t AS (SELECT user_id, ts, event_id FROM k
+        |      UNION ALL
+        |      SELECT user_id, ts, event_id + 1000000000 FROM k WHERE event_id % 4 = 0
+        |      UNION ALL
+        |      SELECT user_id, ts, event_id - 1000000000 FROM k WHERE event_id % 4 = 0),
+        |c AS (SELECT user_id, ts AS click_ts, max(event_id) AS click_id
+        |      FROM t GROUP BY user_id, ts)
         |SELECT p.user_id, purchase_id, purchase_ts, purchase_value,
         |  c.click_id, c.click_ts
         |FROM p ASOF LEFT JOIN c

@@ -95,11 +95,4 @@ object ArrayJaccard {
   def apply(a: Column, b: Column): Column =
     GraftBridge.column(
       ArrayJaccard(GraftBridge.expression(a), GraftBridge.expression(b)))
-
-  /** SQL registration: `SELECT array_jaccard(a, b)`. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "array_jaccard",
-      exprs => ArrayJaccard(exprs(0), exprs(1)),
-      "built-in")
 }

@@ -92,11 +92,4 @@ object CosineSimilarity {
   def apply(a: Column, b: Column): Column =
     GraftBridge.column(
       CosineSimilarity(GraftBridge.expression(a), GraftBridge.expression(b)))
-
-  /** SQL registration: `SELECT cosine_similarity(a, b)`. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_similarity",
-      exprs => CosineSimilarity(exprs(0), exprs(1)),
-      "built-in")
 }

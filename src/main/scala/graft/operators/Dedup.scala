@@ -100,51 +100,30 @@ object Dedup {
     *    never inlined per pair (inlining ngramJaccard re-evaluates the
     *    shingle expression four times per candidate pair — ~2.7 s extra at
     *    sf0.01);
-    *  - default (dense) path: corpus-wide shingle projection joined on both
-    *    pair sides in ONE job — the scans overlap across the cluster and
-    *    nothing is materialized. Bench corpora with planted duplicates have
-    *    ~80% of docs in some pair, where this is the fastest shape.
-    *  - `sparseCandidates = true`: when candidate docs are a vanishing
-    *    fraction of the corpus (the 100 TB regime), the candidate set is
-    *    materialized (tiny by LSH construction), doc texts are SEMI-JOINED
-    *    to candidate ids BEFORE the shingle expression (Catalyst does not
-    *    reorder a join below a projection, so the order must be explicit),
-    *    and the bounded shingle table is materialized once instead of the
-    *    corpus paying two full shingle passes. */
-  def verifyJaccard(
+    *  - corpus-wide shingle projection joined on both pair sides in ONE
+    *    job — the scans overlap across the cluster and nothing is
+    *    materialized. Bench corpora with planted duplicates have ~80% of
+    *    docs in some pair, where this is the fastest shape. */
+  private[graft] def verifyJaccard(
       docs: DataFrame, idCol: String, textCol: String,
-      candidates: DataFrame, threshold: Double, shingleK: Int = 3,
-      sparseCandidates: Boolean = false): DataFrame = {
+      candidates: DataFrame, threshold: Double, shingleK: Int = 3): DataFrame = {
     val base = docs.select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
     // typed one-pass shingle kernel (HashCore.shingleStrings — differential-
     // locked against array_distinct(shinglesCol) in HashCoreSpec): the Column
     // expression chain re-evaluates split/transform per output array element
     // after projection collapse — measured 7× slower building the verify-side
     // shingle table at bench scale (2.85 s vs 0.39 s for the same corpus)
-    def shingleTable(d: DataFrame): DataFrame = {
-      val spark = d.sparkSession
-      import spark.implicits._
-      d.as[(Long, String)].mapPartitions(_.map { case (id, text) =>
-        // null-safe like the Column form it replaced (shinglesCol over a
-        // null text degraded to the single empty shingle)
-        (id, HashCore.shingleStrings(if (text == null) "" else text, shingleK))
-      }).toDF("id", "sh")
-    }
-    val (cands, sh) =
-      if (sparseCandidates) {
-        val c = candidates.localCheckpoint()
-        val candIds = c.select(col("id_a").as("id"))
-          .union(c.select(col("id_b").as("id"))).distinct()
-        val s = shingleTable(base.join(candIds, Seq("id"), "left_semi"))
-          .localCheckpoint() // bounded by the candidate doc set
-        (c, s)
-      } else {
-        (candidates, shingleTable(base))
-      }
+    val spark = docs.sparkSession
+    import spark.implicits._
+    val sh = base.as[(Long, String)].mapPartitions(_.map { case (id, text) =>
+      // null-safe like the Column form it replaced (shinglesCol over a
+      // null text degraded to the single empty shingle)
+      (id, HashCore.shingleStrings(if (text == null) "" else text, shingleK))
+    }).toDF("id", "sh")
     // fused native expression: no intersect/union result arrays per pair
     // (they were built only to take their sizes); coalesce preserves the
     // composed form's null-array -> 0.0 behavior
-    cands
+    candidates
       .join(sh.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
       .join(sh.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
       .withColumn("jaccard", coalesce(
@@ -476,7 +455,7 @@ object Dedup {
   // ---- SimHash -------------------------------------------------------------
 
   /** Hamming distance between two int64 simhashes (bit_count of xor). */
-  def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
+  private def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
   /** SimHash signatures: (id, sh) — the typed one-pass kernel
     * (HashCore.simhash) materialized as a table, exposed for the oracle. */
@@ -722,21 +701,11 @@ object Dedup {
   /** Cosine similarity of two numeric-array columns: the native fused
     * Catalyst expression (one pass, zero allocation, codegen) with a cast
     * to array<double>. See graft.functions.CosineSimilarity; the composed
-    * higher-order-function form it replaces lives in `cosineHof` for
-    * differential testing. */
+    * higher-order-function form it replaces is CosineSimilaritySpec's
+    * differential reference. */
   def cosine(a: Column, b: Column): Column =
     graft.functions.CosineSimilarity(
       a.cast("array<double>"), b.cast("array<double>"))
-
-  /** Reference formulation via composed built-ins (three passes + an
-    * intermediate array). Semantically identical to `cosine`; kept as the
-    * differential-test oracle for the native expression. */
-  def cosineHof(a: Column, b: Column): Column = {
-    val dot = aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0d), (acc, x) => acc + x)
-    val na = sqrt(aggregate(transform(a, x => x * x), lit(0.0d), (acc, x) => acc + x))
-    val nb = sqrt(aggregate(transform(b, x => x * x), lit(0.0d), (acc, x) => acc + x))
-    when(na > 0 && nb > 0, dot / (na * nb)).otherwise(0.0)
-  }
 
   /** Hyperplane-LSH candidate pairs for embedding near-dup, UNVERIFIED:
     * pairs share the exact sign signature or differ in at most ONE bit

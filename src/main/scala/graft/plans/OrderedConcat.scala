@@ -191,11 +191,4 @@ object OrderedConcat {
         org.apache.spark.sql.catalyst.expressions.Literal(
           UTF8String.fromString(sep), StringType))
         .toAggregateExpression())
-
-  /** SQL registration: `SELECT ordered_concat(k, t, ',') ...`. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ordered_concat",
-      exprs => OrderedConcat(exprs(0), exprs(1), exprs(2)).toAggregateExpression(),
-      "built-in")
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.SharedSpark
+import graft.plans.GraftExtensions
 
 /** ArrayJaccard fused expression vs the composed
   * size(array_intersect)/size(array_union) form — bit-identical on random
@@ -46,7 +47,7 @@ class ArrayJaccardSpec extends AnyFunSuite {
 
   test("SQL registration + codegen plan") {
     import spark.implicits._
-    ArrayJaccard.register(spark)
+    GraftExtensions.install(spark)
     // parquet-backed: a LocalRelation would be constant-folded to a
     // LocalTableScan before codegen (ConvertToLocalRelation)
     val dir = java.nio.file.Files.createTempDirectory("graft_aj").toString

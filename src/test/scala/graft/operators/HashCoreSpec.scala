@@ -26,21 +26,6 @@ class HashCoreSpec extends AnyFunSuite {
     }
   }
 
-  test("verifyJaccard sparse-candidates path equals the dense default") {
-    val spark = SharedSpark.spark
-    import spark.implicits._
-    val docs = Seq(
-      (1L, "a b c d e f g h"), (2L, "a b c d e f g h"), (3L, "a b c x e f g h"),
-      (4L, "totally different words here now"), (5L, "a b c d e f zz h"))
-      .toDF("doc_id", "text")
-    val cands = Dedup.minhashCandidates(docs, "doc_id", "text")
-    def rows(sparse: Boolean) =
-      Dedup.verifyJaccard(docs, "doc_id", "text", cands, 0.5, sparseCandidates = sparse)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(rows(sparse = true) == rows(sparse = false))
-    assert(rows(sparse = false).nonEmpty)
-  }
-
   test("shingleStrings == array_distinct(shinglesCol) for random and edge texts") {
     val spark = SharedSpark.spark
     import spark.implicits._

@@ -144,5 +144,13 @@ class CsvRoundTripSpec extends AnyFunSuite {
     assert(loaded.length == 2)
     assert(loaded(0) == rows(0)) // first wins
     assert(loaded(1) == rows(1))
+    // module CSV: a repeated (id, module) row is dropped on load
+    val modules = Seq((8, "D|P|98|7|PU|17|_"), (3, "O'HARA|X"), (8, "D|P|98|7|PU|17|_"),
+      (8, "D|P|99"))
+    val modPath = dir.resolve("diary.csv")
+    java.nio.file.Files.writeString(modPath, CsvSinks.moduleCsv(modules))
+    val mods = CsvSources.readModuleCsv(spark, modPath.toString).collect()
+      .map(r => (r.getInt(0), r.getString(1))).sorted
+    assert(mods.toSeq == modules.distinct.sorted)
   }
 }

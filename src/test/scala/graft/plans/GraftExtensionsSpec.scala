@@ -1,106 +1,31 @@
 package graft.plans
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Dedup, SharedSpark}
+import graft.operators.SharedSpark
 
 class GraftExtensionsSpec extends AnyFunSuite {
-  private lazy val spark = SharedSpark.spark
-  import spark.implicits._
-
-  /** Install the rule for one test, then restore the session's optimizer
-    * (suites share one session; the rule must not leak into other suites'
-    * HOF-vs-native differential oracles). */
-  private def withRule[A](f: => A): A = {
-    val before = spark.experimental.extraOptimizations
-    GraftExtensions.install(spark)
-    try f finally spark.experimental.extraOptimizations = before
-  }
-
-  // parquet-backed (not a LocalRelation): ConvertToLocalRelation would
-  // otherwise evaluate the whole projection at optimize time and leave no
-  // plan to assert on
-  private lazy val vecs: DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ext").toString
-    Seq(
-      (1L, Seq(1.0, 2.0, 3.0), Seq(1.0, 2.0, 3.0)),
-      (2L, Seq(0.5, -1.0, 2.0), Seq(1.0, 0.0, -1.0)),
-      (3L, null.asInstanceOf[Seq[Double]], Seq(1.0, 1.0, 1.0)), // null input row
-      (4L, Seq(0.0, 0.0, 0.0), Seq(1.0, 1.0, 1.0)) // zero norm
-    ).toDF("id", "a", "b").write.mode("overwrite").parquet(s"$dir/vecs")
-    spark.read.parquet(s"$dir/vecs")
-  }
-
-  test("FuseHofCosine rewrites the HOF pattern to the native expression") {
-    withRule {
-      val df = vecs.select(Dedup.cosineHof(col("a"), col("b")).as("c"))
-      val optimized = df.queryExecution.optimizedPlan.toString
-      assert(optimized.contains("cosine_similarity"), optimized)
-      assert(!optimized.contains("zip_with"), optimized)
-    }
-  }
-
-  test("rewrite preserves HOF semantics exactly: nulls -> 0.0, zero norm -> 0.0") {
-    val plain = vecs.select(col("id"), Dedup.cosineHof(col("a"), col("b")).as("c"))
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val fused = withRule {
-      vecs.select(col("id"), Dedup.cosineHof(col("a"), col("b")).as("c"))
-        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    }
-    assert(fused == plain)
-    assert(fused(3L) == 0.0) // null input follows the HOF convention
-    assert(fused(4L) == 0.0)
-  }
-
-  test("null ELEMENTS and length mismatches keep exact HOF semantics") {
-    // HOF: a null element poisons the aggregate -> 0.0; zip_with null-pads
-    // length mismatches -> null when both norms positive. The rewrite
-    // reproduces both (runtime exists(isnull) guard + size-equality branch).
-    val dir = java.nio.file.Files.createTempDirectory("graft_ext_n").toString
-    Seq(
-      (1L, Seq(Option(1.0), None), Seq(Option(1.0), Option(2.0))), // null elem
-      (2L, Seq(Option(1.0), Option(2.0)), Seq(Option(2.0), Option(4.0))), // clean
-      (3L, Seq(Option(1.0)), Seq(Option(1.0), Option(2.0))), // len mismatch
-      (4L, Seq(Option(0.0)), Seq(Option(1.0), Option(2.0))) // mismatch, zero norm
-    ).toDF("id", "a", "b").write.mode("overwrite").parquet(s"$dir/v")
-    val src = spark.read.parquet(s"$dir/v")
-    def run(df: org.apache.spark.sql.DataFrame): Map[Long, Any] =
-      df.select(col("id"), Dedup.cosineHof(col("a"), col("b")).as("c"))
-        .collect().map(r => r.getLong(0) -> r.get(1)).toMap
-    val plain = run(src)
-    val fused = withRule {
-      val df = src.select(col("id"), Dedup.cosineHof(col("a"), col("b")).as("c"))
-      assert(df.queryExecution.optimizedPlan.toString.contains("cosine_similarity"))
-      run(src)
-    }
-    assert(fused == plain)
-    assert(fused(1L) == 0.0) // null element -> 0.0
-    assert(fused(3L) == null) // mismatch, positive norms -> null
-    assert(fused(4L) == 0.0) // mismatch, zero norm -> 0.0
-  }
-
-  test("rule does NOT fire when the two norms use different arrays") {
-    withRule {
-      // dot(a,b) but norms over (a,a): not a cosine — must stay untouched
-      val dot = aggregate(zip_with(col("a"), col("b"), (x, y) => x * y),
-        lit(0.0d), (acc, x) => acc + x)
-      val na = sqrt(aggregate(transform(col("a"), x => x * x), lit(0.0d), (acc, x) => acc + x))
-      val notCos = when(na > 0 && na > 0, dot / (na * na)).otherwise(0.0)
-      val df = vecs.select(notCos.as("c"))
-      val optimized = df.queryExecution.optimizedPlan.toString
-      assert(!optimized.contains("cosine_similarity"), optimized)
-    }
-  }
 
   test("injectFunction path: cosine_similarity callable from SQL") {
-    withRule {
-      vecs.filter(col("a").isNotNull).createOrReplaceTempView("ext_vecs")
-      val r = spark.sql(
-        "SELECT id, cosine_similarity(a, b) AS c FROM ext_vecs ORDER BY id")
-        .collect()
-      assert(math.abs(r.head.getDouble(1) - 1.0) < 1e-12)
+    // a session built with the extension (not `install`): its function
+    // registry is the builtins plus exactly what GraftExtensions injects
+    val shared = SharedSpark.spark // the new session reuses its SparkContext
+    val ext = SparkSession.builder().withExtensions(new GraftExtensions).create()
+    try {
+      val r = ext.sql(
+        """SELECT cosine_similarity(array(1.0D, 2.0D), array(2.0D, 4.0D)) AS c,
+          |  array_jaccard(array('a', 'b', 'b'), array('b', 'c')) AS j""".stripMargin)
+        .collect().head
+      assert(math.abs(r.getDouble(0) - 1.0) < 1e-12)
+      assert(r.getDouble(1) == 1.0 / 3.0)
+      val s = ext.sql(
+        "SELECT ordered_concat(k, t, ',') FROM VALUES (2, 'b'), (1, 'a') AS v(k, t)")
+        .collect().head.getString(0)
+      assert(s == "a,b")
+    } finally {
+      SparkSession.setActiveSession(shared)
+      SparkSession.setDefaultSession(shared)
     }
   }
 }

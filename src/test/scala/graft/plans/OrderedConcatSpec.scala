@@ -51,7 +51,7 @@ class OrderedConcatSpec extends AnyFunSuite {
   }
 
   test("SQL registration: ordered_concat works in spark.sql") {
-    OrderedConcat.register(spark)
+    GraftExtensions.install(spark)
     import spark.implicits._
     Seq((1, 2, "b"), (1, 1, "a"), (2, 1, "z")).toDF("g", "k", "t")
       .createOrReplaceTempView("oc_in")
@@ -62,7 +62,7 @@ class OrderedConcatSpec extends AnyFunSuite {
   }
 
   test("null texts skipped; empty group yields null (string_agg parity)") {
-    OrderedConcat.register(spark)
+    GraftExtensions.install(spark)
     import spark.implicits._
     Seq((1, 1, Option("a")), (1, 2, None), (2, 1, None))
       .toDF("g", "k", "t").createOrReplaceTempView("oc_nulls")
