@@ -401,9 +401,7 @@ object Bench {
     // planted-duplicate count, not the corpus square.
     import org.apache.spark.sql.functions.col
     val recallEmb = try {
-      val corpus = SparkEntry.withPlantedEmbDups(
-        SparkEntry.load(spark, sfDir, "embeddings")
-          .select(col("vec_id"), col("embedding")))
+      val corpus = SparkEntry.plantedEmb(spark, sfDir)
       val v = corpus.select(col("vec_id").cast("long").as("id"),
         col("embedding").cast("array<double>").as("v"))
       val exact = v.select(col("id").as("id_a"), col("v").as("v_a"))
@@ -414,7 +412,7 @@ object Bench {
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       require(exact.nonEmpty, "no exact pairs at threshold")
       val cand = graft.operators.Dedup.embeddingCandidates(
-        corpus, "vec_id", "embedding", dim = 64)
+        corpus, "vec_id", "embedding", dim = SparkEntry.EmbDim)
         .select(col("id_a").cast("long"), col("id_b").cast("long")).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       cand.intersect(exact).size.toDouble / exact.size

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -9,7 +9,7 @@ import graft.fixtures.TranscriptGen
 import graft.operators.{Dedup, Multimodal, Similarity, TextStats}
 import graft.pipeline.ExtractPipeline
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
+/** Driver contract: queries, side tables and oracle SQL (README "Layout"; SURVEY.md §7). */
 object SparkEntry {
 
   /** Deterministic corpus size per scale-factor directory (extraction queries
@@ -77,90 +77,103 @@ object SparkEntry {
 
   /** Full extraction run (shared by the extraction queries). */
   def runExtraction(spark: SparkSession, sfDir: String) = {
-    val turns = ExtractPipeline.transcripts(spark, nConvsFor(sfDir),
-      spark.sparkContext.defaultParallelism)
     val ctx = ExtractPipeline.makeContext(TranscriptGen.allEntityIds)
-    ExtractPipeline.extract(turns, ctx)
+    ExtractPipeline.extract(transcriptsFor(spark, sfDir), ctx)
   }
 
-  /** Plant near-identical embeddings: a perturbed copy of every vector, ids
-    * offset by 1,000,000 — ground-truth near-dup pairs for q43. */
-  def withPlantedEmbDups(base: DataFrame): DataFrame = {
-    val planted = base.select((col("vec_id") + 1000000).as("vec_id"),
-      transform(col("embedding"), x => x * 0.99f + 0.003f).as("embedding"))
-    base.union(planted)
+  /** The synthetic transcripts of `sfDir`, one partition per core. */
+  private def transcriptsFor(s: SparkSession, sfDir: String) =
+    ExtractPipeline.transcripts(s, nConvsFor(sfDir), s.sparkContext.defaultParallelism)
+
+  /** One value for the last (session, sfDir) asked for: Verify and Bench
+    * consume exactly one (session, sfDir) at a time, so one slot gives full
+    * reuse across a query and its materializations while bounding the cache
+    * by construction. A miss evicts the old value and releases it, unless
+    * its session is stopped (a stopped session's blocks died with it);
+    * either way the strong session reference goes, so a stopped
+    * SparkSession is never kept reachable through the cache. (A WeakHashMap
+    * keyed by session cannot work here: cached Datasets strongly reference
+    * their own session, the documented WeakHashMap self-reference trap.)
+    * Hits and swaps hold the lock; `compute` runs OUTSIDE it — a lost race
+    * recomputes, it never blocks an unrelated (session, dir) — and a caller
+    * that finds its key installed by a racing caller releases its own copy
+    * instead of leaking executor cache. A value returned earlier can still
+    * be released by a later miss; a released Dataset recomputes from its
+    * plan, so only the cache benefit is lost. */
+  private[graft] final class Slot[T](release: T => Unit) {
+    private var held: Option[(SparkSession, String, T)] = None
+
+    private def quietly(v: T): Unit =
+      try release(v) catch { case scala.util.control.NonFatal(_) => }
+
+    /** Must hold the lock: install `next` (or nothing), releasing the old. */
+    private def swap(next: Option[(SparkSession, String, T)]): Unit = {
+      held.foreach { case (cs, _, old) => if (!cs.sparkContext.isStopped) quietly(old) }
+      held = next
+    }
+
+    def apply(s: SparkSession, dir: String)(compute: => T): T = {
+      val hit = synchronized {
+        held match {
+          case Some((cs, cd, v)) if (cs eq s) && cd == dir => Some(v)
+          case _ => swap(None); None
+        }
+      }
+      hit.getOrElse {
+        val v = compute
+        synchronized {
+          held match {
+            case Some((cs, cd, won)) if (cs eq s) && cd == dir => quietly(v); won
+            case _ => swap(Some((s, dir, v))); v
+          }
+        }
+      }
+    }
   }
 
   /** q28's skip-rule fixed point, shared with the Verify materializations
     * (ext_errors_after / skip_rules must describe the SAME run the q28
     * result aggregates). Rule derivation is distributed
     * (ExtractPipeline.deriveSkipRules) — raw error rows are never collected.
-    *
-    * SINGLE-SLOT cache: Verify (and Bench) consume exactly one
-    * (session, sfDir) at a time, so one slot gives full reuse across the
-    * q28 query + its two materializations while bounding the cache by
-    * construction — a new (session, dir) evicts the previous entry, so a
-    * stopped session is never pinned through the cache. (A WeakHashMap
-    * keyed by session cannot work here: the cached Datasets strongly
-    * reference their own session, the documented WeakHashMap self-reference
-    * trap.) The fixed-point computation runs OUTSIDE the lock — a lost race
-    * recomputes, it never blocks an unrelated (session, dir). */
+    * The slot releases both pinned error Datasets on eviction. */
   private type SkipOutcome =
-    (org.apache.spark.sql.Dataset[ExtractionError],
-     org.apache.spark.sql.Dataset[ExtractionError], Set[SkipRule])
-  @volatile private var skipOutcomeSlot
-      : Option[(SparkSession, String, SkipOutcome)] = None
+    (Dataset[ExtractionError], Dataset[ExtractionError], Set[SkipRule])
+  private val skipOutcomes = new Slot[SkipOutcome]({ case (first, last, _) =>
+    first.unpersist()
+    if (last ne first) last.unpersist()
+  })
 
-  def skipRuleOutcome(s: SparkSession, dir: String): SkipOutcome = {
-    skipOutcomeSlot match {
-      case Some((cs, cd, outcome)) if (cs eq s) && cd == dir => return outcome
-      case _ =>
-    }
-    // Evict the stale slot BEFORE computing: unpersist its pinned Datasets
-    // while the old session is still live (a stopped session's blocks died
-    // with it), and drop the strong session reference either way so a
-    // stopped SparkSession is never kept reachable through the cache.
-    skipOutcomeSlot.foreach { case (cs, _, (first, last, _)) =>
-      skipOutcomeSlot = None
-      if (!cs.sparkContext.isStopped) {
-        try {
-          first.unpersist()
-          if (last ne first) last.unpersist()
-        } catch { case scala.util.control.NonFatal(_) => }
+  def skipRuleOutcome(s: SparkSession, dir: String): SkipOutcome = skipOutcomes(s, dir) {
+    val turns = transcriptsFor(s, dir)
+    val storage = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    val ctx0 = ExtractPipeline.makeContext(TranscriptGen.allEntityIds)
+    val firstErrors = ExtractPipeline.errors(ExtractPipeline.extract(turns, ctx0))
+      .persist(storage)
+    var rules = Set.empty[SkipRule]
+    var lastErrors = firstErrors
+    var changed = true
+    var iter = 0
+    while (changed && iter < 4) {
+      val (derived, overflowed) = ExtractPipeline.deriveSkipRules(lastErrors)
+      if (overflowed)
+        System.err.println(
+          "[q28] skip-rule cap hit — rules beyond the cap were dropped this round")
+      val fresh = derived -- rules
+      changed = fresh.nonEmpty
+      if (changed) {
+        rules ++= fresh
+        val ctx1 = ExtractPipeline.makeContext(TranscriptGen.allEntityIds, rules)
+        val next = ExtractPipeline.errors(ExtractPipeline.extract(turns, ctx1))
+          .persist(storage)
+        if (lastErrors ne firstErrors) lastErrors.unpersist()
+        lastErrors = next
       }
+      iter += 1
     }
-    val outcome: SkipOutcome = {
-      val turns = ExtractPipeline.transcripts(s, nConvsFor(dir),
-        s.sparkContext.defaultParallelism)
-      val storage = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      val ctx0 = ExtractPipeline.makeContext(TranscriptGen.allEntityIds)
-      val firstErrors = ExtractPipeline.errors(ExtractPipeline.extract(turns, ctx0))
-        .persist(storage)
-      var rules = Set.empty[SkipRule]
-      var lastErrors = firstErrors
-      var changed = true
-      var iter = 0
-      while (changed && iter < 4) {
-        val (derived, overflowed) = ExtractPipeline.deriveSkipRules(lastErrors)
-        if (overflowed)
-          System.err.println(
-            "[q28] skip-rule cap hit — rules beyond the cap were dropped this round")
-        val fresh = derived -- rules
-        changed = fresh.nonEmpty
-        if (changed) {
-          rules ++= fresh
-          val ctx1 = ExtractPipeline.makeContext(TranscriptGen.allEntityIds, rules)
-          val next = ExtractPipeline.errors(ExtractPipeline.extract(turns, ctx1))
-            .persist(storage)
-          if (lastErrors ne firstErrors) lastErrors.unpersist()
-          lastErrors = next
-        }
-        iter += 1
-      }
-      (firstErrors, lastErrors, rules)
-    }
-    skipOutcomeSlot = Some((s, dir, outcome))
-    outcome
+    if (changed)
+      System.err.println(s"[q28] skip-rule fixed point not reached in $iter rounds — " +
+        "rules the last round's errors would add were not derived")
+    (firstErrors, lastErrors, rules)
   }
 
   /** Flagship query on sf=0.001-equivalent synthetic transcripts; driver
@@ -225,9 +238,7 @@ object SparkEntry {
       // by the scale-safe two-phase audit — the historical Window.orderBy
       // (single-task) form is retired from the shipped surface and lives in
       // OperatorsSpec as the differential oracle for GapAudit.gaps.
-      graft.operators.GapAudit.gaps(
-        load(s, dir, "orders").select(floor(col("o_totalprice")).cast("long").as("k")),
-        "k").orderBy(col("gap_start"))
+      priceGaps(s, dir)
     }),
     "q08_topk_per_group" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
@@ -285,9 +296,7 @@ object SparkEntry {
     "q27_gap_audit_scalable" -> ((s, dir) => {
       // two-phase distributed gap audit (no single-partition window) over
       // the same key space as q07: results must agree with the window form
-      graft.operators.GapAudit.gaps(
-        load(s, dir, "orders").select(floor(col("o_totalprice")).cast("long").as("k")),
-        "k").orderBy(col("gap_start"))
+      priceGaps(s, dir)
     }),
 
     "q28_skip_rules" -> ((s, dir) => {
@@ -318,19 +327,13 @@ object SparkEntry {
       // mega-conversation in one aggregation state; now the per-task state
       // is one partition's StringBuilder + one segment row per partition a
       // conversation spans.
-      val ex = runExtraction(s, dir)
-      ExtractPipeline.conversationText(
-        ExtractPipeline.cleanTurns(ex).toDF()
-          .filter(length(col("clean_text")) > 0))
+      ExtractPipeline.conversationText(proseTurns(s, dir))
     }),
     "q52_conversation_agg" -> ((s, dir) => {
       // the SAME reassembly served by the custom TypedImperativeAggregate
       // (plans.OrderedConcat) — the aggregate-tier demo, held to the same
       // DuckDB string_agg oracle as q29
-      val ex = runExtraction(s, dir)
-      ExtractPipeline.conversationTextAgg(
-        ExtractPipeline.cleanTurns(ex).toDF()
-          .filter(length(col("clean_text")) > 0))
+      ExtractPipeline.conversationTextAgg(proseTurns(s, dir))
     }),
     "q48_sessionize" -> ((s, dir) => {
       // gap-based sessionization over the events stream table — the temporal
@@ -380,51 +383,17 @@ object SparkEntry {
       d.select(col("doc_id"), TextStats.fingerprintCol(col("text")).as("fingerprint"))
     }),
 
-    "q56_asof_join" -> ((s, dir) => {
-      // attribution: each purchase joined as-of to the user's latest click
-      // at or before it (inclusive). Of several clicks at one (user, ts),
-      // asofJoin keeps the greatest right row: (user, ts) being equal, the
-      // max click_id — the row the DuckDB oracle's GROUP BY keeps.
-      val e = load(s, dir, "events")
-      val purchases = e.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id").as("purchase_id"),
-          col("ts").as("purchase_ts"), col("value").as("purchase_value"))
-      val clicks = e.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts").as("click_ts"), col("event_id").as("click_id"))
-      // asofJoin splits by (user, day) only when the inputs outgrow one
-      // partition, so one hyperactive user cannot own a whole task at
-      // 100 TB; below that, one per-key window (same rows, spec-pinned)
-      graft.operators.AsOf.asofJoin(
-        purchases, clicks, key = "user_id", leftTs = "purchase_ts",
-        rightTs = "click_ts")
-        .select(col("user_id"), col("purchase_id"), col("purchase_ts"),
-          col("purchase_value"),
-          col("asof.click_id").as("click_id"),
-          col("asof.click_ts").as("click_ts"))
-    }),
+    "q56_asof_join" -> ((s, dir) => purchaseAsOfClick(s, dir, identity)),
 
-    "q74_asof_ties" -> ((s, dir) => {
+    "q74_asof_ties" -> ((s, dir) => purchaseAsOfClick(s, dir, { clicks =>
       // q56 over clicks with planted ties: every click with event_id % 4 = 0
       // gains two copies at its (user, ts), ids 1e9 above and below its
       // own, so the oracle compare sees which tied click asofJoin keeps
-      val e = load(s, dir, "events")
-      val purchases = e.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id").as("purchase_id"),
-          col("ts").as("purchase_ts"), col("value").as("purchase_value"))
-      val clicks = e.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts").as("click_ts"), col("event_id").as("click_id"))
       val planted = clicks.filter(col("click_id") % 4 === 0)
-      val tied = clicks
+      clicks
         .unionByName(planted.withColumn("click_id", col("click_id") + 1000000000L))
         .unionByName(planted.withColumn("click_id", col("click_id") - 1000000000L))
-      graft.operators.AsOf.asofJoin(
-        purchases, tied, key = "user_id", leftTs = "purchase_ts",
-        rightTs = "click_ts")
-        .select(col("user_id"), col("purchase_id"), col("purchase_ts"),
-          col("purchase_value"),
-          col("asof.click_id").as("click_id"),
-          col("asof.click_ts").as("click_ts"))
-    }),
+    })),
 
     "q63_funnel_asof" -> ((s, dir) => {
       // conversion funnel by CHAINED as-of joins: each purchase -> latest
@@ -522,9 +491,7 @@ object SparkEntry {
       // the repeat/switch logic is additionally unit-tested on planted
       // violations (CurationSpec) since the generated corpus's strict role
       // cycle keeps n_role_repeats at zero.
-      graft.operators.Curation.transcriptShape(
-        ExtractPipeline.transcripts(s, nConvsFor(dir),
-          s.sparkContext.defaultParallelism).toDF())
+      graft.operators.Curation.transcriptShape(transcriptsFor(s, dir).toDF())
     }),
     "q59_sequence_packing" -> ((s, dir) => {
       // concat-and-slice sample packing: per-shard token-stream offsets and
@@ -545,8 +512,7 @@ object SparkEntry {
       // characters stripped (the query pins the BPE math; the operator
       // itself takes arbitrary text).
       val d = load(s, dir, "documents")
-      val enc = new graft.operators.Bpe.Encoder(bpeMergeTable(s, dir))
-      graft.operators.Bpe.tokenCounts(d, "doc_id", bpeText(col("text")), enc)
+      graft.operators.Bpe.tokenCounts(d, "doc_id", bpeText(col("text")), bpeEncoder(s, dir))
     }),
     "q68_ngram_decontaminate" -> ((s, dir) => {
       // GPT-3-style n-gram decontamination: a candidate doc dies if it
@@ -578,8 +544,7 @@ object SparkEntry {
       // per word, '¶' between words), so the oracle recovers it with two
       // replaces + a trim. '§' joins tokens on both sides.
       val d = load(s, dir, "documents")
-      val enc = new graft.operators.Bpe.Encoder(bpeMergeTable(s, dir))
-      graft.operators.Bpe.tokenize(d, "doc_id", bpeText(col("text")), enc)
+      graft.operators.Bpe.tokenize(d, "doc_id", bpeText(col("text")), bpeEncoder(s, dir))
     }),
     "q70_bpe_token_ids" -> ((s, dir) => {
       // the tokenized-sink form: subword sequences mapped to dense integer
@@ -588,9 +553,8 @@ object SparkEntry {
       // single code points). The oracle replays the merges, splits the
       // token string, and joins the SAME vocab table per position.
       val d = load(s, dir, "documents")
-      val enc = new graft.operators.Bpe.Encoder(bpeMergeTable(s, dir))
-      graft.operators.Bpe.tokenizeIds(d, "doc_id", bpeText(col("text")), enc,
-        bpeVocabRows(s, dir).toMap)
+      graft.operators.Bpe.tokenizeIds(d, "doc_id", bpeText(col("text")),
+        bpeEncoder(s, dir), bpeVocabRows(s, dir).toMap)
     }),
 
     "q71_packed_ids" -> ((s, dir) => {
@@ -600,13 +564,12 @@ object SparkEntry {
       // composes the merge replay, the vocab position-join, and the
       // packing windows — every stage independently recomputed.
       val d = load(s, dir, "documents")
-      val enc = new graft.operators.Bpe.Encoder(bpeMergeTable(s, dir))
       // ONE corpus encode: the id streams are the source of truth and the
       // packing budget derives from them (token count == id count), so the
       // sink doesn't pay tokenCounts' second pass; localCheckpoint because
       // ids feed both the budget and the final join (q55's precedent)
       val ids = graft.operators.Bpe.tokenizeIds(d, "doc_id",
-        bpeText(col("text")), enc, bpeVocabRows(s, dir).toMap)
+        bpeText(col("text")), bpeEncoder(s, dir), bpeVocabRows(s, dir).toMap)
         .localCheckpoint()
       val counts = ids.select(col("doc_id"),
         when(col("ids_str") === "", lit(0L))
@@ -635,9 +598,8 @@ object SparkEntry {
       // tokenizer counts of q64 (same cached merge table). The oracle
       // composes the q64 recursive merge replay with the q59 packing SQL.
       val d = load(s, dir, "documents")
-      val enc = new graft.operators.Bpe.Encoder(bpeMergeTable(s, dir))
       val counts = graft.operators.Bpe
-        .tokenCounts(d, "doc_id", bpeText(col("text")), enc)
+        .tokenCounts(d, "doc_id", bpeText(col("text")), bpeEncoder(s, dir))
         .select(col("doc_id"), col("n_tokens").as("bpe_tokens"))
       graft.operators.Curation.packSequences(
         counts, "doc_id", col("bpe_tokens"),
@@ -695,9 +657,8 @@ object SparkEntry {
       Dedup.exactGroups(load(s, dir, "documents"), "doc_id", "text")
     }),
     "q41_dedup_minhash" -> ((s, dir) => {
-      val base = load(s, dir, "documents").select(col("doc_id"), col("text"))
-      Dedup.minhashNearDups(withPlantedTextDups(base), "doc_id", "text",
-        threshold = 0.7)
+      Dedup.minhashNearDups(plantedDocs(s, dir), "doc_id", "text",
+        threshold = JaccardThreshold)
         .withColumn("jaccard", round(col("jaccard"), 6))
     }),
     "q57_dedup_ngram_jaccard" -> ((s, dir) => {
@@ -711,38 +672,28 @@ object SparkEntry {
       // posting count-join (~6x over prefix+verify here); both paths
       // return identical rows (spec-checked) and the all-pairs oracle is
       // path-independent
-      val base = load(s, dir, "documents").select(col("doc_id"), col("text"))
-      Dedup.ngramNearDups(withPlantedTextDups(base), "doc_id", "text",
-        threshold = 0.7)
+      Dedup.ngramNearDups(plantedDocs(s, dir), "doc_id", "text",
+        threshold = JaccardThreshold)
         .withColumn("jaccard", round(col("jaccard"), 6))
     }),
     "q42_dedup_simhash" -> ((s, dir) => {
-      val base = load(s, dir, "documents").select(col("doc_id"), col("text"))
-      Dedup.simhashNearDups(withPlantedTextDups(base), "doc_id", "text", maxDist = 6)
+      Dedup.simhashNearDups(plantedDocs(s, dir), "doc_id", "text",
+        maxDist = SimhashMaxDist)
     }),
     "q43_dedup_embedding" -> ((s, dir) => {
-      val corpus = withPlantedEmbDups(
-        load(s, dir, "embeddings").select(col("vec_id"), col("embedding")))
-      Dedup.embeddingNearDups(corpus, "vec_id", "embedding",
-        dim = 64, threshold = 0.98)
+      Dedup.embeddingNearDups(plantedEmb(s, dir), "vec_id", "embedding",
+        dim = EmbDim, threshold = 0.98)
         .withColumn("cos", round(col("cos"), 6))
     }),
 
     // ---- similarity search over embeddings ---------------------------------
     "q44_ann_brute_topk" -> ((s, dir) => {
-      // double-cast before the dot product: bit-stable vs the DuckDB oracle
-      val e = load(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-      val queries = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      Similarity.bruteForceTopK(e, "vec_id", "embedding", queries, "qid", "qv", 10)
+      val e = embCorpus(s, dir)
+      Similarity.bruteForceTopK(e, "vec_id", "embedding", annQueries(e), "qid", "qv", 10)
         .withColumn("cos", round(col("cos"), 6))
     }),
     "q45_ann_lsh_topk" -> ((s, dir) => {
-      val e = load(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-      val queries = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
+      val e = embCorpus(s, dir)
       // Sizing (rule at Similarity.lshCandidates): nBits=6 keeps ~2000/64 ≈
       // 31 vectors/bucket; the bench corpus is near-isotropic (top-10
       // neighbors at cos≈0.3 → per-plane disagreement p≈0.40, the
@@ -750,17 +701,16 @@ object SparkEntry {
       // ≈0.23 and the 0.9 recall gate (BENCH recall_at_10) needs L=10
       // independent tables: 1-(1-0.23)^10 ≈ 0.93. Clustered production
       // embeddings (p≈0.2) hit the same target with L=2-4 at nBits 16+.
-      Similarity.lshTopK(e, "vec_id", "embedding", queries, "qid", "qv", 10,
-        dim = 64, nBits = 6, nTables = 10)
+      Similarity.lshTopK(e, "vec_id", "embedding", annQueries(e), "qid", "qv", 10,
+        dim = EmbDim, nBits = LshBits, nTables = LshTables)
         .withColumn("cos", round(col("cos"), 6))
     }),
 
     "q49_dedup_corpus" -> ((s, dir) => {
       // end-to-end corpus dedup: exact collapse -> minhash pairs -> connected
       // components -> one keeper per cluster
-      val base = load(s, dir, "documents").select(col("doc_id"), col("text"))
-      val deduped = Dedup.dedupCorpus(withPlantedTextDups(base), "doc_id", "text",
-        threshold = 0.7)
+      val deduped = Dedup.dedupCorpus(plantedDocs(s, dir), "doc_id", "text",
+        threshold = JaccardThreshold)
       deduped.agg(
         count(lit(1)).as("docs_kept"),
         sum(when(col("doc_id") >= 1000000L, 1).otherwise(0)).as("planted_kept"))
@@ -776,26 +726,20 @@ object SparkEntry {
       // PQ's worst case exactly as they are IVF's (q47's probes=7 note);
       // 16 bytes/vec is still a 32x cut vs the raw float64 vectors.
       val e = embCorpus(s, dir)
-      val model = graft.operators.Pq.fit(e, "vec_id", "embedding",
-        m = 16, ksub = 32)
       graft.operators.Pq.topK(e, "vec_id", "embedding",
-        annQueries(e), "qid", "qv", 10, model, r = 128)
+        annQueries(e), "qid", "qv", 10, pqModel(e), r = PqRerank)
         .withColumn("cos", round(col("cos"), 6))
     }),
 
     "q47_ann_ivf_topk" -> ((s, dir) => {
-      val e = load(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-      val queries = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
+      val e = embCorpus(s, dir)
       // probes=7 of k=8: on the near-isotropic bench corpus IVF recall
       // tracks the probed fraction (centroids carry little signal — recall
       // 0.66 measured at probes=4), so the 0.9 recall gate needs
       // probes ≈ 0.9k. Clustered production embeddings concentrate
       // neighbors in 1-2 cells; there probes ≈ 2-3 of a much larger k.
-      val model = graft.operators.Ivf.fit(e, "vec_id", "embedding", k = 8)
       graft.operators.Ivf.topK(e, "vec_id", "embedding",
-        queries, "qid", "qv", 10, model, probes = 7)
+        annQueries(e), "qid", "qv", 10, ivfModel(e), probes = IvfProbes)
         .withColumn("cos", round(col("cos"), 6))
     }),
 
@@ -891,51 +835,20 @@ object SparkEntry {
        |    st.r + 1
        |  FROM steps st JOIN ${t("bpe_merges")} m ON m.merge_rank = st.r)""".stripMargin
 
-  /** Synthesized media blobs, SINGLE-SLOT cached per (session, sfDir),
-    * persisted and materialized eagerly — the skipRuleOutcome pattern.
-    * q46 and the media_features materialization decode the SAME blobs, and
-    * the bench leg times DECODE (the operator under test) instead of
-    * re-paying fixture synthesis (PNG/WAV/MJPEG-AVI encode) every round:
-    * synthesis stands in for reading real blobs, which a production run
-    * scans from the table once, not per query.
-    *
-    * The fast path reads the slot without the lock, so it can return a
-    * dataset that a concurrent caller for another (session, dir) is
-    * unpersisting while it swaps the slot. Results stay correct: an
-    * unpersisted dataset recomputes from its plan. Only the cache benefit
-    * is lost for that consumer. */
-  @volatile private var mediaSlot: Option[(SparkSession, String,
-    org.apache.spark.sql.Dataset[Multimodal.MediaRow])] = None
-  private val mediaSlotLock = new Object
+  /** Synthesized media blobs, slot-cached per (session, sfDir), persisted
+    * and materialized eagerly — the skipRuleOutcome pattern. q46 and the
+    * media_features materialization decode the SAME blobs, and the bench
+    * leg times DECODE (the operator under test) instead of re-paying fixture
+    * synthesis (PNG/WAV/MJPEG-AVI encode) every round: synthesis stands in
+    * for reading real blobs, which a production run scans from the table
+    * once, not per query. */
+  private val media = new Slot[Dataset[Multimodal.MediaRow]](_.unpersist())
 
-  def mediaTable(s: SparkSession, dir: String)
-      : org.apache.spark.sql.Dataset[Multimodal.MediaRow] = {
-    mediaSlot match {
-      case Some((cs, cd, m)) if (cs eq s) && cd == dir => return m
-      case _ =>
-    }
+  def mediaTable(s: SparkSession, dir: String): Dataset[Multimodal.MediaRow] = media(s, dir) {
     val m = Multimodal.synthesizeMedia(load(s, dir, "documents"), s)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     m.count() // materialize here, outside any timed region
-    // slot swap under a lock (r05 ADVICE): two concurrent callers could
-    // both synthesize — the LOSER must unpersist its own dataset instead of
-    // leaking executor cache. Synthesis stays outside the lock (the
-    // skipRuleOutcome rule: a lost race recomputes, never blocks).
-    mediaSlotLock.synchronized {
-      mediaSlot match {
-        case Some((cs, cd, cached)) if (cs eq s) && cd == dir =>
-          try m.unpersist() catch { case scala.util.control.NonFatal(_) => }
-          cached
-        case prev =>
-          prev.foreach { case (cs, _, old) =>
-            if (!cs.sparkContext.isStopped) {
-              try old.unpersist() catch { case scala.util.control.NonFatal(_) => }
-            }
-          }
-          mediaSlot = Some((s, dir, m))
-          m
-      }
-    }
+    m
   }
 
   /** BPE packing cell parameters — ONE definition shared by the q66 and
@@ -944,47 +857,37 @@ object SparkEntry {
   private val BpePackWindow = 512L
   private val BpePackShards = 8
 
-  /** BPE vocab rows, SINGLE-SLOT cached per (session, sfDir) — the q70/q71
+  /** BPE vocab rows, slot-cached per (session, sfDir) — the q70/q71
     * queries and the `bpe_vocab` materialization must describe the SAME id
     * assignment, and the build (tokenize + distinct + sort + collect) is a
     * one-time dimension cost, not per-query work. */
-  @volatile private var bpeVocabSlot
-      : Option[(SparkSession, String, Seq[(String, Long)])] = None
+  private val bpeVocab = new Slot[Seq[(String, Long)]](_ => ())
 
-  def bpeVocabRows(s: SparkSession, dir: String): Seq[(String, Long)] = {
-    bpeVocabSlot match {
-      case Some((cs, cd, v)) if (cs eq s) && cd == dir => return v
-      case _ =>
-    }
-    val enc = new graft.operators.Bpe.Encoder(bpeMergeTable(s, dir))
-    val v = graft.operators.Bpe
-      .vocab(load(s, dir, "documents"), "doc_id", bpeText(col("text")), enc)
+  def bpeVocabRows(s: SparkSession, dir: String): Seq[(String, Long)] = bpeVocab(s, dir) {
+    graft.operators.Bpe.vocab(load(s, dir, "documents"), "doc_id",
+      bpeText(col("text")), bpeEncoder(s, dir))
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    bpeVocabSlot = Some((s, dir, v))
-    v
   }
 
-  /** Trained BPE merge table, SINGLE-SLOT cached per (session, sfDir) —
-    * the skipRuleOutcome pattern — so the q64 query and the `bpe_merges`
+  /** Trained BPE merge table, slot-cached per (session, sfDir) — the
+    * skipRuleOutcome pattern — so the q64 query and the `bpe_merges`
     * materialization describe the SAME training run without retraining. */
-  @volatile private var bpeSlot
-      : Option[(SparkSession, String, IndexedSeq[graft.operators.Bpe.Merge])] = None
+  private val bpeMerges = new Slot[IndexedSeq[graft.operators.Bpe.Merge]](_ => ())
 
-  def bpeMergeTable(s: SparkSession, dir: String): IndexedSeq[graft.operators.Bpe.Merge] = {
-    bpeSlot match {
-      case Some((cs, cd, m)) if (cs eq s) && cd == dir => return m
-      case _ =>
-    }
+  def bpeMergeTable(s: SparkSession, dir: String)
+      : IndexedSeq[graft.operators.Bpe.Merge] = bpeMerges(s, dir) {
     // nMerges=2000 is the production-vocabulary ask (round-4 verdict #1);
     // the incremental trainer makes it cheap, and on this synthetic corpus
     // (31 distinct words) training early-stops when no pair occurs twice,
     // so the materialized merge table — and the oracle replay cost — stays
     // corpus-sized regardless of the budget.
-    val m = graft.operators.Bpe.train(
+    graft.operators.Bpe.train(
       load(s, dir, "documents"), "doc_id", bpeText(col("text")), nMerges = 2000)
-    bpeSlot = Some((s, dir, m))
-    m
   }
+
+  /** The encoder every BPE query applies: the slot-cached merge table. */
+  private def bpeEncoder(s: SparkSession, dir: String) =
+    new graft.operators.Bpe.Encoder(bpeMergeTable(s, dir))
 
   // ---- oracle-side materializations -----------------------------------------
 
@@ -993,16 +896,35 @@ object SparkEntry {
     * strictly later order keys, so first-wins dedup must drop ALL copies. */
   private def plantedModules(s: SparkSession, dir: String) = {
     import s.implicits._
-    val turns = ExtractPipeline.transcripts(s, nConvsFor(dir),
-      s.sparkContext.defaultParallelism)
+    val turns = transcriptsFor(s, dir)
     val dup = turns.map(t => t.copy(turn_idx = t.turn_idx + 100000))
     val ctx = ExtractPipeline.makeContext(TranscriptGen.allEntityIds)
     ExtractPipeline.modules(ExtractPipeline.extract(turns.union(dup), ctx))
   }
 
+  /** The clean turns with text: what q29 and q52 reassemble. */
+  private def proseTurns(s: SparkSession, dir: String): DataFrame =
+    ExtractPipeline.cleanTurns(runExtraction(s, dir)).toDF()
+      .filter(length(col("clean_text")) > 0)
+
+  /** The `module` column the first-wins module oracles partition by. */
+  private def withModuleKey(modules: DataFrame): DataFrame = modules.withColumn("module",
+    concat_ws("|", col("module_type"), concat_ws("|", col("zones"))))
+
   private def plantedDocs(s: SparkSession, dir: String): DataFrame =
     withPlantedTextDups(load(s, dir, "documents").select(col("doc_id"), col("text")))
 
+  /** q43's corpus: the embeddings plus near-identical planted ones, a
+    * perturbed copy of every vector with its id offset by 1,000,000 —
+    * ground-truth near-dup pairs. */
+  private[graft] def plantedEmb(s: SparkSession, dir: String): DataFrame = {
+    val base = load(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
+    val planted = base.select((col("vec_id") + 1000000).as("vec_id"),
+      transform(col("embedding"), x => x * 0.99f + 0.003f).as("embedding"))
+    base.union(planted)
+  }
+
+  // double-cast before the dot product: bit-stable vs the DuckDB oracle
   private def embCorpus(s: SparkSession, dir: String): DataFrame =
     load(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
@@ -1010,6 +932,52 @@ object SparkEntry {
   private def annQueries(e: DataFrame): DataFrame =
     e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
+
+  /** Settings a query shares with the side table or oracle SQL that
+    * re-checks it: one value each, so the two cannot drift apart. */
+  private[graft] val EmbDim = 64
+  private val LshBits = 6
+  private val LshTables = 10
+  private val IvfProbes = 7
+  private val PqRerank = 128
+  private val SimhashMaxDist = 6
+  private val JaccardThreshold = 0.7
+
+  private def ivfModel(e: DataFrame) =
+    graft.operators.Ivf.fit(e, "vec_id", "embedding", k = 8)
+  private def pqModel(e: DataFrame) =
+    graft.operators.Pq.fit(e, "vec_id", "embedding", m = 16, ksub = 32)
+
+  /** Missing-id gaps over the floored order prices (q07, q27). */
+  private def priceGaps(s: SparkSession, dir: String): DataFrame =
+    graft.operators.GapAudit.gaps(
+      load(s, dir, "orders").select(floor(col("o_totalprice")).cast("long").as("k")),
+      "k").orderBy(col("gap_start"))
+
+  /** q56's attribution over `rewrite(clicks)`: each purchase joined as-of to
+    * the user's latest click at or before it (inclusive). Of several clicks
+    * at one (user, ts), asofJoin keeps the greatest right row: (user, ts)
+    * being equal, the max click_id — the row the DuckDB oracle's GROUP BY
+    * keeps. */
+  private def purchaseAsOfClick(s: SparkSession, dir: String,
+      rewrite: DataFrame => DataFrame): DataFrame = {
+    val e = load(s, dir, "events")
+    val purchases = e.filter(col("event_type") === "purchase")
+      .select(col("user_id"), col("event_id").as("purchase_id"),
+        col("ts").as("purchase_ts"), col("value").as("purchase_value"))
+    val clicks = e.filter(col("event_type") === "click")
+      .select(col("user_id"), col("ts").as("click_ts"), col("event_id").as("click_id"))
+    // asofJoin splits by (user, day) only when the inputs outgrow one
+    // partition, so one hyperactive user cannot own a whole task at
+    // 100 TB; below that, one per-key window (same rows, spec-pinned)
+    graft.operators.AsOf.asofJoin(
+      purchases, rewrite(clicks), key = "user_id", leftTs = "purchase_ts",
+      rightTs = "click_ts")
+      .select(col("user_id"), col("purchase_id"), col("purchase_ts"),
+        col("purchase_value"),
+        col("asof.click_id").as("click_id"),
+        col("asof.click_ts").as("click_ts"))
+  }
 
   /** Side tables Verify writes under `<outDir>/_tables/<name>` (parquet) so
     * the DuckDB oracle can independently re-check the RELATIONAL stages of
@@ -1020,19 +988,14 @@ object SparkEntry {
     * query and its materialization compute identical intermediate data. */
   def materializations: Map[String, (SparkSession, String) => DataFrame] = Map(
     "ext_modules" -> ((s, dir) =>
-      ExtractPipeline.modules(runExtraction(s, dir)).toDF()
-        .withColumn("module",
-          concat_ws("|", col("module_type"), concat_ws("|", col("zones"))))),
+      withModuleKey(ExtractPipeline.modules(runExtraction(s, dir)).toDF())),
     "ext_clean" -> ((s, dir) =>
       ExtractPipeline.cleanTurns(runExtraction(s, dir)).toDF().drop("spans")),
     "ext_errors" -> ((s, dir) =>
       ExtractPipeline.errors(runExtraction(s, dir)).toDF()),
     "ext_entities" -> ((s, dir) =>
       ExtractPipeline.headerEntities(runExtraction(s, dir)).toDF()),
-    "ext_modules_planted" -> ((s, dir) =>
-      plantedModules(s, dir).toDF()
-        .withColumn("module",
-          concat_ws("|", col("module_type"), concat_ws("|", col("zones"))))),
+    "ext_modules_planted" -> ((s, dir) => withModuleKey(plantedModules(s, dir).toDF())),
     "ext_errors_after" -> ((s, dir) => skipRuleOutcome(s, dir)._2.toDF()),
     "skip_rules" -> ((s, dir) => {
       import s.implicits._
@@ -1050,8 +1013,7 @@ object SparkEntry {
       bpeVocabRows(s, dir).toDF("token", "token_id")
     }),
     "transcripts_raw" -> ((s, dir) =>
-      ExtractPipeline.transcripts(s, nConvsFor(dir),
-        s.sparkContext.defaultParallelism).toDF()
+      transcriptsFor(s, dir).toDF()
         .select("conv_id", "turn_idx", "role", "tool", "ts")),
     "dim_layout" -> ((s, _) => ExtractPipeline.layoutDim(s)),
     "dim_catalogs" -> ((s, _) => ExtractPipeline.catalogDim(s)),
@@ -1062,43 +1024,36 @@ object SparkEntry {
       Dedup.simhashSignatures(plantedDocs(s, dir), "doc_id", "text")),
     "simhash_cands" -> ((s, dir) =>
       Dedup.simhashCandidates(
-        Dedup.simhashSignatures(plantedDocs(s, dir), "doc_id", "text"), maxDist = 6)
+        Dedup.simhashSignatures(plantedDocs(s, dir), "doc_id", "text"),
+        maxDist = SimhashMaxDist)
         .select("id_a", "id_b")),
-    "emb_planted" -> ((s, dir) => withPlantedEmbDups(
-      load(s, dir, "embeddings").select(col("vec_id"), col("embedding")))),
+    "emb_planted" -> ((s, dir) => plantedEmb(s, dir)),
     "emb_cands" -> ((s, dir) =>
-      Dedup.embeddingCandidates(
-        withPlantedEmbDups(
-          load(s, dir, "embeddings").select(col("vec_id"), col("embedding"))),
-        "vec_id", "embedding", dim = 64)
+      Dedup.embeddingCandidates(plantedEmb(s, dir), "vec_id", "embedding", dim = EmbDim)
         .select("id_a", "id_b")),
+    // the oracle re-ranks each ANN candidate set below, so each shares its
+    // query's settings
     "ann_lsh_cands" -> ((s, dir) => {
-      // params MUST mirror q45_ann_lsh_topk exactly — the oracle re-ranks
-      // this candidate set
       val e = embCorpus(s, dir)
       Similarity.lshCandidates(e, "vec_id", "embedding", annQueries(e), "qid", "qv",
-        dim = 64, nBits = 6, nTables = 10).select("query_id", "id")
+        dim = EmbDim, nBits = LshBits, nTables = LshTables).select("query_id", "id")
     }),
     "ann_ivf_cands" -> ((s, dir) => {
-      // params MUST mirror q47_ann_ivf_topk exactly
       val e = embCorpus(s, dir)
-      val model = graft.operators.Ivf.fit(e, "vec_id", "embedding", k = 8)
       graft.operators.Ivf.candidates(e, "vec_id", "embedding",
-        annQueries(e), "qid", "qv", model, probes = 7).select("query_id", "id")
+        annQueries(e), "qid", "qv", ivfModel(e), probes = IvfProbes).select("query_id", "id")
     }),
     "ann_pq_cands" -> ((s, dir) => {
-      // params MUST mirror q69_ann_pq_topk exactly (fit is deterministic,
-      // so refitting reproduces the identical model and candidate set)
+      // fit is deterministic, so refitting reproduces q69's model and
+      // candidate set
       val e = embCorpus(s, dir)
-      val model = graft.operators.Pq.fit(e, "vec_id", "embedding",
-        m = 16, ksub = 32)
       graft.operators.Pq.candidates(e, "vec_id", "embedding",
-        annQueries(e), "qid", "qv", model, r = 128).select("query_id", "id")
+        annQueries(e), "qid", "qv", pqModel(e), r = PqRerank).select("query_id", "id")
     }),
     "media_features" -> ((s, dir) =>
       Multimodal.decode(mediaTable(s, dir)).toDF()),
     "corpus_keepers" -> ((s, dir) =>
-      Dedup.dedupCorpus(plantedDocs(s, dir), "doc_id", "text", threshold = 0.7)
+      Dedup.dedupCorpus(plantedDocs(s, dir), "doc_id", "text", threshold = JaccardThreshold)
         .select("doc_id"))
   )
 
@@ -1107,6 +1062,75 @@ object SparkEntry {
     * actual output directory at dump time. */
   private def t(name: String): String =
     s"read_parquet('{OUT}/_tables/$name/*.parquet')"
+
+  /** q07's and q27's oracle: gaps in the distinct floored order prices. */
+  private def priceGapsSql: String =
+    """SELECT prev AS gap_start, k AS gap_end, k - prev - 1 AS missing
+      |FROM (SELECT k, lag(k) OVER (ORDER BY k) AS prev
+      |      FROM (SELECT DISTINCT CAST(FLOOR(o_totalprice) AS BIGINT) AS k
+      |            FROM orders) d) t
+      |WHERE prev IS NOT NULL AND k - prev > 1""".stripMargin
+
+  /** q20's and q50's oracle: first-wins module dedup over `table`. */
+  private def firstModulesSql(table: String): String =
+    s"""SELECT conv_id, turn_idx, block_ordinal, row_ordinal, module_ordinal,
+       |  module_type, array_to_string(zones, '|') AS zones, module_str,
+       |  span_start, span_end, module
+       |FROM (SELECT *, row_number() OVER (PARTITION BY conv_id, module
+       |    ORDER BY turn_idx, block_ordinal, row_ordinal, module_ordinal) AS rn
+       |  FROM ${t(table)}) d
+       |WHERE rn = 1""".stripMargin
+
+  /** q29's and q52's oracle: both reassemblies are held to one string_agg. */
+  private def conversationTextSql: String =
+    s"""SELECT conv_id, count(*) AS prose_turns,
+       |  string_agg(clean_text, chr(10) || chr(10) ORDER BY turn_idx)
+       |    AS conversation_text,
+       |  CAST(length(string_agg(clean_text, chr(10) || chr(10)
+       |    ORDER BY turn_idx)) AS INTEGER) AS n_chars
+       |FROM ${t("ext_clean")} WHERE length(clean_text) > 0
+       |GROUP BY conv_id""".stripMargin
+
+  /** The `sh` CTE of the q41/q57 oracles: distinct word 3-shingles of the
+    * planted documents. */
+  private def plantedShinglesCte: String =
+    s"""WITH sh AS (SELECT doc_id, list_distinct(CASE WHEN len(words) >= 3
+       |    THEN [array_to_string(words[i:i+2], ' ') for i in range(1, len(words) - 1)]
+       |    ELSE [array_to_string(words, ' ')] END) AS s
+       |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS words
+       |        FROM ${t("docs_planted")}) w)""".stripMargin
+
+  /** The shared ANN contract of q45/q47/q69: DuckDB exactly re-ranks the
+    * engine's materialized candidate set `cands` against the embeddings. */
+  private def reRankSql(cands: String): String =
+    s"""SELECT query_id, id, round(cos, 6) AS cos, rank FROM (
+       |  SELECT c.query_id, c.id,
+       |    list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
+       |      CAST(q.embedding AS DOUBLE[])) AS cos,
+       |    row_number() OVER (PARTITION BY c.query_id
+       |      ORDER BY list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
+       |        CAST(q.embedding AS DOUBLE[])) DESC, c.id) AS rank
+       |  FROM ${t(cands)} c
+       |  JOIN embeddings e ON c.id = e.vec_id
+       |  JOIN embeddings q ON c.query_id = q.vec_id) v
+       |WHERE rank <= 10""".stripMargin
+
+  /** q59's packing cells over a CTE `t` of (doc_id, shard, n_tokens), which
+    * q66 reuses with its BPE counts: each doc's token offset in its shard,
+    * and the `window`-token pack it starts in. */
+  private def packingSql(window: Long): String =
+    s"""c AS (SELECT doc_id, shard, n_tokens,
+       |    coalesce(sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+       |      AS tok_start,
+       |    row_number() OVER (PARTITION BY shard ORDER BY doc_id) - 1
+       |      AS pack_pos
+       |  FROM t)
+       |SELECT doc_id, CAST(shard AS BIGINT) AS shard, n_tokens,
+       |  CAST(tok_start AS BIGINT) AS tok_start,
+       |  CAST(shard * 1099511627776 + tok_start // $window AS BIGINT) AS pack_id,
+       |  CAST(pack_pos AS BIGINT) AS pack_pos
+       |FROM c""".stripMargin
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables (driver-registered sf tables like `lineitem`,
@@ -1141,24 +1165,14 @@ object SparkEntry {
         |  SELECT user_id, event_id, event_type, value,
         |    row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
         |  FROM events) t WHERE rn = 1""".stripMargin,
-    "q07_window_gap_audit" ->
-      """SELECT prev AS gap_start, k AS gap_end, k - prev - 1 AS missing
-        |FROM (SELECT k, lag(k) OVER (ORDER BY k) AS prev
-        |      FROM (SELECT DISTINCT CAST(FLOOR(o_totalprice) AS BIGINT) AS k
-        |            FROM orders) d) t
-        |WHERE prev IS NOT NULL AND k - prev > 1""".stripMargin,
+    "q07_window_gap_audit" -> priceGapsSql,
     "q08_topk_per_group" ->
       """SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
         |  SELECT o_custkey, o_orderkey, o_totalprice,
         |    row_number() OVER (PARTITION BY o_custkey
         |      ORDER BY o_totalprice DESC, o_orderkey) AS rn
         |  FROM orders) t WHERE rn <= 2""".stripMargin,
-    "q27_gap_audit_scalable" ->
-      """SELECT prev AS gap_start, k AS gap_end, k - prev - 1 AS missing
-        |FROM (SELECT k, lag(k) OVER (ORDER BY k) AS prev
-        |      FROM (SELECT DISTINCT CAST(FLOOR(o_totalprice) AS BIGINT) AS k
-        |            FROM orders) d) t
-        |WHERE prev IS NOT NULL AND k - prev > 1""".stripMargin,
+    "q27_gap_audit_scalable" -> priceGapsSql,
     "q48_sessionize" ->
       """SELECT user_id, session_id, count(*) AS n_events,
         |  min(ts) AS session_start, max(ts) AS session_end,
@@ -1346,26 +1360,12 @@ object SparkEntry {
         |WHERE rank <= 10""".stripMargin,
 
     // ---- extraction family: SQL over the materialized extraction output ----
-    "q20_extract_modules" ->
-      s"""SELECT conv_id, turn_idx, block_ordinal, row_ordinal, module_ordinal,
-         |  module_type, array_to_string(zones, '|') AS zones, module_str,
-         |  span_start, span_end, module
-         |FROM (SELECT *, row_number() OVER (PARTITION BY conv_id, module
-         |    ORDER BY turn_idx, block_ordinal, row_ordinal, module_ordinal) AS rn
-         |  FROM ${t("ext_modules")}) d
-         |WHERE rn = 1""".stripMargin,
+    "q20_extract_modules" -> firstModulesSql("ext_modules"),
     "q51_salted_agg" ->
       """SELECT user_id, round(sum(value), 4) AS total_value,
         |  count(*) AS count
         |FROM events GROUP BY user_id""".stripMargin,
-    "q50_dedup_modules_planted" ->
-      s"""SELECT conv_id, turn_idx, block_ordinal, row_ordinal, module_ordinal,
-         |  module_type, array_to_string(zones, '|') AS zones, module_str,
-         |  span_start, span_end, module
-         |FROM (SELECT *, row_number() OVER (PARTITION BY conv_id, module
-         |    ORDER BY turn_idx, block_ordinal, row_ordinal, module_ordinal) AS rn
-         |  FROM ${t("ext_modules_planted")}) d
-         |WHERE rn = 1""".stripMargin,
+    "q50_dedup_modules_planted" -> firstModulesSql("ext_modules_planted"),
     "q21_extract_clean_text" ->
       s"""SELECT conv_id, turn_idx, clean_text, n_blocks_total, n_blocks_kept
          |FROM ${t("ext_clean")} WHERE length(clean_text) > 0""".stripMargin,
@@ -1431,22 +1431,8 @@ object SparkEntry {
          |  coalesce(a.errors_after, 0) AS errors_after,
          |  (SELECT count(*) FROM ${t("skip_rules")}) AS skip_rules
          |FROM b LEFT JOIN a USING (code)""".stripMargin,
-    "q52_conversation_agg" ->
-      s"""SELECT conv_id, count(*) AS prose_turns,
-         |  string_agg(clean_text, chr(10) || chr(10) ORDER BY turn_idx)
-         |    AS conversation_text,
-         |  CAST(length(string_agg(clean_text, chr(10) || chr(10)
-         |    ORDER BY turn_idx)) AS INTEGER) AS n_chars
-         |FROM ${t("ext_clean")} WHERE length(clean_text) > 0
-         |GROUP BY conv_id""".stripMargin,
-    "q29_conversation_text" ->
-      s"""SELECT conv_id, count(*) AS prose_turns,
-         |  string_agg(clean_text, chr(10) || chr(10) ORDER BY turn_idx)
-         |    AS conversation_text,
-         |  CAST(length(string_agg(clean_text, chr(10) || chr(10)
-         |    ORDER BY turn_idx)) AS INTEGER) AS n_chars
-         |FROM ${t("ext_clean")} WHERE length(clean_text) > 0
-         |GROUP BY conv_id""".stripMargin,
+    "q52_conversation_agg" -> conversationTextSql,
+    "q29_conversation_text" -> conversationTextSql,
 
     "q62_transcript_shape" ->
       s"""WITH l AS (SELECT conv_id, role, tool, ts,
@@ -1468,22 +1454,11 @@ object SparkEntry {
          |  (epoch_us(max(ts)) - epoch_us(min(ts))) // 1000000 AS span_secs
          |FROM l GROUP BY conv_id""".stripMargin,
     "q59_sequence_packing" ->
-      """WITH t AS (SELECT doc_id, doc_id % 8 AS shard,
-        |    CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT)
-        |      AS n_tokens
-        |  FROM documents),
-        |c AS (SELECT doc_id, shard, n_tokens,
-        |    coalesce(sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS tok_start,
-        |    row_number() OVER (PARTITION BY shard ORDER BY doc_id) - 1
-        |      AS pack_pos
-        |  FROM t)
-        |SELECT doc_id, CAST(shard AS BIGINT) AS shard, n_tokens,
-        |  CAST(tok_start AS BIGINT) AS tok_start,
-        |  CAST(shard * 1099511627776 + tok_start // 512 AS BIGINT) AS pack_id,
-        |  CAST(pack_pos AS BIGINT) AS pack_pos
-        |FROM c""".stripMargin,
+      s"""WITH t AS (SELECT doc_id, doc_id % 8 AS shard,
+         |    CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT)
+         |      AS n_tokens
+         |  FROM documents),
+         |${packingSql(512L)}""".stripMargin,
     "q60_redact_pii" ->
       """WITH p AS (SELECT doc_id,
         |    CASE WHEN doc_id % 7 = 0 THEN text || ' contact user'
@@ -1648,18 +1623,7 @@ object SparkEntry {
          |      AS n_tokens
          |  FROM steps
          |  WHERE r = (SELECT count(*) FROM ${t("bpe_merges")})),
-         |c AS (SELECT doc_id, shard, n_tokens,
-         |    coalesce(sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-         |      AS tok_start,
-         |    row_number() OVER (PARTITION BY shard ORDER BY doc_id) - 1
-         |      AS pack_pos
-         |  FROM t)
-         |SELECT doc_id, CAST(shard AS BIGINT) AS shard, n_tokens,
-         |  CAST(tok_start AS BIGINT) AS tok_start,
-         |  CAST(shard * 1099511627776 + tok_start // $BpePackWindow AS BIGINT) AS pack_id,
-         |  CAST(pack_pos AS BIGINT) AS pack_pos
-         |FROM c""".stripMargin,
+         |${packingSql(BpePackWindow)}""".stripMargin,
 
     // q65: replay the paragraph synthesis (10-word chunks, planted
     // boilerplate in every 5th doc), count paragraphs corpus-wide, strip
@@ -1690,11 +1654,7 @@ object SparkEntry {
 
     // ---- near-dup verify stages over materialized candidate pairs ----------
     "q41_dedup_minhash" ->
-      s"""WITH sh AS (SELECT doc_id, list_distinct(CASE WHEN len(words) >= 3
-         |    THEN [array_to_string(words[i:i+2], ' ') for i in range(1, len(words) - 1)]
-         |    ELSE [array_to_string(words, ' ')] END) AS s
-         |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS words
-         |        FROM ${t("docs_planted")}) w)
+      s"""$plantedShinglesCte
          |SELECT id_a, id_b, round(j, 6) AS jaccard FROM (
          |  SELECT c.id_a, c.id_b,
          |    CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
@@ -1702,30 +1662,26 @@ object SparkEntry {
          |  FROM ${t("minhash_cands")} c
          |  JOIN sh a ON c.id_a = a.doc_id
          |  JOIN sh b ON c.id_b = b.doc_id) v
-         |WHERE j >= 0.7""".stripMargin,
+         |WHERE j >= $JaccardThreshold""".stripMargin,
     // STRONGER than q41's oracle: the DuckDB side is the full ALL-PAIRS
     // Jaccard join (feasible at oracle scale), so a candidate-generation
     // false NEGATIVE — not just a bad verify — breaks the hash, for either
     // physical strategy.
     "q57_dedup_ngram_jaccard" ->
-      s"""WITH sh AS (SELECT doc_id, list_distinct(CASE WHEN len(words) >= 3
-         |    THEN [array_to_string(words[i:i+2], ' ') for i in range(1, len(words) - 1)]
-         |    ELSE [array_to_string(words, ' ')] END) AS s
-         |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS words
-         |        FROM ${t("docs_planted")}) w)
+      s"""$plantedShinglesCte
          |SELECT id_a, id_b, round(j, 6) AS jaccard FROM (
          |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
          |    CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
          |      / len(list_distinct(list_concat(a.s, b.s))) AS j
          |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id) v
-         |WHERE j >= 0.7""".stripMargin,
+         |WHERE j >= $JaccardThreshold""".stripMargin,
     "q42_dedup_simhash" ->
       s"""SELECT c.id_a, c.id_b,
          |  CAST(bit_count(xor(sa.sh, sb.sh)) AS BIGINT) AS dist
          |FROM ${t("simhash_cands")} c
          |JOIN ${t("simhash_sigs")} sa ON c.id_a = sa.id
          |JOIN ${t("simhash_sigs")} sb ON c.id_b = sb.id
-         |WHERE bit_count(xor(sa.sh, sb.sh)) <= 6""".stripMargin,
+         |WHERE bit_count(xor(sa.sh, sb.sh)) <= $SimhashMaxDist""".stripMargin,
     "q43_dedup_embedding" ->
       s"""SELECT id_a, id_b, round(cos, 6) AS cos FROM (
          |  SELECT c.id_a, c.id_b,
@@ -1742,45 +1698,12 @@ object SparkEntry {
          |FROM ${t("corpus_keepers")}""".stripMargin,
 
     // ---- ANN re-rank stages over materialized candidate sets ---------------
-    "q45_ann_lsh_topk" ->
-      s"""SELECT query_id, id, round(cos, 6) AS cos, rank FROM (
-         |  SELECT c.query_id, c.id,
-         |    list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-         |      CAST(q.embedding AS DOUBLE[])) AS cos,
-         |    row_number() OVER (PARTITION BY c.query_id
-         |      ORDER BY list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-         |        CAST(q.embedding AS DOUBLE[])) DESC, c.id) AS rank
-         |  FROM ${t("ann_lsh_cands")} c
-         |  JOIN embeddings e ON c.id = e.vec_id
-         |  JOIN embeddings q ON c.query_id = q.vec_id) v
-         |WHERE rank <= 10""".stripMargin,
-    "q47_ann_ivf_topk" ->
-      s"""SELECT query_id, id, round(cos, 6) AS cos, rank FROM (
-         |  SELECT c.query_id, c.id,
-         |    list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-         |      CAST(q.embedding AS DOUBLE[])) AS cos,
-         |    row_number() OVER (PARTITION BY c.query_id
-         |      ORDER BY list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-         |        CAST(q.embedding AS DOUBLE[])) DESC, c.id) AS rank
-         |  FROM ${t("ann_ivf_cands")} c
-         |  JOIN embeddings e ON c.id = e.vec_id
-         |  JOIN embeddings q ON c.query_id = q.vec_id) v
-         |WHERE rank <= 10""".stripMargin,
+    "q45_ann_lsh_topk" -> reRankSql("ann_lsh_cands"),
+    "q47_ann_ivf_topk" -> reRankSql("ann_ivf_cands"),
     // q69: same re-rank contract as q45/q47 — DuckDB exactly re-ranks the
     // engine's materialized PQ candidate set (ADC recall itself is gated
     // in the bench, not the oracle)
-    "q69_ann_pq_topk" ->
-      s"""SELECT query_id, id, round(cos, 6) AS cos, rank FROM (
-         |  SELECT c.query_id, c.id,
-         |    list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-         |      CAST(q.embedding AS DOUBLE[])) AS cos,
-         |    row_number() OVER (PARTITION BY c.query_id
-         |      ORDER BY list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-         |        CAST(q.embedding AS DOUBLE[])) DESC, c.id) AS rank
-         |  FROM ${t("ann_pq_cands")} c
-         |  JOIN embeddings e ON c.id = e.vec_id
-         |  JOIN embeddings q ON c.query_id = q.vec_id) v
-         |WHERE rank <= 10""".stripMargin,
+    "q69_ann_pq_topk" -> reRankSql("ann_pq_cands"),
 
     // ---- multimodal feature aggregation over decoded rows ------------------
     "q46_multimodal_features" ->
