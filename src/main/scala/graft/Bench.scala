@@ -42,7 +42,7 @@ object Bench {
     .getOrCreate()
 
   /** Time one query end-to-end (plan + execute + consume). */
-  def time(f: => DataFrame): Double = {
+  private def time(f: => DataFrame): Double = {
     val t0 = System.nanoTime()
     val df = f
     df.write.format("noop").mode("overwrite").save()

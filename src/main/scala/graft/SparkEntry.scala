@@ -67,7 +67,7 @@ object SparkEntry {
   /** Plant near-duplicates: a copy of each doc with every 20th token
     * replaced, ids offset by 1,000,000 — known ground-truth pairs for the
     * near-dup detectors at any scale factor. */
-  def withPlantedTextDups(docs: DataFrame): DataFrame = {
+  private def withPlantedTextDups(docs: DataFrame): DataFrame = {
     val perturbed = docs.select(
       (col("doc_id") + 1000000L).as("doc_id"),
       concat_ws(" ", transform(split(trim(col("text")), "\\s+"),

@@ -76,7 +76,7 @@ object Blocker {
   /** Split turn text into blocks on blank lines, tracking char offsets.
     * No substrings allocated; per block the only allocations are the
     * RawBlock and its exact-size packed-long line array. */
-  def splitBlocks(text: String): Vector[RawBlock] =
+  private[core] def splitBlocks(text: String): Vector[RawBlock] =
     splitBlocks(text, new Tokenizer.Scratch)
 
   /** Scratch form for hot partition loops: the growable line buffer is

@@ -41,16 +41,16 @@ object Tokenizer {
     * is_valid_content_row analog (diary_structure_detector.py:196-198). */
   val MinRowChars = 3
 
-  final case class RowString(chars: String, srcOffsets: Array[Int])
+  private[core] final case class RowString(chars: String, srcOffsets: Array[Int])
 
   /** Build the row string + per-character source offsets for one content line.
     * `lineStart` is the line's offset within the turn text. */
-  def rowString(line: String, lineStart: Int): RowString =
+  private[core] def rowString(line: String, lineStart: Int): RowString =
     rowStringRange(line, 0, line.length, lineStart)
 
   /** Range form: tokenizes text[lo, hi); emitted source offsets are
     * offsetBase + (position within the range) — avoids per-line substrings. */
-  def rowStringRange(text: String, lo: Int, hi: Int, offsetBase: Int): RowString = {
+  private[core] def rowStringRange(text: String, lo: Int, hi: Int, offsetBase: Int): RowString = {
     val n = hi - lo
     // upper bound: payload chars + gap placeholders (< n/2 each) + pad 11
     val cap = n + Stride + 1
@@ -223,7 +223,7 @@ object Tokenizer {
   }
 
   /** Fixed-stride slicing with span reconstruction (diary_ocr.py:267-277). */
-  def sliceRow(row: RowString): Vector[ModuleSlice] = {
+  private[core] def sliceRow(row: RowString): Vector[ModuleSlice] = {
     val len = row.chars.length
     if (len == 0) return Vector.empty
     val numModules = (len + Stride - 1) / Stride // ceil(len/11)

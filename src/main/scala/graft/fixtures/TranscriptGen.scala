@@ -335,7 +335,7 @@ object TranscriptGen {
   }
 
   /** All turns of one conversation. */
-  def conversation(seed: Long, nConvs: Long, convIdx: Long): Seq[Turn] =
+  private def conversation(seed: Long, nConvs: Long, convIdx: Long): Seq[Turn] =
     (0 until turnsPerConv(nConvs, convIdx)).map(t => turn(seed, nConvs, convIdx, t))
 
   /** Driver-side corpus for tests (small nConvs only). */

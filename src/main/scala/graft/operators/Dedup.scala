@@ -104,7 +104,7 @@ object Dedup {
     *    job — the scans overlap across the cluster and nothing is
     *    materialized. Bench corpora with planted duplicates have ~80% of
     *    docs in some pair, where this is the fastest shape. */
-  private[graft] def verifyJaccard(
+  private def verifyJaccard(
       docs: DataFrame, idCol: String, textCol: String,
       candidates: DataFrame, threshold: Double, shingleK: Int = 3): DataFrame = {
     val base = docs.select(col(idCol).cast("long").as("id"), col(textCol).as("text"))

@@ -35,7 +35,7 @@ import graft.fixtures.TranscriptGen
   */
 object ExtractPipeline {
 
-  val Seed: Long = TranscriptGen.DefaultSeed
+  private val Seed: Long = TranscriptGen.DefaultSeed
 
   /** Broadcast extraction context: entity-id set + skip rules. Catalogs are
     * compile-time data (Catalogs.tables) and ship inside the closure. */
