@@ -1,20 +1,20 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-import graft.core._
-import graft.fixtures.TranscriptGen
-import graft.operators.{Dedup, Multimodal, Similarity, TextStats}
 import graft.pipeline.ExtractPipeline
+import graft.queries.{EventJoins, Extraction, NearDupAnn, Relational, TextCuration}
 
-/** Driver contract: queries, side tables and oracle SQL (README "Layout"; SURVEY.md §7). */
+/** Driver contract: queries, side tables and oracle SQL (README "Layout";
+  * SURVEY.md §7). Each query states its name, Spark body and oracle SQL
+  * once, in its family's table under `graft.queries`; this object holds the
+  * plumbing they share and the three maps built from those tables. */
 object SparkEntry {
 
   /** Deterministic corpus size per scale-factor directory (extraction queries
     * synthesize their own transcript input — no external data). */
-  def nConvsFor(sfDir: String): Long =
+  private[graft] def nConvsFor(sfDir: String): Long =
     if (sfDir.contains("sf0.1")) 2500L
     else if (sfDir.contains("sf0.01")) 400L
     else 60L
@@ -64,25 +64,8 @@ object SparkEntry {
     spark.read.schema(schema).parquet(path)
   }
 
-  /** Plant near-duplicates: a copy of each doc with every 20th token
-    * replaced, ids offset by 1,000,000 — known ground-truth pairs for the
-    * near-dup detectors at any scale factor. */
-  private def withPlantedTextDups(docs: DataFrame): DataFrame = {
-    val perturbed = docs.select(
-      (col("doc_id") + 1000000L).as("doc_id"),
-      concat_ws(" ", transform(split(trim(col("text")), "\\s+"),
-        (t, i) => when((i + 1) % 20 === 0, lit("zz")).otherwise(t))).as("text"))
-    docs.select(col("doc_id"), col("text")).union(perturbed)
-  }
-
-  /** Full extraction run (shared by the extraction queries). */
-  def runExtraction(spark: SparkSession, sfDir: String) = {
-    val ctx = ExtractPipeline.makeContext(TranscriptGen.allEntityIds)
-    ExtractPipeline.extract(transcriptsFor(spark, sfDir), ctx)
-  }
-
   /** The synthetic transcripts of `sfDir`, one partition per core. */
-  private def transcriptsFor(s: SparkSession, sfDir: String) =
+  private[graft] def transcriptsFor(s: SparkSession, sfDir: String) =
     ExtractPipeline.transcripts(s, nConvsFor(sfDir), s.sparkContext.defaultParallelism)
 
   /** One value for the last (session, sfDir) asked for: Verify and Bench
@@ -131,853 +114,52 @@ object SparkEntry {
     }
   }
 
-  /** q28's skip-rule fixed point, shared with the Verify materializations
-    * (ext_errors_after / skip_rules must describe the SAME run the q28
-    * result aggregates). Rule derivation is distributed
-    * (ExtractPipeline.deriveSkipRules) — raw error rows are never collected.
-    * The slot releases both pinned error Datasets on eviction. */
-  private type SkipOutcome =
-    (Dataset[ExtractionError], Dataset[ExtractionError], Set[SkipRule])
-  private val skipOutcomes = new Slot[SkipOutcome]({ case (first, last, _) =>
-    first.unpersist()
-    if (last ne first) last.unpersist()
-  })
-
-  def skipRuleOutcome(s: SparkSession, dir: String): SkipOutcome = skipOutcomes(s, dir) {
-    val turns = transcriptsFor(s, dir)
-    val storage = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val ctx0 = ExtractPipeline.makeContext(TranscriptGen.allEntityIds)
-    val firstErrors = ExtractPipeline.errors(ExtractPipeline.extract(turns, ctx0))
-      .persist(storage)
-    var rules = Set.empty[SkipRule]
-    var lastErrors = firstErrors
-    var changed = true
-    var iter = 0
-    while (changed && iter < 4) {
-      val (derived, overflowed) = ExtractPipeline.deriveSkipRules(lastErrors)
-      if (overflowed)
-        System.err.println(
-          "[q28] skip-rule cap hit — rules beyond the cap were dropped this round")
-      val fresh = derived -- rules
-      changed = fresh.nonEmpty
-      if (changed) {
-        rules ++= fresh
-        val ctx1 = ExtractPipeline.makeContext(TranscriptGen.allEntityIds, rules)
-        val next = ExtractPipeline.errors(ExtractPipeline.extract(turns, ctx1))
-          .persist(storage)
-        if (lastErrors ne firstErrors) lastErrors.unpersist()
-        lastErrors = next
-      }
-      iter += 1
-    }
-    if (changed)
-      System.err.println(s"[q28] skip-rule fixed point not reached in $iter rounds — " +
-        "rules the last round's errors would add were not derived")
-    (firstErrors, lastErrors, rules)
-  }
-
   /** Flagship query on sf=0.001-equivalent synthetic transcripts; driver
     * smoke-checks rows>0: the deduped, ordered extracted-module table. */
   def entry(spark: SparkSession): DataFrame = {
-    val ex = runExtraction(spark, "sf0.001")
+    val ex = Extraction.runExtraction(spark, "sf0.001")
     ExtractPipeline.ordered(
       ExtractPipeline.dedupModules(ExtractPipeline.modules(ex)))
   }
 
+  /** A materialized side table (see `materializations`) as a DuckDB
+    * read_parquet reference. `{OUT}` is substituted by Verify with the
+    * actual output directory at dump time. */
+  private[graft] def t(name: String): String =
+    s"read_parquet('{OUT}/_tables/$name/*.parquet')"
+
+  /** One query: its Spark body over (session, sfDir), and equivalent ANSI
+    * SQL runnable by DuckDB on the same parquet tables (driver-registered
+    * sf tables like `lineitem`, plus the `materializations` side tables via
+    * `t`). */
+  private[graft] final case class Query(
+      run: (SparkSession, String) => DataFrame, oracleSql: String)
+
+  /** The entries of `tables` as one map. A name stated twice fails here,
+    * naming it, instead of one entry silently replacing the other. */
+  private[graft] def merge[V](tables: Seq[(String, V)]*): Map[String, V] = {
+    val entries = tables.flatten
+    val names = entries.map(_._1)
+    val twice = names.diff(names.distinct).distinct
+    require(twice.isEmpty, s"names stated more than once: ${twice.mkString(", ")}")
+    entries.toMap
+  }
+
+  // lazy: a family object that initializes first calls `t`, which
+  // initializes SparkEntry; building the maps then would read that family's
+  // table while it is still null. A hash Map, not an insertion-ordered one:
+  // Verify writes oracle_sql.json and counts.json in iteration order, which
+  // for a hash Map depends only on the names.
+  private lazy val table = merge(Relational.queries, EventJoins.queries,
+    Extraction.queries, TextCuration.queries, NearDupAnn.queries)
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ---- relational spine over the driver tables (oracle-checked) ----------
-    "q01_agg" -> ((s, dir) => {
-      load(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          sum(col("l_quantity")).as("sum_qty"),
-          sum(col("l_extendedprice")).as("sum_price"),
-          avg(col("l_discount")).as("avg_disc"),
-          count(lit(1)).as("cnt"))
-    }),
-    "q02_filter_pushdown" -> ((s, dir) => {
-      load(s, dir, "lineitem")
-        .filter(col("l_quantity") > 45 && col("l_discount") <= 0.02)
-        .select(col("l_orderkey"), col("l_partkey"), col("l_quantity"))
-    }),
-    "q03_broadcast_join" -> ((s, dir) => {
-      val o = load(s, dir, "orders")
-      val c = load(s, dir, "customer")
-      val n = load(s, dir, "nation")
-      o.join(broadcast(c), o("o_custkey") === c("c_custkey"))
-        .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
-        .groupBy(col("n_name"))
-        .agg(sum(col("o_totalprice")).as("revenue"),
-          count(lit(1)).as("n_orders"))
-    }),
-    "q04_anti_join" -> ((s, dir) => {
-      // J4 resume analog: customers with no urgent order yet.
-      val c = load(s, dir, "customer")
-      val o = load(s, dir, "orders").filter(col("o_orderpriority").startsWith("1"))
-      c.join(o.select(col("o_custkey")), c("c_custkey") === o("o_custkey"), "left_anti")
-        .select(col("c_custkey"), col("c_name"))
-    }),
-    "q05_semi_join" -> ((s, dir) => {
-      val c = load(s, dir, "customer")
-      val o = load(s, dir, "orders").filter(col("o_totalprice") > 100000)
-      c.join(o.select(col("o_custkey")), c("c_custkey") === o("o_custkey"), "left_semi")
-        .select(col("c_custkey"), col("c_mktsegment"))
-    }),
-    "q06_dedup_first_wins" -> ((s, dir) => {
-      // first event per user by (ts, event_id): min_by keeps partial agg.
-      val e = load(s, dir, "events")
-      e.groupBy(col("user_id"))
-        .agg(min_by(struct(col("event_id"), col("event_type"), col("value")),
-          struct(col("ts"), col("event_id"))).as("first"))
-        .select(col("user_id"), col("first.event_id").as("event_id"),
-          col("first.event_type").as("event_type"), col("first.value").as("value"))
-    }),
-    "q07_window_gap_audit" -> ((s, dir) => {
-      // O5 analog (annuary_data.py:81-89): missing-id gap detection. Served
-      // by the scale-safe two-phase audit — the historical Window.orderBy
-      // (single-task) form is retired from the shipped surface and lives in
-      // OperatorsSpec as the differential oracle for GapAudit.gaps.
-      priceGaps(s, dir)
-    }),
-    "q08_topk_per_group" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val o = load(s, dir, "orders")
-      val w = Window.partitionBy(col("o_custkey"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      o.withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 2)
-        .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"),
-          col("rn").cast("long").as("rn"))
-    }),
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    table.map { case (name, q) => name -> q.run }
 
-    // ---- extraction pipeline over synthetic transcripts (rows-only) --------
-    "q20_extract_modules" -> ((s, dir) => {
-      val ex = runExtraction(s, dir)
-      ExtractPipeline.ordered(
-        ExtractPipeline.dedupModules(ExtractPipeline.modules(ex)))
-        .withColumn("zones", concat_ws("|", col("zones")))
-    }),
-    "q21_extract_clean_text" -> ((s, dir) => {
-      val ex = runExtraction(s, dir)
-      ExtractPipeline.cleanTurns(ex).toDF()
-        .select(col("conv_id"), col("turn_idx"), col("clean_text"),
-          col("n_blocks_total"), col("n_blocks_kept"))
-        .filter(length(col("clean_text")) > 0)
-    }),
-    "q22_extract_errors" -> ((s, dir) => {
-      val ex = runExtraction(s, dir)
-      ExtractPipeline.errors(ex).groupBy(col("code")).count()
-    }),
-    "q23_extract_entities" -> ((s, dir) => {
-      val ex = runExtraction(s, dir)
-      ExtractPipeline.dedupEntities(ExtractPipeline.headerEntities(ex))
-        .toDF().orderBy(col("num_id"))
-    }),
-    "q24_extract_metrics" -> ((s, dir) => {
-      val ex = runExtraction(s, dir)
-      ExtractPipeline.partitionMetrics(ex).toDF()
-        .agg(sum(col("turns")).as("turns"),
-          sum(col("blocks_total")).as("blocks_total"),
-          sum(col("blocks_kept")).as("blocks_kept"),
-          sum(col("modules_ok")).as("modules_ok"),
-          sum(col("modules_err")).as("modules_err"),
-          sum(col("span_chars")).as("span_chars"))
-    }),
-    "q26_entity_status" -> ((s, dir) => {
-      // the reference's --status audit: counts by kind + missing-id gap
-      // ranges with the 0/8999 start sentinels (annuary_data.py:36-44,81-89)
-      val ex = runExtraction(s, dir)
-      val entities = ExtractPipeline.dedupEntities(
-        ExtractPipeline.headerEntities(ex)).toDF()
-      graft.operators.GapAudit.entityStatus(entities, s)
-        .orderBy(col("kind"), col("gap_start"))
-    }),
-    "q27_gap_audit_scalable" -> ((s, dir) => {
-      // two-phase distributed gap audit (no single-partition window) over
-      // the same key space as q07: results must agree with the window form
-      priceGaps(s, dir)
-    }),
-
-    "q28_skip_rules" -> ((s, dir) => {
-      // X4 analog: a skip-rules config table downgrades tolerated zone
-      // failures to keep-the-raw-string, exactly like the reference's
-      // interactive SKIP protocol (diary_module_parser.py:170-181).
-      // Rule derivation is DISTRIBUTED (distinct skippable triples with an
-      // explicit cap — ExtractPipeline.deriveSkipRules); only the tiny rule
-      // set is ever collected, never raw error rows. The fixed-point loop
-      // stays (a skipped zone can surface new errors in later zones of the
-      // same module, so the reference iterates too) but is driven from the
-      // distinct-triple table each round.
-      val (firstErrors, lastErrors, rules) = skipRuleOutcome(s, dir)
-      val before = firstErrors.groupBy(col("code")).count()
-        .withColumnRenamed("count", "errors_before")
-      val after = lastErrors
-        .groupBy(col("code")).count().withColumnRenamed("count", "errors_after")
-      before.join(after, Seq("code"), "left")
-        .na.fill(0, Seq("errors_after"))
-        .withColumn("skip_rules", lit(rules.size).cast("long"))
-    }),
-
-    "q29_conversation_text" -> ((s, dir) => {
-      // stable intra-conversation reassembly (north rule): clean turn texts
-      // concatenated in turn_idx order per conversation. Bounded-memory
-      // two-phase form (ExtractPipeline.conversationText): the old
-      // sort_array(collect_list(every turn)) buffered an entire
-      // mega-conversation in one aggregation state; now the per-task state
-      // is one partition's StringBuilder + one segment row per partition a
-      // conversation spans.
-      ExtractPipeline.conversationText(proseTurns(s, dir))
-    }),
-    "q52_conversation_agg" -> ((s, dir) => {
-      // the SAME reassembly served by the custom TypedImperativeAggregate
-      // (plans.OrderedConcat) — the aggregate-tier demo, held to the same
-      // DuckDB string_agg oracle as q29
-      ExtractPipeline.conversationTextAgg(proseTurns(s, dir))
-    }),
-    "q48_sessionize" -> ((s, dir) => {
-      // gap-based sessionization over the events stream table — the temporal
-      // twin of the tokenizer's spatial gap grouping (G9): a >30-minute gap
-      // closes a session.
-      import org.apache.spark.sql.expressions.Window
-      val e = load(s, dir, "events")
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      val gapped = e
-        .withColumn("prev_ts", lag(col("ts"), 1).over(w))
-        .withColumn("new_session",
-          when(col("prev_ts").isNull ||
-            unix_timestamp(col("ts")) - unix_timestamp(col("prev_ts")) > 1800, 1)
-            .otherwise(0))
-        .withColumn("session_id",
-          sum(col("new_session")).over(w.rowsBetween(Window.unboundedPreceding, 0)))
-      gapped.groupBy(col("user_id"), col("session_id"))
-        .agg(count(lit(1)).as("n_events"),
-          min(col("ts")).as("session_start"),
-          max(col("ts")).as("session_end"),
-          sum(col("value")).as("total_value"))
-    }),
-
-    // ---- text analysis over documents (oracle-checked) --------------------
-    "q30_text_tokens" -> ((s, dir) => {
-      val d = load(s, dir, "documents")
-      d.select(col("doc_id"),
-        TextStats.tokenCount(col("text")).cast("long").as("n_tokens"),
-        TextStats.subwordCount(col("text")).cast("long").as("n_subwords"))
-    }),
-    "q31_quality_score" -> ((s, dir) => {
-      val d = load(s, dir, "documents")
-      TextStats.qualityColumns(col("text")).foldLeft(d.select(col("doc_id"), col("text"))) {
-        case (df, (name, c)) => df.withColumn(name, c)
-      }.drop("text")
-    }),
-    "q32_lang_id" -> ((s, dir) => {
-      val d = load(s, dir, "documents")
-      val withHits = TextStats.langHitColumns(col("text"))
-        .foldLeft(d.select(col("doc_id"), col("text"))) {
-          case (df, (name, c)) => df.withColumn(name, c)
-        }
-      withHits.withColumn("pred_lang", TextStats.langIdCol(col("text"))).drop("text")
-    }),
-    "q33_fingerprint" -> ((s, dir) => {
-      val d = load(s, dir, "documents")
-      d.select(col("doc_id"), TextStats.fingerprintCol(col("text")).as("fingerprint"))
-    }),
-
-    "q56_asof_join" -> ((s, dir) => purchaseAsOfClick(s, dir, identity)),
-
-    "q74_asof_ties" -> ((s, dir) => purchaseAsOfClick(s, dir, { clicks =>
-      // q56 over clicks with planted ties: every click with event_id % 4 = 0
-      // gains two copies at its (user, ts), ids 1e9 above and below its
-      // own, so the oracle compare sees which tied click asofJoin keeps
-      val planted = clicks.filter(col("click_id") % 4 === 0)
-      clicks
-        .unionByName(planted.withColumn("click_id", col("click_id") + 1000000000L))
-        .unionByName(planted.withColumn("click_id", col("click_id") - 1000000000L))
-    })),
-
-    "q63_funnel_asof" -> ((s, dir) => {
-      // conversion funnel by CHAINED as-of joins: each purchase -> latest
-      // prior click -> latest view prior to that click. The second hop's
-      // left timestamp (c_ts) is null for click-less purchases; SQL null
-      // semantics carry them through unmatched — same as the nested
-      // DuckDB ASOF LEFT JOIN oracle. Each leg keeps its ties: asofJoin
-      // matches the max id of equal-ts rows, as the oracle's GROUP BY does.
-      val e = load(s, dir, "events")
-      def leg(kind: String, ts: String, id: String) =
-        e.filter(col("event_type") === kind)
-          .select(col("user_id"), col("ts").as(ts), col("event_id").as(id))
-      val purchases = e.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id").as("purchase_id"),
-          col("ts").as("p_ts"))
-      val pc = graft.operators.AsOf.asofJoin(
-        purchases, leg("click", "c_ts", "click_id"),
-        key = "user_id", leftTs = "p_ts", rightTs = "c_ts")
-        .select(col("user_id"), col("purchase_id"),
-          col("asof.click_id").as("click_id"), col("asof.c_ts").as("c_ts"))
-      val pcv = graft.operators.AsOf.asofJoin(
-        pc, leg("view", "v_ts", "view_id"),
-        key = "user_id", leftTs = "c_ts", rightTs = "v_ts")
-        .select(col("user_id"), col("click_id"),
-          col("asof.view_id").as("view_id"))
-      pcv.groupBy(col("user_id")).agg(
-        count(lit(1)).as("purchases"),
-        sum(when(col("click_id").isNotNull, 1L).otherwise(0L)).as("with_click"),
-        sum(when(col("view_id").isNotNull, 1L).otherwise(0L)).as("full_funnel"))
-    }),
-    "q58_range_join" -> ((s, dir) => {
-      // incident attribution: every non-error event falling in a 30-minute
-      // window after any error of the same user, aggregated per window.
-      // Bucket width = window length -> interval replication factor 2.
-      // Cent-sums keep the double aggregation bit-stable vs the oracle.
-      val e = load(s, dir, "events")
-      val micros = 1800L * 1000000L
-      // ts is TIMESTAMP_NTZ; the session TZ is UTC in every entry point, so
-      // the LTZ cast makes unix_micros == DuckDB's epoch_us on the naive ts
-      val tsMicros = unix_micros(col("ts").cast("timestamp"))
-      val points = e.filter(col("event_type") =!= "error")
-        .select(col("user_id"), col("event_id"),
-          tsMicros.as("pts"), col("value"))
-      val windows = e.filter(col("event_type") === "error")
-        .select(col("user_id"), col("event_id").as("error_id"),
-          tsMicros.as("w_start"),
-          (tsMicros + micros).as("w_end"))
-      graft.operators.RangeJoin.pointInInterval(
-        points, "pts", windows, "w_start", "w_end", "user_id", micros)
-        .groupBy(col("error_id"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(round(col("value") * 100).cast("long")).as("sum_value_cents"))
-    }),
-
-    // ---- corpus curation: sampling / selection / decontamination -----------
-    "q53_stratified_sample" -> ((s, dir) => {
-      // deterministic md5-coin stratified sample (language rebalancing):
-      // keep ~50% of en, ~10% of everything else; exactly reproducible by
-      // any engine with md5 (the DuckDB oracle recomputes the keep set)
-      graft.operators.Sampling.stratifiedSample(
-        load(s, dir, "documents").select(col("doc_id"), col("lang"), col("source")),
-        "doc_id", "lang", Map("en" -> "8000"), defaultHex = "1999", seed = "s53")
-    }),
-    "q54_quality_topk_per_lang" -> ((s, dir) => {
-      // per-language quality quota: the TopK heap aggregate composed with
-      // the oracle-proven quality score — no window, partial-aggregating
-      val d = load(s, dir, "documents")
-      val score = TextStats.qualityColumns(col("text")).toMap.apply("quality_score")
-      graft.operators.TopK.topKPerGroup(
-        d.select(col("lang"), col("doc_id"), score.as("quality_score")),
-        "lang", "doc_id", "quality_score", 3)
-    }),
-    "q55_decontaminate" -> ((s, dir) => {
-      // benchmark decontamination: drop candidate docs whose fingerprint
-      // collides with the (deterministically chosen) eval split
-      val d = load(s, dir, "documents").select(col("doc_id"), col("text"))
-      // localCheckpoint: fp feeds BOTH join sides — without it the
-      // shingle+md5 fingerprint pipeline (the query's dominant cost) would
-      // execute twice; checkpoint blocks free with the plan (no session pin)
-      val fp = d.select(col("doc_id"),
-        TextStats.fingerprintCol(col("text")).as("fp"),
-        (substring(md5(concat(lit("s55|"), col("doc_id").cast("string"))), 1, 1)
-          === "0").as("is_eval"))
-        .localCheckpoint()
-      graft.operators.Sampling.decontaminate(
-        fp.filter(!col("is_eval")).select(col("doc_id"), col("fp")),
-        fp.filter(col("is_eval")), "fp")
-        .select(col("doc_id"), col("fp"))
-    }),
-
-    "q62_transcript_shape" -> ((s, dir) => {
-      // transcript-shape analytics over the full (conv_id, turn_idx, role,
-      // tool, ts) schema — see Curation.transcriptShape (per-conv windows,
-      // one exchange). Oracle recomputes over materialized transcripts_raw;
-      // the repeat/switch logic is additionally unit-tested on planted
-      // violations (CurationSpec) since the generated corpus's strict role
-      // cycle keeps n_role_repeats at zero.
-      graft.operators.Curation.transcriptShape(transcriptsFor(s, dir).toDF())
-    }),
-    "q59_sequence_packing" -> ((s, dir) => {
-      // concat-and-slice sample packing: per-shard token-stream offsets and
-      // pack ids, reproducible from (doc_id, nShards, window) alone
-      val d = load(s, dir, "documents")
-      graft.operators.Curation.packSequences(
-        d.select(col("doc_id"), col("text")), "doc_id",
-        TextStats.tokenCount(col("text")), window = 512L, nShards = 8)
-        .select(col("doc_id"), col("shard"), col("n_tokens"),
-          col("tok_start"), col("pack_id"), col("pack_pos"))
-    }),
-    "q64_bpe_tokens" -> ((s, dir) => {
-      // REAL BPE token counts: merge table trained once on a bounded
-      // hash-range sample (Bpe.train), broadcast, applied distributed. The
-      // oracle replays the MATERIALIZED merge table over the same text as a
-      // fold of non-overlapping replace()s — '|' and '¶' are the oracle's
-      // token/word separators, so both sides count text with those two
-      // characters stripped (the query pins the BPE math; the operator
-      // itself takes arbitrary text).
-      val d = load(s, dir, "documents")
-      graft.operators.Bpe.tokenCounts(d, "doc_id", bpeText(col("text")), bpeEncoder(s, dir))
-    }),
-    "q68_ngram_decontaminate" -> ((s, dir) => {
-      // GPT-3-style n-gram decontamination: a candidate doc dies if it
-      // shares ANY 13-gram with the (deterministically chosen) eval
-      // split. The synthetic corpus's random word streams never collide
-      // at 13 words, so contamination is PLANTED: a fixed 13-word phrase
-      // appended to every 9th doc and to eval docs divisible by 3 —
-      // partial contamination the q55 whole-doc fingerprint would miss.
-      val phrase = " zq alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"
-      val d = load(s, dir, "documents")
-        .select(col("doc_id"), col("text"), col("lang"), col("source"))
-      val isEval = substring(
-        md5(concat(lit("s68|"), col("doc_id").cast("string"))), 1, 1) === "0"
-      val planted = d.select(col("doc_id"), col("lang"), col("source"),
-        isEval.as("_is_eval"),
-        when(pmod(col("doc_id"), lit(9)) === 0 ||
-            (isEval && pmod(col("doc_id"), lit(3)) === 0),
-          concat(col("text"), lit(phrase))).otherwise(col("text")).as("text"))
-      graft.operators.Sampling.decontaminateNgrams(
-        planted.filter(!col("_is_eval")).drop("_is_eval"),
-        "doc_id", "text",
-        planted.filter(col("_is_eval")), "text", n = 13)
-        .select(col("doc_id"), col("lang"), col("source"))
-    }),
-    "q67_bpe_tokenize" -> ((s, dir) => {
-      // the ACTUAL subword sequences (not just counts) — what a
-      // training-data emitter writes. Token identity is oracle-checked:
-      // the q64 replay's folded string IS the token sequence ('|t1||t2|'
-      // per word, '¶' between words), so the oracle recovers it with two
-      // replaces + a trim. '§' joins tokens on both sides.
-      val d = load(s, dir, "documents")
-      graft.operators.Bpe.tokenize(d, "doc_id", bpeText(col("text")), bpeEncoder(s, dir))
-    }),
-    "q70_bpe_token_ids" -> ((s, dir) => {
-      // the tokenized-sink form: subword sequences mapped to dense integer
-      // token ids via the materialized bpe_vocab dimension (lexicographic
-      // id assignment — bounded by the model: <= nMerges merged symbols +
-      // single code points). The oracle replays the merges, splits the
-      // token string, and joins the SAME vocab table per position.
-      val d = load(s, dir, "documents")
-      graft.operators.Bpe.tokenizeIds(d, "doc_id", bpeText(col("text")),
-        bpeEncoder(s, dir), bpeVocabRows(s, dir).toMap)
-    }),
-
-    "q71_packed_ids" -> ((s, dir) => {
-      // the FINAL training-sink artifact, end to end: documents → real-BPE
-      // token ids (q70) → budget-packed buffers (q66's packing) → per pack,
-      // the member docs' id streams concatenated in pack order. The oracle
-      // composes the merge replay, the vocab position-join, and the
-      // packing windows — every stage independently recomputed.
-      val d = load(s, dir, "documents")
-      // ONE corpus encode: the id streams are the source of truth and the
-      // packing budget derives from them (token count == id count), so the
-      // sink doesn't pay tokenCounts' second pass; localCheckpoint because
-      // ids feed both the budget and the final join (q55's precedent)
-      val ids = graft.operators.Bpe.tokenizeIds(d, "doc_id",
-        bpeText(col("text")), bpeEncoder(s, dir), bpeVocabRows(s, dir).toMap)
-        .localCheckpoint()
-      val counts = ids.select(col("doc_id"),
-        when(col("ids_str") === "", lit(0L))
-          .otherwise(size(split(col("ids_str"), ",")).cast("long"))
-          .as("bpe_tokens"))
-      val packed = graft.operators.Curation.packSequences(
-        counts, "doc_id", col("bpe_tokens"),
-        window = BpePackWindow, nShards = BpePackShards)
-      packed.join(ids, Seq("doc_id"))
-        .groupBy(col("pack_id"))
-        .agg(
-          count(lit(1)).as("n_docs"),
-          sum(col("n_tokens")).as("pack_tokens"),
-          array_join(
-            filter(
-              transform(
-                array_sort(collect_list(struct(col("pack_pos"), col("ids_str")))),
-                x => x.getField("ids_str")),
-              x => length(x) > 0),
-            ",").as("ids_str"))
-    }),
-
-    "q66_bpe_packing" -> ((s, dir) => {
-      // the round-3 verdict's "offer real BPE to the packing tokensCol",
-      // end-to-end: q59's concat-and-slice packing budgeted by the REAL
-      // tokenizer counts of q64 (same cached merge table). The oracle
-      // composes the q64 recursive merge replay with the q59 packing SQL.
-      val d = load(s, dir, "documents")
-      val counts = graft.operators.Bpe
-        .tokenCounts(d, "doc_id", bpeText(col("text")), bpeEncoder(s, dir))
-        .select(col("doc_id"), col("n_tokens").as("bpe_tokens"))
-      graft.operators.Curation.packSequences(
-        counts, "doc_id", col("bpe_tokens"),
-        window = BpePackWindow, nShards = BpePackShards)
-        .select(col("doc_id"), col("shard"), col("n_tokens"),
-          col("tok_start"), col("pack_id"), col("pack_pos"))
-    }),
-    "q65_paragraph_dedup" -> ((s, dir) => {
-      // C4-style corpus-level repeated-paragraph removal (Raffel et al.
-      // 2020 §2.2). The flat synthetic docs carry no newlines, so the
-      // query synthesizes paragraph structure deterministically (10-word
-      // chunks joined by \n) and plants corpus-wide boilerplate in every
-      // 5th doc; the oracle replays the same synthesis + removal in SQL.
-      val d = load(s, dir, "documents")
-      val words = split(col("text"), " ")
-      val nP = expr("(size(split(text, ' ')) + 9) div 10")
-      val paras = transform(sequence(lit(0), (nP - lit(1)).cast("int")),
-        i => array_join(slice(words, i * lit(10) + lit(1), lit(10)), " "))
-      val ptext = array_join(paras, "\n")
-      val planted = when(pmod(col("doc_id"), lit(5)) === 0,
-        concat(lit("BOILERPLATE COOKIE NOTICE ACCEPT ALL\n"), ptext))
-        .otherwise(ptext)
-      val synth = d.select(col("doc_id"), planted.as("text"))
-      graft.operators.Curation.removeRepeatedParagraphs(
-        synth, "doc_id", col("text"), sep = "\n", minCount = 3)
-    }),
-    "q60_redact_pii" -> ((s, dir) => {
-      // PII redaction over a corpus with deterministically planted
-      // emails/phones (every 7th doc) — patterns chosen for identical
-      // Java-regex / RE2 semantics so the oracle redacts bit-identically
-      val d = load(s, dir, "documents")
-      val planted = d.select(col("doc_id"),
-        when(pmod(col("doc_id"), lit(7)) === 0,
-          concat(col("text"), lit(" contact user"),
-            col("doc_id").cast("string"), lit("@example.com or 555-123-4567")))
-          .otherwise(col("text")).as("text"))
-      val cols = graft.operators.Curation.redactPii(col("text"))
-      planted.select(col("doc_id") +: cols.map { case (n, c) => c.as(n) }: _*)
-    }),
-    "q61_repetition_stats" -> ((s, dir) => {
-      // Gopher-style repetition quality features: duplicate word / 2-gram /
-      // 3-gram fractions per document
-      val d = load(s, dir, "documents")
-      d.select(col("doc_id"),
-        round(graft.operators.Curation.dupNgramFrac(col("text"), 1), 6)
-          .as("dup_word_frac"),
-        round(graft.operators.Curation.dupNgramFrac(col("text"), 2), 6)
-          .as("dup_2gram_frac"),
-        round(graft.operators.Curation.dupNgramFrac(col("text"), 3), 6)
-          .as("dup_3gram_frac"))
-    }),
-
-    // ---- dedup family (q40 oracle-checked; LSH variants rows-only + specs) --
-    "q40_dedup_exact" -> ((s, dir) => {
-      Dedup.exactGroups(load(s, dir, "documents"), "doc_id", "text")
-    }),
-    "q41_dedup_minhash" -> ((s, dir) => {
-      Dedup.minhashNearDups(plantedDocs(s, dir), "doc_id", "text",
-        threshold = JaccardThreshold)
-        .withColumn("jaccard", round(col("jaccard"), 6))
-    }),
-    "q57_dedup_ngram_jaccard" -> ((s, dir) => {
-      // exact-complete n-gram Jaccard join (prefix-filtered inverted index):
-      // unlike q41's probabilistic banding this returns EVERY pair with
-      // J >= 0.7; the oracle re-verifies Jaccard over the materialized
-      // candidate set exactly as for q41
-      // the join picks its path from sampled df statistics: the bench
-      // documents table is a DENSE-vocabulary corpus (30k distinct
-      // shingles, mean df ~17 — nothing is rare), so it lands on the
-      // posting count-join (~6x over prefix+verify here); both paths
-      // return identical rows (spec-checked) and the all-pairs oracle is
-      // path-independent
-      Dedup.ngramNearDups(plantedDocs(s, dir), "doc_id", "text",
-        threshold = JaccardThreshold)
-        .withColumn("jaccard", round(col("jaccard"), 6))
-    }),
-    "q42_dedup_simhash" -> ((s, dir) => {
-      Dedup.simhashNearDups(plantedDocs(s, dir), "doc_id", "text",
-        maxDist = SimhashMaxDist)
-    }),
-    "q43_dedup_embedding" -> ((s, dir) => {
-      Dedup.embeddingNearDups(plantedEmb(s, dir), "vec_id", "embedding",
-        dim = EmbDim, threshold = 0.98)
-        .withColumn("cos", round(col("cos"), 6))
-    }),
-
-    // ---- similarity search over embeddings ---------------------------------
-    "q44_ann_brute_topk" -> ((s, dir) => {
-      val e = embCorpus(s, dir)
-      Similarity.bruteForceTopK(e, "vec_id", "embedding", annQueries(e), "qid", "qv", 10)
-        .withColumn("cos", round(col("cos"), 6))
-    }),
-    "q45_ann_lsh_topk" -> ((s, dir) => {
-      val e = embCorpus(s, dir)
-      // Sizing (rule at Similarity.lshCandidates): nBits=6 keeps ~2000/64 ≈
-      // 31 vectors/bucket; the bench corpus is near-isotropic (top-10
-      // neighbors at cos≈0.3 → per-plane disagreement p≈0.40, the
-      // adversarial case), so one table at probe radius 1 recalls only
-      // ≈0.23 and the 0.9 recall gate (BENCH recall_at_10) needs L=10
-      // independent tables: 1-(1-0.23)^10 ≈ 0.93. Clustered production
-      // embeddings (p≈0.2) hit the same target with L=2-4 at nBits 16+.
-      Similarity.lshTopK(e, "vec_id", "embedding", annQueries(e), "qid", "qv", 10,
-        dim = EmbDim, nBits = LshBits, nTables = LshTables)
-        .withColumn("cos", round(col("cos"), 6))
-    }),
-
-    "q49_dedup_corpus" -> ((s, dir) => {
-      // end-to-end corpus dedup: exact collapse -> minhash pairs -> connected
-      // components -> one keeper per cluster
-      val deduped = Dedup.dedupCorpus(plantedDocs(s, dir), "doc_id", "text",
-        threshold = JaccardThreshold)
-      deduped.agg(
-        count(lit(1)).as("docs_kept"),
-        sum(when(col("doc_id") >= 1000000L, 1).otherwise(0)).as("planted_kept"))
-    }),
-    "q69_ann_pq_topk" -> ((s, dir) => {
-      // product-quantization ANN (Jégou et al. 2011): per-subspace k-means
-      // codebooks on a bounded sample, one-byte-per-subspace codes, ADC
-      // lookup-table scan to top-r candidates, exact cosine re-rank. The
-      // oracle re-ranks the materialized candidate set exactly (the shared
-      // ANN contract); candidate recall is gated in the bench.
-      // m=16/ksub=32/r=128 measured at recall@10 = 0.94 on the sf0.1
-      // bench corpus (round-5 parameter sweep) — near-isotropic embeddings are
-      // PQ's worst case exactly as they are IVF's (q47's probes=7 note);
-      // 16 bytes/vec is still a 32x cut vs the raw float64 vectors.
-      val e = embCorpus(s, dir)
-      graft.operators.Pq.topK(e, "vec_id", "embedding",
-        annQueries(e), "qid", "qv", 10, pqModel(e), r = PqRerank)
-        .withColumn("cos", round(col("cos"), 6))
-    }),
-
-    "q47_ann_ivf_topk" -> ((s, dir) => {
-      val e = embCorpus(s, dir)
-      // probes=7 of k=8: on the near-isotropic bench corpus IVF recall
-      // tracks the probed fraction (centroids carry little signal — recall
-      // 0.66 measured at probes=4), so the 0.9 recall gate needs
-      // probes ≈ 0.9k. Clustered production embeddings concentrate
-      // neighbors in 1-2 cells; there probes ≈ 2-3 of a much larger k.
-      graft.operators.Ivf.topK(e, "vec_id", "embedding",
-        annQueries(e), "qid", "qv", 10, ivfModel(e), probes = IvfProbes)
-        .withColumn("cos", round(col("cos"), 6))
-    }),
-
-    // ---- multimodal (image/audio/MJPEG-video decode all REAL: javax.imageio,
-    // javax.sound.sampled, MjpegAvi; other codecs fall to the honest stub) ---
-    "q46_multimodal_features" -> ((s, dir) => {
-      Multimodal.decode(mediaTable(s, dir)).toDF()
-        .groupBy(col("kind"))
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("decoded"), 1).otherwise(0)).as("n_decoded"),
-          sum(col("n_bytes")).as("total_bytes"),
-          round(avg(col("entropy")), 4).as("avg_entropy"),
-          round(avg(col("rms")), 4).as("avg_rms"),
-          sum(col("width").cast("long")).as("total_px_width"),
-          sum(col("frames_sampled")).as("frames_sampled"))
-    }),
-
-    "q25_zone_audit" -> ((s, dir) => {
-      val ex = runExtraction(s, dir)
-      val deduped = ExtractPipeline.dedupModules(ExtractPipeline.modules(ex))
-      ExtractPipeline.zoneAudit(deduped, ExtractPipeline.catalogDim(s))
-        .groupBy(col("catalog_id"))
-        .agg(count(lit(1)).as("zones"), sum(when(col("hit"), 1).otherwise(0)).as("hits"))
-    }),
-
-    "q51_salted_agg" -> ((s, dir) => {
-      // skew-salted aggregation (the north-rule mega-key treatment as a
-      // first-class operator): two-stage salted sum/count per user over
-      // events — algebraically identical to the plain groupBy, so the
-      // DuckDB oracle is the plain SQL GROUP BY
-      val e = load(s, dir, "events")
-      graft.operators.Salting.saltedSum(e, col("user_id"), col("value"),
-        fineGrain = col("event_id"), buckets = 16)
-        .select(col("key").as("user_id"),
-          round(col("sum"), 4).as("total_value"), col("count"))
-    }),
-
-    "q50_dedup_modules_planted" -> ((s, dir) => {
-      // A6 under REAL collapse pressure: the synthetic corpus happens to
-      // produce globally-unique module payloads (counts.json: q20 raw ==
-      // distinct), so q20's dedup is a no-op there. Here every turn is
-      // planted again at turn_idx+100000 — same conv, same text, later
-      // ordinal — and first-wins dedup must collapse every copy, keeping
-      // exactly the q20 winners. Oracle: SQL row_number over the raw
-      // planted module table.
-      ExtractPipeline.ordered(
-        ExtractPipeline.dedupModules(plantedModules(s, dir)))
-        .withColumn("zones", concat_ws("|", col("zones")))
-    })
-  )
-
-  /** Oracle-separator strip for the BPE query family: '|' and '¶' are the
-    * DuckDB oracle's token/word boundary characters and '§' is q67's
-    * emitted token separator, so the queries train, count, and tokenize
-    * over text without any of them — identically on both sides (q67's
-    * output would otherwise be ambiguous for text containing '§', and
-    * silently so: both engines would degrade the same way).
-    *
-    * ALSO restricted to printable ASCII + whitespace: the engine splits
-    * words into Unicode CODE POINTS while the oracle CTE splits with
-    * DuckDB's `w[i]` character indexing — for astral/combining sequences
-    * the two symbol alphabets could diverge and report a false mismatch.
-    * Stripping non-ASCII on BOTH sides (this column expression feeds the
-    * engine; the oracle CTE applies the same regex) makes the alphabets
-    * provably identical for any corpus, not just the ASCII synthetic one.
-    * Both regex dialects (Java here, RE2 in DuckDB) read the class
-    * identically: keep TAB/LF/CR and 0x20–0x7E, minus the separators. */
-  private[graft] val bpeStripRe = "[^\\t\\n\\r -~]|[|¶§]"
-  private def bpeText(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    regexp_replace(c, bpeStripRe, "")
-
-  /** The shared recursive merge-replay prefix of the q64/q66/q67 oracles
-    * (doc0 = '|tok|'-encoded sanitized text, steps = one non-overlapping
-    * replace per ranked merge) — ONE definition so the three oracles
-    * cannot drift apart. */
-  private def bpeReplayCtes: String =
-    s"""WITH RECURSIVE doc0 AS (
-       |  SELECT doc_id, coalesce(array_to_string(list_transform(
-       |      list_filter(
-       |        regexp_split_to_array(
-       |          regexp_replace(text, '[^\\t\\n\\r -~]|[|¶§]', '', 'g'), '\\s+'),
-       |        w -> length(w) > 0),
-       |      w -> '|' || array_to_string(
-       |        [w[i] for i in range(1, length(w)+1)], '||') || '|'),
-       |    '¶'), '') AS s
-       |  FROM documents),
-       |steps AS (
-       |  SELECT doc_id, s, 0 AS r FROM doc0
-       |  UNION ALL
-       |  SELECT st.doc_id,
-       |    replace(st.s, '|' || m.lhs || '||' || m.rhs || '|',
-       |                  '|' || m.lhs || m.rhs || '|'),
-       |    st.r + 1
-       |  FROM steps st JOIN ${t("bpe_merges")} m ON m.merge_rank = st.r)""".stripMargin
-
-  /** Synthesized media blobs, slot-cached per (session, sfDir), persisted
-    * and materialized eagerly — the skipRuleOutcome pattern. q46 and the
-    * media_features materialization decode the SAME blobs, and the bench
-    * leg times DECODE (the operator under test) instead of re-paying fixture
-    * synthesis (PNG/WAV/MJPEG-AVI encode) every round: synthesis stands in
-    * for reading real blobs, which a production run scans from the table
-    * once, not per query. */
-  private val media = new Slot[Dataset[Multimodal.MediaRow]](_.unpersist())
-
-  def mediaTable(s: SparkSession, dir: String): Dataset[Multimodal.MediaRow] = media(s, dir) {
-    val m = Multimodal.synthesizeMedia(load(s, dir, "documents"), s)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    m.count() // materialize here, outside any timed region
-    m
-  }
-
-  /** BPE packing cell parameters — ONE definition shared by the q66 and
-    * q71 queries AND their oracle SQL, so the two queries' packs cannot
-    * silently diverge. */
-  private val BpePackWindow = 512L
-  private val BpePackShards = 8
-
-  /** BPE vocab rows, slot-cached per (session, sfDir) — the q70/q71
-    * queries and the `bpe_vocab` materialization must describe the SAME id
-    * assignment, and the build (tokenize + distinct + sort + collect) is a
-    * one-time dimension cost, not per-query work. */
-  private val bpeVocab = new Slot[Seq[(String, Long)]](_ => ())
-
-  def bpeVocabRows(s: SparkSession, dir: String): Seq[(String, Long)] = bpeVocab(s, dir) {
-    graft.operators.Bpe.vocab(load(s, dir, "documents"), "doc_id",
-      bpeText(col("text")), bpeEncoder(s, dir))
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-  }
-
-  /** Trained BPE merge table, slot-cached per (session, sfDir) — the
-    * skipRuleOutcome pattern — so the q64 query and the `bpe_merges`
-    * materialization describe the SAME training run without retraining. */
-  private val bpeMerges = new Slot[IndexedSeq[graft.operators.Bpe.Merge]](_ => ())
-
-  def bpeMergeTable(s: SparkSession, dir: String)
-      : IndexedSeq[graft.operators.Bpe.Merge] = bpeMerges(s, dir) {
-    // nMerges=2000 is the production-vocabulary ask (round-4 verdict #1);
-    // the incremental trainer makes it cheap, and on this synthetic corpus
-    // (31 distinct words) training early-stops when no pair occurs twice,
-    // so the materialized merge table — and the oracle replay cost — stays
-    // corpus-sized regardless of the budget.
-    graft.operators.Bpe.train(
-      load(s, dir, "documents"), "doc_id", bpeText(col("text")), nMerges = 2000)
-  }
-
-  /** The encoder every BPE query applies: the slot-cached merge table. */
-  private def bpeEncoder(s: SparkSession, dir: String) =
-    new graft.operators.Bpe.Encoder(bpeMergeTable(s, dir))
-
-  // ---- oracle-side materializations -----------------------------------------
-
-  /** Raw (un-deduped) modules of a corpus where every turn also appears a
-    * second time at turn_idx + 100000 — intra-conversation duplicates with
-    * strictly later order keys, so first-wins dedup must drop ALL copies. */
-  private def plantedModules(s: SparkSession, dir: String) = {
-    import s.implicits._
-    val turns = transcriptsFor(s, dir)
-    val dup = turns.map(t => t.copy(turn_idx = t.turn_idx + 100000))
-    val ctx = ExtractPipeline.makeContext(TranscriptGen.allEntityIds)
-    ExtractPipeline.modules(ExtractPipeline.extract(turns.union(dup), ctx))
-  }
-
-  /** The clean turns with text: what q29 and q52 reassemble. */
-  private def proseTurns(s: SparkSession, dir: String): DataFrame =
-    ExtractPipeline.cleanTurns(runExtraction(s, dir)).toDF()
-      .filter(length(col("clean_text")) > 0)
-
-  /** The `module` column the first-wins module oracles partition by. */
-  private def withModuleKey(modules: DataFrame): DataFrame = modules.withColumn("module",
-    concat_ws("|", col("module_type"), concat_ws("|", col("zones"))))
-
-  private def plantedDocs(s: SparkSession, dir: String): DataFrame =
-    withPlantedTextDups(load(s, dir, "documents").select(col("doc_id"), col("text")))
-
-  /** q43's corpus: the embeddings plus near-identical planted ones, a
-    * perturbed copy of every vector with its id offset by 1,000,000 —
-    * ground-truth near-dup pairs. */
-  private[graft] def plantedEmb(s: SparkSession, dir: String): DataFrame = {
-    val base = load(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-    val planted = base.select((col("vec_id") + 1000000).as("vec_id"),
-      transform(col("embedding"), x => x * 0.99f + 0.003f).as("embedding"))
-    base.union(planted)
-  }
-
-  // double-cast before the dot product: bit-stable vs the DuckDB oracle
-  private def embCorpus(s: SparkSession, dir: String): DataFrame =
-    load(s, dir, "embeddings")
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-
-  private def annQueries(e: DataFrame): DataFrame =
-    e.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-
-  /** Settings a query shares with the side table or oracle SQL that
-    * re-checks it: one value each, so the two cannot drift apart. */
-  private[graft] val EmbDim = 64
-  private val LshBits = 6
-  private val LshTables = 10
-  private val IvfProbes = 7
-  private val PqRerank = 128
-  private val SimhashMaxDist = 6
-  private val JaccardThreshold = 0.7
-
-  private def ivfModel(e: DataFrame) =
-    graft.operators.Ivf.fit(e, "vec_id", "embedding", k = 8)
-  private def pqModel(e: DataFrame) =
-    graft.operators.Pq.fit(e, "vec_id", "embedding", m = 16, ksub = 32)
-
-  /** Missing-id gaps over the floored order prices (q07, q27). */
-  private def priceGaps(s: SparkSession, dir: String): DataFrame =
-    graft.operators.GapAudit.gaps(
-      load(s, dir, "orders").select(floor(col("o_totalprice")).cast("long").as("k")),
-      "k").orderBy(col("gap_start"))
-
-  /** q56's attribution over `rewrite(clicks)`: each purchase joined as-of to
-    * the user's latest click at or before it (inclusive). Of several clicks
-    * at one (user, ts), asofJoin keeps the greatest right row: (user, ts)
-    * being equal, the max click_id — the row the DuckDB oracle's GROUP BY
-    * keeps. */
-  private def purchaseAsOfClick(s: SparkSession, dir: String,
-      rewrite: DataFrame => DataFrame): DataFrame = {
-    val e = load(s, dir, "events")
-    val purchases = e.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("event_id").as("purchase_id"),
-        col("ts").as("purchase_ts"), col("value").as("purchase_value"))
-    val clicks = e.filter(col("event_type") === "click")
-      .select(col("user_id"), col("ts").as("click_ts"), col("event_id").as("click_id"))
-    // asofJoin splits by (user, day) only when the inputs outgrow one
-    // partition, so one hyperactive user cannot own a whole task at
-    // 100 TB; below that, one per-key window (same rows, spec-pinned)
-    graft.operators.AsOf.asofJoin(
-      purchases, rewrite(clicks), key = "user_id", leftTs = "purchase_ts",
-      rightTs = "click_ts")
-      .select(col("user_id"), col("purchase_id"), col("purchase_ts"),
-        col("purchase_value"),
-        col("asof.click_id").as("click_id"),
-        col("asof.click_ts").as("click_ts"))
-  }
+  /** Each query's oracle SQL (see `Query`). */
+  lazy val oracleSql: Map[String, String] =
+    table.map { case (name, q) => name -> q.oracleSql }
 
   /** Side tables Verify writes under `<outDir>/_tables/<name>` (parquet) so
     * the DuckDB oracle can independently re-check the RELATIONAL stages of
@@ -986,734 +168,7 @@ object SparkEntry {
     * Jaccard/Hamming/cosine verify + top-k re-rank oracles. Everything here
     * is deterministic (seeded generator, deterministic LSH planes), so a
     * query and its materialization compute identical intermediate data. */
-  def materializations: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ext_modules" -> ((s, dir) =>
-      withModuleKey(ExtractPipeline.modules(runExtraction(s, dir)).toDF())),
-    "ext_clean" -> ((s, dir) =>
-      ExtractPipeline.cleanTurns(runExtraction(s, dir)).toDF().drop("spans")),
-    "ext_errors" -> ((s, dir) =>
-      ExtractPipeline.errors(runExtraction(s, dir)).toDF()),
-    "ext_entities" -> ((s, dir) =>
-      ExtractPipeline.headerEntities(runExtraction(s, dir)).toDF()),
-    "ext_modules_planted" -> ((s, dir) => withModuleKey(plantedModules(s, dir).toDF())),
-    "ext_errors_after" -> ((s, dir) => skipRuleOutcome(s, dir)._2.toDF()),
-    "skip_rules" -> ((s, dir) => {
-      import s.implicits._
-      skipRuleOutcome(s, dir)._3.toSeq
-        .sortBy(r => (r.module_ordinal, r.zone_catalog, r.zone_str)).toDF()
-    }),
-    "bpe_merges" -> ((s, dir) => {
-      import s.implicits._
-      bpeMergeTable(s, dir).toDF()
-    }),
-    "bpe_vocab" -> ((s, dir) => {
-      // the SAME slot-cached rows q70/q71 consume — one definition, no
-      // prose-enforced mirroring
-      import s.implicits._
-      bpeVocabRows(s, dir).toDF("token", "token_id")
-    }),
-    "transcripts_raw" -> ((s, dir) =>
-      transcriptsFor(s, dir).toDF()
-        .select("conv_id", "turn_idx", "role", "tool", "ts")),
-    "dim_layout" -> ((s, _) => ExtractPipeline.layoutDim(s)),
-    "dim_catalogs" -> ((s, _) => ExtractPipeline.catalogDim(s)),
-    "docs_planted" -> ((s, dir) => plantedDocs(s, dir)),
-    "minhash_cands" -> ((s, dir) =>
-      Dedup.minhashCandidates(plantedDocs(s, dir), "doc_id", "text")),
-    "simhash_sigs" -> ((s, dir) =>
-      Dedup.simhashSignatures(plantedDocs(s, dir), "doc_id", "text")),
-    "simhash_cands" -> ((s, dir) =>
-      Dedup.simhashCandidates(
-        Dedup.simhashSignatures(plantedDocs(s, dir), "doc_id", "text"),
-        maxDist = SimhashMaxDist)
-        .select("id_a", "id_b")),
-    "emb_planted" -> ((s, dir) => plantedEmb(s, dir)),
-    "emb_cands" -> ((s, dir) =>
-      Dedup.embeddingCandidates(plantedEmb(s, dir), "vec_id", "embedding", dim = EmbDim)
-        .select("id_a", "id_b")),
-    // the oracle re-ranks each ANN candidate set below, so each shares its
-    // query's settings
-    "ann_lsh_cands" -> ((s, dir) => {
-      val e = embCorpus(s, dir)
-      Similarity.lshCandidates(e, "vec_id", "embedding", annQueries(e), "qid", "qv",
-        dim = EmbDim, nBits = LshBits, nTables = LshTables).select("query_id", "id")
-    }),
-    "ann_ivf_cands" -> ((s, dir) => {
-      val e = embCorpus(s, dir)
-      graft.operators.Ivf.candidates(e, "vec_id", "embedding",
-        annQueries(e), "qid", "qv", ivfModel(e), probes = IvfProbes).select("query_id", "id")
-    }),
-    "ann_pq_cands" -> ((s, dir) => {
-      // fit is deterministic, so refitting reproduces q69's model and
-      // candidate set
-      val e = embCorpus(s, dir)
-      graft.operators.Pq.candidates(e, "vec_id", "embedding",
-        annQueries(e), "qid", "qv", pqModel(e), r = PqRerank).select("query_id", "id")
-    }),
-    "media_features" -> ((s, dir) =>
-      Multimodal.decode(mediaTable(s, dir)).toDF()),
-    "corpus_keepers" -> ((s, dir) =>
-      Dedup.dedupCorpus(plantedDocs(s, dir), "doc_id", "text", threshold = JaccardThreshold)
-        .select("doc_id"))
-  )
-
-  /** A materialized side table (see `materializations`) as a DuckDB
-    * read_parquet reference. `{OUT}` is substituted by Verify with the
-    * actual output directory at dump time. */
-  private def t(name: String): String =
-    s"read_parquet('{OUT}/_tables/$name/*.parquet')"
-
-  /** q07's and q27's oracle: gaps in the distinct floored order prices. */
-  private def priceGapsSql: String =
-    """SELECT prev AS gap_start, k AS gap_end, k - prev - 1 AS missing
-      |FROM (SELECT k, lag(k) OVER (ORDER BY k) AS prev
-      |      FROM (SELECT DISTINCT CAST(FLOOR(o_totalprice) AS BIGINT) AS k
-      |            FROM orders) d) t
-      |WHERE prev IS NOT NULL AND k - prev > 1""".stripMargin
-
-  /** q20's and q50's oracle: first-wins module dedup over `table`. */
-  private def firstModulesSql(table: String): String =
-    s"""SELECT conv_id, turn_idx, block_ordinal, row_ordinal, module_ordinal,
-       |  module_type, array_to_string(zones, '|') AS zones, module_str,
-       |  span_start, span_end, module
-       |FROM (SELECT *, row_number() OVER (PARTITION BY conv_id, module
-       |    ORDER BY turn_idx, block_ordinal, row_ordinal, module_ordinal) AS rn
-       |  FROM ${t(table)}) d
-       |WHERE rn = 1""".stripMargin
-
-  /** q29's and q52's oracle: both reassemblies are held to one string_agg. */
-  private def conversationTextSql: String =
-    s"""SELECT conv_id, count(*) AS prose_turns,
-       |  string_agg(clean_text, chr(10) || chr(10) ORDER BY turn_idx)
-       |    AS conversation_text,
-       |  CAST(length(string_agg(clean_text, chr(10) || chr(10)
-       |    ORDER BY turn_idx)) AS INTEGER) AS n_chars
-       |FROM ${t("ext_clean")} WHERE length(clean_text) > 0
-       |GROUP BY conv_id""".stripMargin
-
-  /** The `sh` CTE of the q41/q57 oracles: distinct word 3-shingles of the
-    * planted documents. */
-  private def plantedShinglesCte: String =
-    s"""WITH sh AS (SELECT doc_id, list_distinct(CASE WHEN len(words) >= 3
-       |    THEN [array_to_string(words[i:i+2], ' ') for i in range(1, len(words) - 1)]
-       |    ELSE [array_to_string(words, ' ')] END) AS s
-       |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS words
-       |        FROM ${t("docs_planted")}) w)""".stripMargin
-
-  /** The shared ANN contract of q45/q47/q69: DuckDB exactly re-ranks the
-    * engine's materialized candidate set `cands` against the embeddings. */
-  private def reRankSql(cands: String): String =
-    s"""SELECT query_id, id, round(cos, 6) AS cos, rank FROM (
-       |  SELECT c.query_id, c.id,
-       |    list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-       |      CAST(q.embedding AS DOUBLE[])) AS cos,
-       |    row_number() OVER (PARTITION BY c.query_id
-       |      ORDER BY list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-       |        CAST(q.embedding AS DOUBLE[])) DESC, c.id) AS rank
-       |  FROM ${t(cands)} c
-       |  JOIN embeddings e ON c.id = e.vec_id
-       |  JOIN embeddings q ON c.query_id = q.vec_id) v
-       |WHERE rank <= 10""".stripMargin
-
-  /** q59's packing cells over a CTE `t` of (doc_id, shard, n_tokens), which
-    * q66 reuses with its BPE counts: each doc's token offset in its shard,
-    * and the `window`-token pack it starts in. */
-  private def packingSql(window: Long): String =
-    s"""c AS (SELECT doc_id, shard, n_tokens,
-       |    coalesce(sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-       |      AS tok_start,
-       |    row_number() OVER (PARTITION BY shard ORDER BY doc_id) - 1
-       |      AS pack_pos
-       |  FROM t)
-       |SELECT doc_id, CAST(shard AS BIGINT) AS shard, n_tokens,
-       |  CAST(tok_start AS BIGINT) AS tok_start,
-       |  CAST(shard * 1099511627776 + tok_start // $window AS BIGINT) AS pack_id,
-       |  CAST(pack_pos AS BIGINT) AS pack_pos
-       |FROM c""".stripMargin
-
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables (driver-registered sf tables like `lineitem`,
-    * plus the `materializations` side tables via read_parquet). Omit for
-    * non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] = Map(
-    "q01_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  sum(l_quantity) AS sum_qty,
-        |  sum(l_extendedprice) AS sum_price,
-        |  avg(l_discount) AS avg_disc,
-        |  count(*) AS cnt
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus""".stripMargin,
-    "q02_filter_pushdown" ->
-      """SELECT l_orderkey, l_partkey, l_quantity FROM lineitem
-        |WHERE l_quantity > 45 AND l_discount <= 0.02""".stripMargin,
-    "q03_broadcast_join" ->
-      """SELECT n_name, sum(o_totalprice) AS revenue, count(*) AS n_orders
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY n_name""".stripMargin,
-    "q04_anti_join" ->
-      """SELECT c_custkey, c_name FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders
-        |  WHERE o_custkey = c_custkey AND o_orderpriority LIKE '1%')""".stripMargin,
-    "q05_semi_join" ->
-      """SELECT c_custkey, c_mktsegment FROM customer
-        |WHERE EXISTS (SELECT 1 FROM orders
-        |  WHERE o_custkey = c_custkey AND o_totalprice > 100000)""".stripMargin,
-    "q06_dedup_first_wins" ->
-      """SELECT user_id, event_id, event_type, value FROM (
-        |  SELECT user_id, event_id, event_type, value,
-        |    row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-        |  FROM events) t WHERE rn = 1""".stripMargin,
-    "q07_window_gap_audit" -> priceGapsSql,
-    "q08_topk_per_group" ->
-      """SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
-        |  SELECT o_custkey, o_orderkey, o_totalprice,
-        |    row_number() OVER (PARTITION BY o_custkey
-        |      ORDER BY o_totalprice DESC, o_orderkey) AS rn
-        |  FROM orders) t WHERE rn <= 2""".stripMargin,
-    "q27_gap_audit_scalable" -> priceGapsSql,
-    "q48_sessionize" ->
-      """SELECT user_id, session_id, count(*) AS n_events,
-        |  min(ts) AS session_start, max(ts) AS session_end,
-        |  sum(value) AS total_value
-        |FROM (
-        |  SELECT user_id, event_id, ts, value,
-        |    CAST(sum(new_session) OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-        |  FROM (
-        |    SELECT user_id, event_id, ts, value,
-        |      CASE WHEN prev_ts IS NULL
-        |        OR epoch(ts) - epoch(prev_ts) > 1800 THEN 1 ELSE 0 END AS new_session
-        |    FROM (SELECT user_id, event_id, ts, value,
-        |            lag(ts) OVER (PARTITION BY user_id
-        |              ORDER BY ts, event_id) AS prev_ts
-        |          FROM events) a) b) c
-        |GROUP BY user_id, session_id""".stripMargin,
-    "q30_text_tokens" ->
-      """SELECT doc_id,
-        |  CAST(length(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS n_tokens,
-        |  CAST(length(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS BIGINT) AS n_subwords
-        |FROM documents""".stripMargin,
-    "q31_quality_score" ->
-      """SELECT doc_id,
-        |  CAST(length(text) AS BIGINT) AS n_chars,
-        |  CAST(length(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS n_tokens,
-        |  length(regexp_replace(text, '[^A-Za-z]', '', 'g')) * 1.0
-        |    / CASE WHEN length(text) > 0 THEN length(text) ELSE 1 END AS alpha_ratio,
-        |  length(regexp_replace(text, '[^0-9]', '', 'g')) * 1.0
-        |    / CASE WHEN length(text) > 0 THEN length(text) ELSE 1 END AS digit_ratio,
-        |  length(regexp_replace(text, '[A-Za-z0-9\s]', '', 'g')) * 1.0
-        |    / CASE WHEN length(text) > 0 THEN length(text) ELSE 1 END AS punct_ratio,
-        |  length(regexp_replace(text, '\s', '', 'g')) * 1.0
-        |    / length(regexp_split_to_array(trim(text), '\s+')) AS avg_token_len,
-        |  least(1.0,
-        |    length(regexp_replace(text, '[^A-Za-z]', '', 'g')) * 1.0
-        |      / CASE WHEN length(text) > 0 THEN length(text) ELSE 1 END * 0.6
-        |    + CASE WHEN length(regexp_split_to_array(trim(text), '\s+'))
-        |        BETWEEN 10 AND 2000 THEN 0.3 ELSE 0.0 END
-        |    + CASE WHEN length(regexp_replace(text, '[A-Za-z0-9\s]', '', 'g')) * 1.0
-        |        / CASE WHEN length(text) > 0 THEN length(text) ELSE 1 END < 0.1
-        |        THEN 0.1 ELSE 0.0 END) AS quality_score
-        |FROM documents""".stripMargin,
-    "q32_lang_id" -> {
-      val hits = TextStats.StopwordSets.map { case (lang, words) =>
-        val set = words.map(w => s"'$w'").mkString(", ")
-        s"len(list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'), w -> w IN ($set))) AS hits_$lang"
-      }.mkString(",\n  ")
-      val langs = TextStats.StopwordSets.map(_._1)
-      val best = s"greatest(${langs.map(l => s"hits_$l").mkString(", ")})"
-      val caseChain = langs.map(l => s"WHEN $best > 0 AND hits_$l = $best THEN '$l'")
-        .mkString("CASE ", " ", " ELSE 'und' END")
-      s"""SELECT doc_id, ${langs.map(l => s"CAST(hits_$l AS BIGINT) AS hits_$l").mkString(", ")},
-         |  $caseChain AS pred_lang
-         |FROM (SELECT doc_id,
-         |  $hits
-         |FROM documents) t""".stripMargin
-    },
-    "q33_fingerprint" ->
-      """SELECT doc_id, list_min(list_transform(shingles, s -> md5(s))) AS fingerprint
-        |FROM (
-        |  SELECT doc_id,
-        |    CASE WHEN len(words) >= 3 THEN
-        |      [array_to_string(words[i:i+2], ' ') for i in range(1, len(words) - 1)]
-        |    ELSE [array_to_string(words, ' ')] END AS shingles
-        |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS words
-        |        FROM documents) w) s""".stripMargin,
-    "q56_asof_join" ->
-      """WITH p AS (SELECT user_id, event_id AS purchase_id, ts AS purchase_ts,
-        |             value AS purchase_value
-        |           FROM events WHERE event_type = 'purchase'),
-        |c AS (SELECT user_id, ts AS click_ts, max(event_id) AS click_id
-        |      FROM events WHERE event_type = 'click' GROUP BY user_id, ts)
-        |SELECT p.user_id, purchase_id, purchase_ts, purchase_value,
-        |  c.click_id, c.click_ts
-        |FROM p ASOF LEFT JOIN c
-        |  ON p.user_id = c.user_id AND p.purchase_ts >= c.click_ts""".stripMargin,
-    "q74_asof_ties" ->
-      """WITH p AS (SELECT user_id, event_id AS purchase_id, ts AS purchase_ts,
-        |             value AS purchase_value
-        |           FROM events WHERE event_type = 'purchase'),
-        |k AS (SELECT user_id, ts, event_id FROM events WHERE event_type = 'click'),
-        |t AS (SELECT user_id, ts, event_id FROM k
-        |      UNION ALL
-        |      SELECT user_id, ts, event_id + 1000000000 FROM k WHERE event_id % 4 = 0
-        |      UNION ALL
-        |      SELECT user_id, ts, event_id - 1000000000 FROM k WHERE event_id % 4 = 0),
-        |c AS (SELECT user_id, ts AS click_ts, max(event_id) AS click_id
-        |      FROM t GROUP BY user_id, ts)
-        |SELECT p.user_id, purchase_id, purchase_ts, purchase_value,
-        |  c.click_id, c.click_ts
-        |FROM p ASOF LEFT JOIN c
-        |  ON p.user_id = c.user_id AND p.purchase_ts >= c.click_ts""".stripMargin,
-    "q63_funnel_asof" ->
-      """WITH p AS (SELECT user_id, event_id AS purchase_id, ts AS p_ts
-        |           FROM events WHERE event_type = 'purchase'),
-        |c AS (SELECT user_id, ts AS c_ts, max(event_id) AS click_id
-        |      FROM events WHERE event_type = 'click' GROUP BY user_id, ts),
-        |v AS (SELECT user_id, ts AS v_ts, max(event_id) AS view_id
-        |      FROM events WHERE event_type = 'view' GROUP BY user_id, ts),
-        |-- both hops bypass DuckDB's NULL-probe ASOF quirk (a NULL probe ts
-        |-- pairs with the LATEST build row; SQL comparisons never match
-        |-- NULL): null-ts probes skip the ASOF and carry a null match
-        |pc AS (SELECT p.user_id, p.purchase_id, c.click_id, c.c_ts
-        |       FROM (SELECT * FROM p WHERE p_ts IS NOT NULL) p
-        |       ASOF LEFT JOIN c
-        |         ON p.user_id = c.user_id AND p.p_ts >= c.c_ts
-        |       UNION ALL
-        |       SELECT user_id, purchase_id, NULL AS click_id, NULL AS c_ts
-        |       FROM p WHERE p_ts IS NULL),
-        |pcv AS (SELECT pc.user_id, pc.purchase_id, pc.click_id, v.view_id
-        |        FROM (SELECT * FROM pc WHERE c_ts IS NOT NULL) pc
-        |        ASOF LEFT JOIN v
-        |          ON pc.user_id = v.user_id AND pc.c_ts >= v.v_ts
-        |        UNION ALL
-        |        SELECT user_id, purchase_id, click_id, NULL AS view_id
-        |        FROM pc WHERE c_ts IS NULL)
-        |SELECT user_id, count(*) AS purchases,
-        |  CAST(sum(CASE WHEN click_id IS NOT NULL THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS with_click,
-        |  CAST(sum(CASE WHEN view_id IS NOT NULL THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS full_funnel
-        |FROM pcv GROUP BY user_id""".stripMargin,
-    "q58_range_join" ->
-      """SELECT e.error_id, count(*) AS n_events,
-        |  CAST(sum(CAST(round(p.value * 100) AS BIGINT)) AS BIGINT)
-        |    AS sum_value_cents
-        |FROM (SELECT event_id AS error_id, user_id, epoch_us(ts) AS ws,
-        |        epoch_us(ts) + 1800000000 AS we
-        |      FROM events WHERE event_type = 'error') e
-        |JOIN (SELECT user_id, epoch_us(ts) AS pts, value
-        |      FROM events WHERE event_type <> 'error') p
-        |  ON p.user_id = e.user_id AND p.pts >= e.ws AND p.pts < e.we
-        |GROUP BY 1""".stripMargin,
-    "q53_stratified_sample" ->
-      """SELECT doc_id, lang, source FROM documents
-        |WHERE substr(md5(concat('s53|', CAST(doc_id AS VARCHAR))), 1, 4) <
-        |  (CASE WHEN lang = 'en' THEN '8000' ELSE '1999' END)""".stripMargin,
-    "q54_quality_topk_per_lang" ->
-      """SELECT lang, doc_id, quality_score, rank FROM (
-        |  SELECT lang, doc_id, q AS quality_score,
-        |    row_number() OVER (PARTITION BY lang ORDER BY q DESC, doc_id) AS rank
-        |  FROM (SELECT lang, doc_id,
-        |    least(1.0,
-        |      length(regexp_replace(text, '[^A-Za-z]', '', 'g')) * 1.0
-        |        / CASE WHEN length(text) > 0 THEN length(text) ELSE 1 END * 0.6
-        |      + CASE WHEN length(regexp_split_to_array(trim(text), '\s+'))
-        |          BETWEEN 10 AND 2000 THEN 0.3 ELSE 0.0 END
-        |      + CASE WHEN length(regexp_replace(text, '[A-Za-z0-9\s]', '', 'g')) * 1.0
-        |          / CASE WHEN length(text) > 0 THEN length(text) ELSE 1 END < 0.1
-        |          THEN 0.1 ELSE 0.0 END) AS q
-        |  FROM documents) b) t
-        |WHERE rank <= 3""".stripMargin,
-    "q55_decontaminate" ->
-      """WITH w AS (SELECT doc_id, text,
-        |             regexp_split_to_array(trim(text), '\s+') AS words
-        |           FROM documents),
-        |sh AS (SELECT doc_id, CASE WHEN len(words) >= 3 THEN
-        |         [array_to_string(words[i:i+2], ' ') for i in range(1, len(words) - 1)]
-        |       ELSE [array_to_string(words, ' ')] END AS shingles FROM w),
-        |f AS (SELECT doc_id,
-        |        list_min(list_transform(shingles, x -> md5(x))) AS fp,
-        |        substr(md5(concat('s55|', CAST(doc_id AS VARCHAR))), 1, 1) = '0'
-        |          AS is_eval
-        |      FROM sh)
-        |SELECT doc_id, fp FROM f t
-        |WHERE NOT is_eval
-        |  AND NOT EXISTS (SELECT 1 FROM f e WHERE e.is_eval AND e.fp = t.fp)""".stripMargin,
-    "q40_dedup_exact" ->
-      """SELECT md5(text) AS content_hash, min(doc_id) AS keeper_id,
-        |  count(*) AS n_docs
-        |FROM documents GROUP BY md5(text)""".stripMargin,
-    "q44_ann_brute_topk" ->
-      """SELECT query_id, id, round(cos, 6) AS cos, rank FROM (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS id,
-        |    list_cosine_similarity(CAST(c.embedding AS DOUBLE[]),
-        |      CAST(q.embedding AS DOUBLE[])) AS cos,
-        |    row_number() OVER (PARTITION BY q.vec_id
-        |      ORDER BY list_cosine_similarity(CAST(c.embedding AS DOUBLE[]),
-        |        CAST(q.embedding AS DOUBLE[])) DESC,
-        |        c.vec_id) AS rank
-        |  FROM embeddings c, embeddings q
-        |  WHERE q.vec_id < 5 AND c.vec_id <> q.vec_id) t
-        |WHERE rank <= 10""".stripMargin,
-
-    // ---- extraction family: SQL over the materialized extraction output ----
-    "q20_extract_modules" -> firstModulesSql("ext_modules"),
-    "q51_salted_agg" ->
-      """SELECT user_id, round(sum(value), 4) AS total_value,
-        |  count(*) AS count
-        |FROM events GROUP BY user_id""".stripMargin,
-    "q50_dedup_modules_planted" -> firstModulesSql("ext_modules_planted"),
-    "q21_extract_clean_text" ->
-      s"""SELECT conv_id, turn_idx, clean_text, n_blocks_total, n_blocks_kept
-         |FROM ${t("ext_clean")} WHERE length(clean_text) > 0""".stripMargin,
-    "q22_extract_errors" ->
-      s"""SELECT code, count(*) AS count FROM ${t("ext_errors")} GROUP BY code""",
-    "q23_extract_entities" ->
-      s"""SELECT num_id, text_id, name, kind, info FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY num_id
-         |    ORDER BY (text_id = ''), text_id, name, kind, info) AS rn
-         |  FROM ${t("ext_entities")}) d
-         |WHERE rn = 1""".stripMargin,
-    "q24_extract_metrics" ->
-      s"""SELECT
-         |  (SELECT count(*) FROM ${t("ext_clean")}) AS turns,
-         |  (SELECT CAST(sum(n_blocks_total) AS BIGINT) FROM ${t("ext_clean")}) AS blocks_total,
-         |  (SELECT CAST(sum(n_blocks_kept) AS BIGINT) FROM ${t("ext_clean")}) AS blocks_kept,
-         |  (SELECT count(*) FROM ${t("ext_modules")}) AS modules_ok,
-         |  (SELECT count(*) FROM ${t("ext_errors")}) AS modules_err,
-         |  (SELECT CAST(sum(CASE WHEN span_end > span_start
-         |      THEN span_end - span_start ELSE 0 END) AS BIGINT)
-         |   FROM ${t("ext_modules")}) AS span_chars""".stripMargin,
-    "q25_zone_audit" ->
-      s"""WITH d AS (
-         |  SELECT module_type, zones FROM (
-         |    SELECT module_type, zones, row_number() OVER (PARTITION BY conv_id, module
-         |      ORDER BY turn_idx, block_ordinal, row_ordinal, module_ordinal) AS rn
-         |    FROM ${t("ext_modules")}) x WHERE rn = 1),
-         |z AS (SELECT d.module_type, CAST(u.i - 1 AS INTEGER) AS zone_idx,
-         |        d.zones[u.i] AS zone_value
-         |      FROM d, UNNEST(range(1, len(d.zones) + 1)) AS u(i))
-         |SELECT l.catalog_id, count(*) AS zones,
-         |  CAST(sum(CASE WHEN c.value IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS hits
-         |FROM z JOIN ${t("dim_layout")} l
-         |  ON z.module_type = l.module_type AND z.zone_idx = l.zone_idx
-         |LEFT JOIN ${t("dim_catalogs")} c
-         |  ON l.catalog_id = c.catalog_id AND z.zone_value = c.key
-         |GROUP BY l.catalog_id""".stripMargin,
-    "q26_entity_status" ->
-      s"""WITH ded AS (SELECT num_id, kind FROM (
-         |    SELECT num_id, kind, row_number() OVER (PARTITION BY num_id
-         |      ORDER BY (text_id = ''), text_id, name, kind, info) AS rn
-         |    FROM ${t("ext_entities")}) x WHERE rn = 1),
-         |pk AS (SELECT DISTINCT k FROM (SELECT CAST(num_id AS BIGINT) AS k
-         |       FROM ded WHERE kind = 'person' UNION ALL SELECT 0) a),
-         |ck AS (SELECT DISTINCT k FROM (SELECT CAST(num_id AS BIGINT) AS k
-         |       FROM ded WHERE kind = 'community' UNION ALL SELECT 8999) a),
-         |pg AS (SELECT 'person' AS kind, prev AS gap_start, k AS gap_end,
-         |         k - prev - 1 AS missing
-         |       FROM (SELECT k, lag(k) OVER (ORDER BY k) AS prev FROM pk) v
-         |       WHERE prev IS NOT NULL AND k - prev > 1),
-         |cg AS (SELECT 'community' AS kind, prev AS gap_start, k AS gap_end,
-         |         k - prev - 1 AS missing
-         |       FROM (SELECT k, lag(k) OVER (ORDER BY k) AS prev FROM ck) v
-         |       WHERE prev IS NOT NULL AND k - prev > 1)
-         |SELECT kind, gap_start, gap_end, missing FROM pg
-         |UNION ALL SELECT kind, gap_start, gap_end, missing FROM cg""".stripMargin,
-    "q28_skip_rules" ->
-      s"""WITH b AS (SELECT code, count(*) AS errors_before
-         |           FROM ${t("ext_errors")} GROUP BY code),
-         |a AS (SELECT code, count(*) AS errors_after
-         |      FROM ${t("ext_errors_after")} GROUP BY code)
-         |SELECT b.code, b.errors_before,
-         |  coalesce(a.errors_after, 0) AS errors_after,
-         |  (SELECT count(*) FROM ${t("skip_rules")}) AS skip_rules
-         |FROM b LEFT JOIN a USING (code)""".stripMargin,
-    "q52_conversation_agg" -> conversationTextSql,
-    "q29_conversation_text" -> conversationTextSql,
-
-    "q62_transcript_shape" ->
-      s"""WITH l AS (SELECT conv_id, role, tool, ts,
-         |    lag(role) OVER (PARTITION BY conv_id ORDER BY turn_idx)
-         |      AS prev_role,
-         |    last_value(tool IGNORE NULLS) OVER (PARTITION BY conv_id
-         |      ORDER BY turn_idx
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_tool
-         |  FROM ${t("transcripts_raw")})
-         |SELECT conv_id, count(*) AS n_turns,
-         |  CAST(sum(CASE WHEN role = 'tool' THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS n_tool_turns,
-         |  CAST(count(DISTINCT tool) AS BIGINT) AS n_distinct_tools,
-         |  CAST(sum(CASE WHEN role = prev_role THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS n_role_repeats,
-         |  CAST(sum(CASE WHEN role = 'tool' AND prev_tool IS NOT NULL
-         |    AND tool <> prev_tool THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS n_tool_switches,
-         |  (epoch_us(max(ts)) - epoch_us(min(ts))) // 1000000 AS span_secs
-         |FROM l GROUP BY conv_id""".stripMargin,
-    "q59_sequence_packing" ->
-      s"""WITH t AS (SELECT doc_id, doc_id % 8 AS shard,
-         |    CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT)
-         |      AS n_tokens
-         |  FROM documents),
-         |${packingSql(512L)}""".stripMargin,
-    "q60_redact_pii" ->
-      """WITH p AS (SELECT doc_id,
-        |    CASE WHEN doc_id % 7 = 0 THEN text || ' contact user'
-        |      || CAST(doc_id AS VARCHAR) || '@example.com or 555-123-4567'
-        |    ELSE text END AS text
-        |  FROM documents),
-        |r AS (SELECT doc_id,
-        |    regexp_replace(text,
-        |      '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g')
-        |      AS after_email,
-        |    CAST(len(regexp_extract_all(text,
-        |      '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT)
-        |      AS n_emails
-        |  FROM p)
-        |SELECT doc_id,
-        |  regexp_replace(after_email,
-        |    '\b\d{3}[-.]\d{3,4}[-.]\d{4}\b', '<PHONE>', 'g') AS clean_text,
-        |  n_emails,
-        |  CAST(len(regexp_extract_all(after_email,
-        |    '\b\d{3}[-.]\d{3,4}[-.]\d{4}\b')) AS BIGINT) AS n_phones
-        |FROM r""".stripMargin,
-    "q61_repetition_stats" ->
-      """WITH w AS (SELECT doc_id,
-        |    regexp_split_to_array(trim(text), '\s+') AS words FROM documents),
-        |g AS (SELECT doc_id, words,
-        |    CASE WHEN len(words) >= 2
-        |      THEN [array_to_string(words[i:i+1], ' ')
-        |            for i in range(1, len(words))]
-        |      ELSE [array_to_string(words, ' ')] END AS g2,
-        |    CASE WHEN len(words) >= 3
-        |      THEN [array_to_string(words[i:i+2], ' ')
-        |            for i in range(1, len(words) - 1)]
-        |      ELSE [array_to_string(words, ' ')] END AS g3
-        |  FROM w)
-        |SELECT doc_id,
-        |  round(1.0 - CAST(len(list_distinct(words)) AS DOUBLE) / len(words), 6)
-        |    AS dup_word_frac,
-        |  round(1.0 - CAST(len(list_distinct(g2)) AS DOUBLE) / len(g2), 6)
-        |    AS dup_2gram_frac,
-        |  round(1.0 - CAST(len(list_distinct(g3)) AS DOUBLE) / len(g3), 6)
-        |    AS dup_3gram_frac
-        |FROM g""".stripMargin,
-    // q64: recompute BPE token counts FROM THE MATERIALIZED MERGE TABLE.
-    // Encoding: every token as '|tok|', concatenated ('|c1||c2|'), words
-    // joined by '¶'; merge (lhs,rhs) is then the plain-string replace
-    // '|lhs||rhs|' -> '|lhsrhs|', whose left-to-right non-overlapping
-    // semantics is exactly the engine's one-greedy-pass-per-rank applier
-    // (fuzz-pinned); n_tokens = pipes / 2. Both sides strip '|'/'¶' first.
-    "q64_bpe_tokens" ->
-      s"""$bpeReplayCtes
-         |SELECT doc_id,
-         |  CAST((length(s) - length(replace(s, '|', ''))) / 2 AS BIGINT)
-         |    AS n_tokens
-         |FROM steps
-         |WHERE r = (SELECT count(*) FROM ${t("bpe_merges")})""".stripMargin,
-
-    // q68: replay the planted contamination + the 13-gram overlap check
-    "q68_ngram_decontaminate" ->
-      """WITH d0 AS (SELECT doc_id, lang, source, text,
-        |    substr(md5('s68|' || CAST(doc_id AS VARCHAR)), 1, 1) = '0'
-        |      AS is_eval
-        |  FROM documents),
-        |d AS (SELECT doc_id, lang, source, is_eval,
-        |    CASE WHEN doc_id % 9 = 0 OR (is_eval AND doc_id % 3 = 0)
-        |      THEN text ||
-        |        ' zq alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu'
-        |      ELSE text END AS text
-        |  FROM d0),
-        |w AS (SELECT doc_id, lang, source, is_eval,
-        |    regexp_split_to_array(trim(text), '\s+') AS words FROM d),
-        |g AS (SELECT doc_id, lang, source, is_eval,
-        |    CASE WHEN len(words) >= 13 THEN
-        |      list_distinct([array_to_string(words[i:i+12], ' ')
-        |                     for i in range(1, len(words) - 11)])
-        |    ELSE [array_to_string(words, ' ')] END AS gs
-        |  FROM w),
-        |eg AS (SELECT list(DISTINCT gr) AS egs
-        |       FROM (SELECT unnest(gs) AS gr FROM g WHERE is_eval))
-        |SELECT doc_id, lang, source FROM g CROSS JOIN eg
-        |WHERE NOT is_eval
-        |  AND NOT coalesce(list_has_any(gs, egs), false)""".stripMargin,
-
-    // q67: token IDENTITY from the q64 replay — the folded encoding is the
-    // token sequence itself; strip outer pipes, then word boundaries and
-    // token separators both become '§'
-    "q67_bpe_tokenize" ->
-      s"""$bpeReplayCtes
-         |SELECT doc_id,
-         |  replace(replace(trim(s, '|'), '|¶|', '§'), '||', '§') AS tokens_str
-         |FROM steps
-         |WHERE r = (SELECT count(*) FROM ${t("bpe_merges")})""".stripMargin,
-
-    // q70: token IDS — the q67 replay string split per position, each
-    // token joined to the materialized bpe_vocab dimension (parallel
-    // unnest + generate_subscripts keeps positions aligned, Postgres
-    // semantics); ids re-joined with ',' in token order
-    "q70_bpe_token_ids" ->
-      s"""$bpeReplayCtes,
-         |fin AS (
-         |  SELECT doc_id,
-         |    replace(replace(trim(s, '|'), '|¶|', '§'), '||', '§') AS toks
-         |  FROM steps
-         |  WHERE r = (SELECT count(*) FROM ${t("bpe_merges")})),
-         |ex AS (
-         |  SELECT doc_id, unnest(str_split(toks, '§')) AS tok,
-         |    generate_subscripts(str_split(toks, '§'), 1) AS i
-         |  FROM fin WHERE toks <> ''),
-         |ids AS (
-         |  SELECT ex.doc_id,
-         |    string_agg(v.token_id::VARCHAR, ',' ORDER BY ex.i) AS ids_str
-         |  FROM ex JOIN ${t("bpe_vocab")} v ON v.token = ex.tok
-         |  GROUP BY ex.doc_id)
-         |SELECT f.doc_id, coalesce(ids.ids_str, '') AS ids_str
-         |FROM fin f LEFT JOIN ids ON f.doc_id = ids.doc_id""".stripMargin,
-
-    // q71: the full sink — replayed token ids (q70's CTEs) grouped into
-    // q66's packing cells; per pack, member id streams concatenated in
-    // pack order (string_agg skips NULL = empty docs, matching the
-    // engine's length>0 filter)
-    "q71_packed_ids" ->
-      s"""$bpeReplayCtes,
-         |fin AS (
-         |  SELECT doc_id, doc_id % $BpePackShards AS shard,
-         |    replace(replace(trim(s, '|'), '|¶|', '§'), '||', '§') AS toks,
-         |    CAST((length(s) - length(replace(s, '|', ''))) / 2 AS BIGINT)
-         |      AS n_tokens
-         |  FROM steps
-         |  WHERE r = (SELECT count(*) FROM ${t("bpe_merges")})),
-         |c AS (SELECT doc_id, shard, n_tokens, toks,
-         |    coalesce(sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-         |      AS tok_start,
-         |    row_number() OVER (PARTITION BY shard ORDER BY doc_id) - 1
-         |      AS pack_pos
-         |  FROM fin),
-         |ex AS (
-         |  SELECT doc_id, unnest(str_split(toks, '§')) AS tok,
-         |    generate_subscripts(str_split(toks, '§'), 1) AS i
-         |  FROM c WHERE toks <> ''),
-         |ids AS (
-         |  SELECT ex.doc_id,
-         |    string_agg(v.token_id::VARCHAR, ',' ORDER BY ex.i) AS ids_str
-         |  FROM ex JOIN ${t("bpe_vocab")} v ON v.token = ex.tok
-         |  GROUP BY ex.doc_id)
-         |SELECT
-         |  CAST(shard * 1099511627776 + tok_start // $BpePackWindow AS BIGINT) AS pack_id,
-         |  CAST(count(*) AS BIGINT) AS n_docs,
-         |  CAST(sum(n_tokens) AS BIGINT) AS pack_tokens,
-         |  coalesce(string_agg(ids.ids_str, ',' ORDER BY pack_pos), '')
-         |    AS ids_str
-         |FROM c LEFT JOIN ids ON c.doc_id = ids.doc_id
-         |GROUP BY 1""".stripMargin,
-
-    // q66: q64's recursive merge replay feeding q59's packing windows —
-    // the oracle recomputes BPE counts from the materialized merges, then
-    // packs by them
-    "q66_bpe_packing" ->
-      s"""$bpeReplayCtes,
-         |t AS (
-         |  SELECT doc_id, doc_id % $BpePackShards AS shard,
-         |    CAST((length(s) - length(replace(s, '|', ''))) / 2 AS BIGINT)
-         |      AS n_tokens
-         |  FROM steps
-         |  WHERE r = (SELECT count(*) FROM ${t("bpe_merges")})),
-         |${packingSql(BpePackWindow)}""".stripMargin,
-
-    // q65: replay the paragraph synthesis (10-word chunks, planted
-    // boilerplate in every 5th doc), count paragraphs corpus-wide, strip
-    // the >= 3-occurrence set from every doc in original order
-    "q65_paragraph_dedup" ->
-      """WITH words AS (
-        |  SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        |synth AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 5 = 0
-        |      THEN 'BOILERPLATE COOKIE NOTICE ACCEPT ALL' || chr(10)
-        |      ELSE '' END ||
-        |    array_to_string(
-        |      [array_to_string(w[i*10+1 : i*10+10], ' ')
-        |       for i in range(0, (len(w) + 9) // 10)], chr(10)) AS text
-        |  FROM words),
-        |paras AS (
-        |  SELECT doc_id, unnest(string_split(text, chr(10))) AS p FROM synth),
-        |hot AS (
-        |  SELECT list(p) AS hp
-        |  FROM (SELECT p FROM paras GROUP BY p HAVING count(*) >= 3))
-        |SELECT s.doc_id,
-        |  array_to_string(
-        |    list_filter(string_split(s.text, chr(10)),
-        |      p -> NOT coalesce(list_contains(h.hp, p), false)),
-        |    chr(10)) AS text
-        |FROM synth s CROSS JOIN hot h""".stripMargin,
-
-    // ---- near-dup verify stages over materialized candidate pairs ----------
-    "q41_dedup_minhash" ->
-      s"""$plantedShinglesCte
-         |SELECT id_a, id_b, round(j, 6) AS jaccard FROM (
-         |  SELECT c.id_a, c.id_b,
-         |    CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-         |      / len(list_distinct(list_concat(a.s, b.s))) AS j
-         |  FROM ${t("minhash_cands")} c
-         |  JOIN sh a ON c.id_a = a.doc_id
-         |  JOIN sh b ON c.id_b = b.doc_id) v
-         |WHERE j >= $JaccardThreshold""".stripMargin,
-    // STRONGER than q41's oracle: the DuckDB side is the full ALL-PAIRS
-    // Jaccard join (feasible at oracle scale), so a candidate-generation
-    // false NEGATIVE — not just a bad verify — breaks the hash, for either
-    // physical strategy.
-    "q57_dedup_ngram_jaccard" ->
-      s"""$plantedShinglesCte
-         |SELECT id_a, id_b, round(j, 6) AS jaccard FROM (
-         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |    CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-         |      / len(list_distinct(list_concat(a.s, b.s))) AS j
-         |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id) v
-         |WHERE j >= $JaccardThreshold""".stripMargin,
-    "q42_dedup_simhash" ->
-      s"""SELECT c.id_a, c.id_b,
-         |  CAST(bit_count(xor(sa.sh, sb.sh)) AS BIGINT) AS dist
-         |FROM ${t("simhash_cands")} c
-         |JOIN ${t("simhash_sigs")} sa ON c.id_a = sa.id
-         |JOIN ${t("simhash_sigs")} sb ON c.id_b = sb.id
-         |WHERE bit_count(xor(sa.sh, sb.sh)) <= $SimhashMaxDist""".stripMargin,
-    "q43_dedup_embedding" ->
-      s"""SELECT id_a, id_b, round(cos, 6) AS cos FROM (
-         |  SELECT c.id_a, c.id_b,
-         |    list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-         |      CAST(b.embedding AS DOUBLE[])) AS cos
-         |  FROM ${t("emb_cands")} c
-         |  JOIN ${t("emb_planted")} a ON c.id_a = a.vec_id
-         |  JOIN ${t("emb_planted")} b ON c.id_b = b.vec_id) v
-         |WHERE cos >= 0.98""".stripMargin,
-    "q49_dedup_corpus" ->
-      s"""SELECT count(*) AS docs_kept,
-         |  CAST(sum(CASE WHEN doc_id >= 1000000 THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS planted_kept
-         |FROM ${t("corpus_keepers")}""".stripMargin,
-
-    // ---- ANN re-rank stages over materialized candidate sets ---------------
-    "q45_ann_lsh_topk" -> reRankSql("ann_lsh_cands"),
-    "q47_ann_ivf_topk" -> reRankSql("ann_ivf_cands"),
-    // q69: same re-rank contract as q45/q47 — DuckDB exactly re-ranks the
-    // engine's materialized PQ candidate set (ADC recall itself is gated
-    // in the bench, not the oracle)
-    "q69_ann_pq_topk" -> reRankSql("ann_pq_cands"),
-
-    // ---- multimodal feature aggregation over decoded rows ------------------
-    "q46_multimodal_features" ->
-      s"""SELECT kind, count(*) AS n,
-         |  CAST(sum(CASE WHEN decoded THEN 1 ELSE 0 END) AS BIGINT) AS n_decoded,
-         |  CAST(sum(n_bytes) AS BIGINT) AS total_bytes,
-         |  round(avg(entropy), 4) AS avg_entropy,
-         |  round(avg(rms), 4) AS avg_rms,
-         |  CAST(sum(width) AS BIGINT) AS total_px_width,
-         |  CAST(sum(frames_sampled) AS BIGINT) AS frames_sampled
-         |FROM ${t("media_features")} GROUP BY kind""".stripMargin
-  )
+  lazy val materializations: Map[String, (SparkSession, String) => DataFrame] =
+    merge(Extraction.materializations, TextCuration.materializations,
+      NearDupAnn.materializations)
 }

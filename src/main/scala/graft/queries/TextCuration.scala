@@ -1,0 +1,483 @@
+package graft.queries
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+
+import graft.SparkEntry.{Query, load, t}
+import graft.operators.TextStats
+import graft.queries.BpeModel._
+
+/** Text analysis, corpus curation and BPE (over `BpeModel`) on the
+  * documents table, each query with its oracle. */
+private[graft] object TextCuration {
+
+  /** Packing cell parameters — ONE definition shared by the q59, q66 and
+    * q71 queries AND their oracle SQL, so their packs cannot silently
+    * diverge. */
+  private final val PackWindow = 512L
+  private final val PackShards = 8
+
+  /** q59's packing cells over a CTE `t` of (doc_id, shard, n_tokens), which
+    * q66 reuses with its BPE counts: each doc's token offset in its shard,
+    * and the `window`-token pack it starts in. */
+  private def packingSql(window: Long): String =
+    s"""c AS (SELECT doc_id, shard, n_tokens,
+       |    coalesce(sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+       |      AS tok_start,
+       |    row_number() OVER (PARTITION BY shard ORDER BY doc_id) - 1
+       |      AS pack_pos
+       |  FROM t)
+       |SELECT doc_id, CAST(shard AS BIGINT) AS shard, n_tokens,
+       |  CAST(tok_start AS BIGINT) AS tok_start,
+       |  CAST(shard * 1099511627776 + tok_start // $window AS BIGINT) AS pack_id,
+       |  CAST(pack_pos AS BIGINT) AS pack_pos
+       |FROM c""".stripMargin
+
+
+  private[graft] val queries: Seq[(String, Query)] = Seq(
+    // ---- text analysis over documents --------------------------------------
+    "q30_text_tokens" -> Query((s, dir) => {
+      val d = load(s, dir, "documents")
+      d.select(col("doc_id"),
+        TextStats.tokenCount(col("text")).cast("long").as("n_tokens"),
+        TextStats.subwordCount(col("text")).cast("long").as("n_subwords"))
+    }, """SELECT doc_id,
+         |  CAST(length(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS n_tokens,
+         |  CAST(length(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS BIGINT) AS n_subwords
+         |FROM documents""".stripMargin),
+    "q31_quality_score" -> Query((s, dir) => {
+      val d = load(s, dir, "documents")
+      TextStats.qualityColumns(col("text")).foldLeft(d.select(col("doc_id"), col("text"))) {
+        case (df, (name, c)) => df.withColumn(name, c)
+      }.drop("text")
+    }, """SELECT doc_id,
+         |  CAST(length(text) AS BIGINT) AS n_chars,
+         |  CAST(length(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS n_tokens,
+         |  length(regexp_replace(text, '[^A-Za-z]', '', 'g')) * 1.0
+         |    / CASE WHEN length(text) > 0 THEN length(text) ELSE 1 END AS alpha_ratio,
+         |  length(regexp_replace(text, '[^0-9]', '', 'g')) * 1.0
+         |    / CASE WHEN length(text) > 0 THEN length(text) ELSE 1 END AS digit_ratio,
+         |  length(regexp_replace(text, '[A-Za-z0-9\s]', '', 'g')) * 1.0
+         |    / CASE WHEN length(text) > 0 THEN length(text) ELSE 1 END AS punct_ratio,
+         |  length(regexp_replace(text, '\s', '', 'g')) * 1.0
+         |    / length(regexp_split_to_array(trim(text), '\s+')) AS avg_token_len,
+         |  least(1.0,
+         |    length(regexp_replace(text, '[^A-Za-z]', '', 'g')) * 1.0
+         |      / CASE WHEN length(text) > 0 THEN length(text) ELSE 1 END * 0.6
+         |    + CASE WHEN length(regexp_split_to_array(trim(text), '\s+'))
+         |        BETWEEN 10 AND 2000 THEN 0.3 ELSE 0.0 END
+         |    + CASE WHEN length(regexp_replace(text, '[A-Za-z0-9\s]', '', 'g')) * 1.0
+         |        / CASE WHEN length(text) > 0 THEN length(text) ELSE 1 END < 0.1
+         |        THEN 0.1 ELSE 0.0 END) AS quality_score
+         |FROM documents""".stripMargin),
+    "q32_lang_id" -> Query((s, dir) => {
+      val d = load(s, dir, "documents")
+      val withHits = TextStats.langHitColumns(col("text"))
+        .foldLeft(d.select(col("doc_id"), col("text"))) {
+          case (df, (name, c)) => df.withColumn(name, c)
+        }
+      withHits.withColumn("pred_lang", TextStats.langIdCol(col("text"))).drop("text")
+    }, {
+      val hits = TextStats.StopwordSets.map { case (lang, words) =>
+        val set = words.map(w => s"'$w'").mkString(", ")
+        s"len(list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'), w -> w IN ($set))) AS hits_$lang"
+      }.mkString(",\n  ")
+      val langs = TextStats.StopwordSets.map(_._1)
+      val best = s"greatest(${langs.map(l => s"hits_$l").mkString(", ")})"
+      val caseChain = langs.map(l => s"WHEN $best > 0 AND hits_$l = $best THEN '$l'")
+        .mkString("CASE ", " ", " ELSE 'und' END")
+      s"""SELECT doc_id, ${langs.map(l => s"CAST(hits_$l AS BIGINT) AS hits_$l").mkString(", ")},
+         |  $caseChain AS pred_lang
+         |FROM (SELECT doc_id,
+         |  $hits
+         |FROM documents) t""".stripMargin
+    }),
+    "q33_fingerprint" -> Query((s, dir) => {
+      val d = load(s, dir, "documents")
+      d.select(col("doc_id"), TextStats.fingerprintCol(col("text")).as("fingerprint"))
+    }, """SELECT doc_id, list_min(list_transform(shingles, s -> md5(s))) AS fingerprint
+         |FROM (
+         |  SELECT doc_id,
+         |    CASE WHEN len(words) >= 3 THEN
+         |      [array_to_string(words[i:i+2], ' ') for i in range(1, len(words) - 1)]
+         |    ELSE [array_to_string(words, ' ')] END AS shingles
+         |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS words
+         |        FROM documents) w) s""".stripMargin),
+
+    // ---- corpus curation: sampling / selection / decontamination -----------
+    "q53_stratified_sample" -> Query((s, dir) => {
+      // deterministic md5-coin stratified sample (language rebalancing):
+      // keep ~50% of en, ~10% of everything else; exactly reproducible by
+      // any engine with md5 (the DuckDB oracle recomputes the keep set)
+      graft.operators.Sampling.stratifiedSample(
+        load(s, dir, "documents").select(col("doc_id"), col("lang"), col("source")),
+        "doc_id", "lang", Map("en" -> "8000"), defaultHex = "1999", seed = "s53")
+    }, """SELECT doc_id, lang, source FROM documents
+         |WHERE substr(md5(concat('s53|', CAST(doc_id AS VARCHAR))), 1, 4) <
+         |  (CASE WHEN lang = 'en' THEN '8000' ELSE '1999' END)""".stripMargin),
+    "q54_quality_topk_per_lang" -> Query((s, dir) => {
+      // per-language quality quota: the TopK heap aggregate composed with
+      // the oracle-proven quality score — no window, partial-aggregating
+      val d = load(s, dir, "documents")
+      val score = TextStats.qualityColumns(col("text")).toMap.apply("quality_score")
+      graft.operators.TopK.topKPerGroup(
+        d.select(col("lang"), col("doc_id"), score.as("quality_score")),
+        "lang", "doc_id", "quality_score", 3)
+    }, """SELECT lang, doc_id, quality_score, rank FROM (
+         |  SELECT lang, doc_id, q AS quality_score,
+         |    row_number() OVER (PARTITION BY lang ORDER BY q DESC, doc_id) AS rank
+         |  FROM (SELECT lang, doc_id,
+         |    least(1.0,
+         |      length(regexp_replace(text, '[^A-Za-z]', '', 'g')) * 1.0
+         |        / CASE WHEN length(text) > 0 THEN length(text) ELSE 1 END * 0.6
+         |      + CASE WHEN length(regexp_split_to_array(trim(text), '\s+'))
+         |          BETWEEN 10 AND 2000 THEN 0.3 ELSE 0.0 END
+         |      + CASE WHEN length(regexp_replace(text, '[A-Za-z0-9\s]', '', 'g')) * 1.0
+         |          / CASE WHEN length(text) > 0 THEN length(text) ELSE 1 END < 0.1
+         |          THEN 0.1 ELSE 0.0 END) AS q
+         |  FROM documents) b) t
+         |WHERE rank <= 3""".stripMargin),
+    "q55_decontaminate" -> Query((s, dir) => {
+      // benchmark decontamination: drop candidate docs whose fingerprint
+      // collides with the (deterministically chosen) eval split
+      val d = load(s, dir, "documents").select(col("doc_id"), col("text"))
+      // localCheckpoint: fp feeds BOTH join sides — without it the
+      // shingle+md5 fingerprint pipeline (the query's dominant cost) would
+      // execute twice; checkpoint blocks free with the plan (no session pin)
+      val fp = d.select(col("doc_id"),
+        TextStats.fingerprintCol(col("text")).as("fp"),
+        (substring(md5(concat(lit("s55|"), col("doc_id").cast("string"))), 1, 1)
+          === "0").as("is_eval"))
+        .localCheckpoint()
+      graft.operators.Sampling.decontaminate(
+        fp.filter(!col("is_eval")).select(col("doc_id"), col("fp")),
+        fp.filter(col("is_eval")), "fp")
+        .select(col("doc_id"), col("fp"))
+    }, """WITH w AS (SELECT doc_id, text,
+         |             regexp_split_to_array(trim(text), '\s+') AS words
+         |           FROM documents),
+         |sh AS (SELECT doc_id, CASE WHEN len(words) >= 3 THEN
+         |         [array_to_string(words[i:i+2], ' ') for i in range(1, len(words) - 1)]
+         |       ELSE [array_to_string(words, ' ')] END AS shingles FROM w),
+         |f AS (SELECT doc_id,
+         |        list_min(list_transform(shingles, x -> md5(x))) AS fp,
+         |        substr(md5(concat('s55|', CAST(doc_id AS VARCHAR))), 1, 1) = '0'
+         |          AS is_eval
+         |      FROM sh)
+         |SELECT doc_id, fp FROM f t
+         |WHERE NOT is_eval
+         |  AND NOT EXISTS (SELECT 1 FROM f e WHERE e.is_eval AND e.fp = t.fp)""".stripMargin),
+    "q68_ngram_decontaminate" -> Query((s, dir) => {
+      // GPT-3-style n-gram decontamination: a candidate doc dies if it
+      // shares ANY 13-gram with the (deterministically chosen) eval
+      // split. The synthetic corpus's random word streams never collide
+      // at 13 words, so contamination is PLANTED: a fixed 13-word phrase
+      // appended to every 9th doc and to eval docs divisible by 3 —
+      // partial contamination the q55 whole-doc fingerprint would miss.
+      val phrase = " zq alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"
+      val d = load(s, dir, "documents")
+        .select(col("doc_id"), col("text"), col("lang"), col("source"))
+      val isEval = substring(
+        md5(concat(lit("s68|"), col("doc_id").cast("string"))), 1, 1) === "0"
+      val planted = d.select(col("doc_id"), col("lang"), col("source"),
+        isEval.as("_is_eval"),
+        when(pmod(col("doc_id"), lit(9)) === 0 ||
+            (isEval && pmod(col("doc_id"), lit(3)) === 0),
+          concat(col("text"), lit(phrase))).otherwise(col("text")).as("text"))
+      graft.operators.Sampling.decontaminateNgrams(
+        planted.filter(!col("_is_eval")).drop("_is_eval"),
+        "doc_id", "text",
+        planted.filter(col("_is_eval")), "text", n = 13)
+        .select(col("doc_id"), col("lang"), col("source"))
+    }, """WITH d0 AS (SELECT doc_id, lang, source, text,
+         |    substr(md5('s68|' || CAST(doc_id AS VARCHAR)), 1, 1) = '0'
+         |      AS is_eval
+         |  FROM documents),
+         |d AS (SELECT doc_id, lang, source, is_eval,
+         |    CASE WHEN doc_id % 9 = 0 OR (is_eval AND doc_id % 3 = 0)
+         |      THEN text ||
+         |        ' zq alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu'
+         |      ELSE text END AS text
+         |  FROM d0),
+         |w AS (SELECT doc_id, lang, source, is_eval,
+         |    regexp_split_to_array(trim(text), '\s+') AS words FROM d),
+         |g AS (SELECT doc_id, lang, source, is_eval,
+         |    CASE WHEN len(words) >= 13 THEN
+         |      list_distinct([array_to_string(words[i:i+12], ' ')
+         |                     for i in range(1, len(words) - 11)])
+         |    ELSE [array_to_string(words, ' ')] END AS gs
+         |  FROM w),
+         |eg AS (SELECT list(DISTINCT gr) AS egs
+         |       FROM (SELECT unnest(gs) AS gr FROM g WHERE is_eval))
+         |SELECT doc_id, lang, source FROM g CROSS JOIN eg
+         |WHERE NOT is_eval
+         |  AND NOT coalesce(list_has_any(gs, egs), false)""".stripMargin),
+    "q59_sequence_packing" -> Query((s, dir) => {
+      // concat-and-slice sample packing: per-shard token-stream offsets and
+      // pack ids, reproducible from (doc_id, nShards, window) alone
+      val d = load(s, dir, "documents")
+      graft.operators.Curation.packSequences(
+        d.select(col("doc_id"), col("text")), "doc_id",
+        TextStats.tokenCount(col("text")), window = PackWindow, nShards = PackShards)
+        .select(col("doc_id"), col("shard"), col("n_tokens"),
+          col("tok_start"), col("pack_id"), col("pack_pos"))
+    }, s"""WITH t AS (SELECT doc_id, doc_id % $PackShards AS shard,
+          |    CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT)
+          |      AS n_tokens
+          |  FROM documents),
+          |${packingSql(PackWindow)}""".stripMargin),
+    "q65_paragraph_dedup" -> Query((s, dir) => {
+      // C4-style corpus-level repeated-paragraph removal (Raffel et al.
+      // 2020 §2.2). The flat synthetic docs carry no newlines, so the
+      // query synthesizes paragraph structure deterministically (10-word
+      // chunks joined by \n) and plants corpus-wide boilerplate in every
+      // 5th doc; the oracle replays the same synthesis, counts paragraphs
+      // corpus-wide and strips the >= 3-occurrence set from every doc in
+      // original order.
+      val d = load(s, dir, "documents")
+      val words = split(col("text"), " ")
+      val nP = expr("(size(split(text, ' ')) + 9) div 10")
+      val paras = transform(sequence(lit(0), (nP - lit(1)).cast("int")),
+        i => array_join(slice(words, i * lit(10) + lit(1), lit(10)), " "))
+      val ptext = array_join(paras, "\n")
+      val planted = when(pmod(col("doc_id"), lit(5)) === 0,
+        concat(lit("BOILERPLATE COOKIE NOTICE ACCEPT ALL\n"), ptext))
+        .otherwise(ptext)
+      val synth = d.select(col("doc_id"), planted.as("text"))
+      graft.operators.Curation.removeRepeatedParagraphs(
+        synth, "doc_id", col("text"), sep = "\n", minCount = 3)
+    }, """WITH words AS (
+         |  SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+         |synth AS (
+         |  SELECT doc_id,
+         |    CASE WHEN doc_id % 5 = 0
+         |      THEN 'BOILERPLATE COOKIE NOTICE ACCEPT ALL' || chr(10)
+         |      ELSE '' END ||
+         |    array_to_string(
+         |      [array_to_string(w[i*10+1 : i*10+10], ' ')
+         |       for i in range(0, (len(w) + 9) // 10)], chr(10)) AS text
+         |  FROM words),
+         |paras AS (
+         |  SELECT doc_id, unnest(string_split(text, chr(10))) AS p FROM synth),
+         |hot AS (
+         |  SELECT list(p) AS hp
+         |  FROM (SELECT p FROM paras GROUP BY p HAVING count(*) >= 3))
+         |SELECT s.doc_id,
+         |  array_to_string(
+         |    list_filter(string_split(s.text, chr(10)),
+         |      p -> NOT coalesce(list_contains(h.hp, p), false)),
+         |    chr(10)) AS text
+         |FROM synth s CROSS JOIN hot h""".stripMargin),
+    "q60_redact_pii" -> Query((s, dir) => {
+      // PII redaction over a corpus with deterministically planted
+      // emails/phones (every 7th doc) — patterns chosen for identical
+      // Java-regex / RE2 semantics so the oracle redacts bit-identically
+      val d = load(s, dir, "documents")
+      val planted = d.select(col("doc_id"),
+        when(pmod(col("doc_id"), lit(7)) === 0,
+          concat(col("text"), lit(" contact user"),
+            col("doc_id").cast("string"), lit("@example.com or 555-123-4567")))
+          .otherwise(col("text")).as("text"))
+      val cols = graft.operators.Curation.redactPii(col("text"))
+      planted.select(col("doc_id") +: cols.map { case (n, c) => c.as(n) }: _*)
+    }, """WITH p AS (SELECT doc_id,
+         |    CASE WHEN doc_id % 7 = 0 THEN text || ' contact user'
+         |      || CAST(doc_id AS VARCHAR) || '@example.com or 555-123-4567'
+         |    ELSE text END AS text
+         |  FROM documents),
+         |r AS (SELECT doc_id,
+         |    regexp_replace(text,
+         |      '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g')
+         |      AS after_email,
+         |    CAST(len(regexp_extract_all(text,
+         |      '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT)
+         |      AS n_emails
+         |  FROM p)
+         |SELECT doc_id,
+         |  regexp_replace(after_email,
+         |    '\b\d{3}[-.]\d{3,4}[-.]\d{4}\b', '<PHONE>', 'g') AS clean_text,
+         |  n_emails,
+         |  CAST(len(regexp_extract_all(after_email,
+         |    '\b\d{3}[-.]\d{3,4}[-.]\d{4}\b')) AS BIGINT) AS n_phones
+         |FROM r""".stripMargin),
+    "q61_repetition_stats" -> Query((s, dir) => {
+      // Gopher-style repetition quality features: duplicate word / 2-gram /
+      // 3-gram fractions per document
+      val d = load(s, dir, "documents")
+      d.select(col("doc_id"),
+        round(graft.operators.Curation.dupNgramFrac(col("text"), 1), 6)
+          .as("dup_word_frac"),
+        round(graft.operators.Curation.dupNgramFrac(col("text"), 2), 6)
+          .as("dup_2gram_frac"),
+        round(graft.operators.Curation.dupNgramFrac(col("text"), 3), 6)
+          .as("dup_3gram_frac"))
+    }, """WITH w AS (SELECT doc_id,
+         |    regexp_split_to_array(trim(text), '\s+') AS words FROM documents),
+         |g AS (SELECT doc_id, words,
+         |    CASE WHEN len(words) >= 2
+         |      THEN [array_to_string(words[i:i+1], ' ')
+         |            for i in range(1, len(words))]
+         |      ELSE [array_to_string(words, ' ')] END AS g2,
+         |    CASE WHEN len(words) >= 3
+         |      THEN [array_to_string(words[i:i+2], ' ')
+         |            for i in range(1, len(words) - 1)]
+         |      ELSE [array_to_string(words, ' ')] END AS g3
+         |  FROM w)
+         |SELECT doc_id,
+         |  round(1.0 - CAST(len(list_distinct(words)) AS DOUBLE) / len(words), 6)
+         |    AS dup_word_frac,
+         |  round(1.0 - CAST(len(list_distinct(g2)) AS DOUBLE) / len(g2), 6)
+         |    AS dup_2gram_frac,
+         |  round(1.0 - CAST(len(list_distinct(g3)) AS DOUBLE) / len(g3), 6)
+         |    AS dup_3gram_frac
+         |FROM g""".stripMargin),
+
+    // ---- BPE: oracles replay the materialized merge table (bpeReplayCtes) --
+    "q64_bpe_tokens" -> Query((s, dir) => {
+      // REAL BPE token counts: merge table trained once on a bounded
+      // hash-range sample (Bpe.train), broadcast, applied distributed. The
+      // oracle replays the MATERIALIZED merge table over the same text:
+      // every token as '|tok|', concatenated ('|c1||c2|'), words joined by
+      // '¶'; merge (lhs,rhs) is then the plain-string replace '|lhs||rhs|'
+      // -> '|lhsrhs|', whose left-to-right non-overlapping semantics is
+      // exactly the engine's one-greedy-pass-per-rank applier (fuzz-pinned);
+      // n_tokens = pipes / 2. '|' and '¶' are the oracle's token/word
+      // separators, so both sides count text with those two characters
+      // stripped (the query pins the BPE math; the operator itself takes
+      // arbitrary text).
+      val d = load(s, dir, "documents")
+      graft.operators.Bpe.tokenCounts(d, "doc_id", bpeText(col("text")), bpeEncoder(s, dir))
+    }, s"""$bpeReplayCtes
+          |SELECT doc_id,
+          |  CAST((length(s) - length(replace(s, '|', ''))) / 2 AS BIGINT)
+          |    AS n_tokens
+          |FROM steps
+          |WHERE r = (SELECT count(*) FROM ${t("bpe_merges")})""".stripMargin),
+    "q67_bpe_tokenize" -> Query((s, dir) => {
+      // the ACTUAL subword sequences (not just counts) — what a
+      // training-data emitter writes. Token identity is oracle-checked:
+      // the q64 replay's folded string IS the token sequence ('|t1||t2|'
+      // per word, '¶' between words), so the oracle recovers it with two
+      // replaces + a trim. '§' joins tokens on both sides.
+      val d = load(s, dir, "documents")
+      graft.operators.Bpe.tokenize(d, "doc_id", bpeText(col("text")), bpeEncoder(s, dir))
+    }, s"""$bpeReplayCtes
+          |SELECT doc_id,
+          |  replace(replace(trim(s, '|'), '|¶|', '§'), '||', '§') AS tokens_str
+          |FROM steps
+          |WHERE r = (SELECT count(*) FROM ${t("bpe_merges")})""".stripMargin),
+    "q70_bpe_token_ids" -> Query((s, dir) => {
+      // the tokenized-sink form: subword sequences mapped to dense integer
+      // token ids via the materialized bpe_vocab dimension (lexicographic
+      // id assignment — bounded by the model: <= nMerges merged symbols +
+      // single code points). The oracle replays the merges, splits the
+      // token string, and joins the SAME vocab table per position.
+      val d = load(s, dir, "documents")
+      graft.operators.Bpe.tokenizeIds(d, "doc_id", bpeText(col("text")),
+        bpeEncoder(s, dir), bpeVocabRows(s, dir).toMap)
+    }, s"""$bpeReplayCtes,
+          |fin AS (
+          |  SELECT doc_id,
+          |    replace(replace(trim(s, '|'), '|¶|', '§'), '||', '§') AS toks
+          |  FROM steps
+          |  WHERE r = (SELECT count(*) FROM ${t("bpe_merges")})),
+          |${vocabIdsCtes("fin")}
+          |SELECT f.doc_id, coalesce(ids.ids_str, '') AS ids_str
+          |FROM fin f LEFT JOIN ids ON f.doc_id = ids.doc_id""".stripMargin),
+    "q71_packed_ids" -> Query((s, dir) => {
+      // the FINAL training-sink artifact, end to end: documents → real-BPE
+      // token ids (q70) → budget-packed buffers (q66's packing) → per pack,
+      // the member docs' id streams concatenated in pack order. The oracle
+      // composes the merge replay, the vocab position-join, and the
+      // packing windows — every stage independently recomputed (string_agg
+      // skips NULL = empty docs, matching the engine's length>0 filter).
+      val d = load(s, dir, "documents")
+      // ONE corpus encode: the id streams are the source of truth and the
+      // packing budget derives from them (token count == id count), so the
+      // sink doesn't pay tokenCounts' second pass; localCheckpoint because
+      // ids feed both the budget and the final join (q55's precedent)
+      val ids = graft.operators.Bpe.tokenizeIds(d, "doc_id",
+        bpeText(col("text")), bpeEncoder(s, dir), bpeVocabRows(s, dir).toMap)
+        .localCheckpoint()
+      val counts = ids.select(col("doc_id"),
+        when(col("ids_str") === "", lit(0L))
+          .otherwise(size(split(col("ids_str"), ",")).cast("long"))
+          .as("bpe_tokens"))
+      val packed = graft.operators.Curation.packSequences(
+        counts, "doc_id", col("bpe_tokens"),
+        window = PackWindow, nShards = PackShards)
+      packed.join(ids, Seq("doc_id"))
+        .groupBy(col("pack_id"))
+        .agg(
+          count(lit(1)).as("n_docs"),
+          sum(col("n_tokens")).as("pack_tokens"),
+          array_join(
+            filter(
+              transform(
+                array_sort(collect_list(struct(col("pack_pos"), col("ids_str")))),
+                x => x.getField("ids_str")),
+              x => length(x) > 0),
+            ",").as("ids_str"))
+    }, s"""$bpeReplayCtes,
+          |fin AS (
+          |  SELECT doc_id, doc_id % $PackShards AS shard,
+          |    replace(replace(trim(s, '|'), '|¶|', '§'), '||', '§') AS toks,
+          |    CAST((length(s) - length(replace(s, '|', ''))) / 2 AS BIGINT)
+          |      AS n_tokens
+          |  FROM steps
+          |  WHERE r = (SELECT count(*) FROM ${t("bpe_merges")})),
+          |c AS (SELECT doc_id, shard, n_tokens, toks,
+          |    coalesce(sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
+          |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+          |      AS tok_start,
+          |    row_number() OVER (PARTITION BY shard ORDER BY doc_id) - 1
+          |      AS pack_pos
+          |  FROM fin),
+          |${vocabIdsCtes("c")}
+          |SELECT
+          |  CAST(shard * 1099511627776 + tok_start // $PackWindow AS BIGINT) AS pack_id,
+          |  CAST(count(*) AS BIGINT) AS n_docs,
+          |  CAST(sum(n_tokens) AS BIGINT) AS pack_tokens,
+          |  coalesce(string_agg(ids.ids_str, ',' ORDER BY pack_pos), '')
+          |    AS ids_str
+          |FROM c LEFT JOIN ids ON c.doc_id = ids.doc_id
+          |GROUP BY 1""".stripMargin),
+    "q66_bpe_packing" -> Query((s, dir) => {
+      // the round-3 verdict's "offer real BPE to the packing tokensCol",
+      // end-to-end: q59's concat-and-slice packing budgeted by the REAL
+      // tokenizer counts of q64 (same cached merge table). The oracle
+      // composes the q64 recursive merge replay with the q59 packing SQL.
+      val d = load(s, dir, "documents")
+      val counts = graft.operators.Bpe
+        .tokenCounts(d, "doc_id", bpeText(col("text")), bpeEncoder(s, dir))
+        .select(col("doc_id"), col("n_tokens").as("bpe_tokens"))
+      graft.operators.Curation.packSequences(
+        counts, "doc_id", col("bpe_tokens"),
+        window = PackWindow, nShards = PackShards)
+        .select(col("doc_id"), col("shard"), col("n_tokens"),
+          col("tok_start"), col("pack_id"), col("pack_pos"))
+    }, s"""$bpeReplayCtes,
+          |t AS (
+          |  SELECT doc_id, doc_id % $PackShards AS shard,
+          |    CAST((length(s) - length(replace(s, '|', ''))) / 2 AS BIGINT)
+          |      AS n_tokens
+          |  FROM steps
+          |  WHERE r = (SELECT count(*) FROM ${t("bpe_merges")})),
+          |${packingSql(PackWindow)}""".stripMargin)
+  )
+
+  /** The trained BPE model, for the replaying oracles above. */
+  private[graft] val materializations: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
+    "bpe_merges" -> ((s, dir) => {
+      import s.implicits._
+      bpeMergeTable(s, dir).toDF()
+    }),
+    "bpe_vocab" -> ((s, dir) => {
+      // the SAME slot-cached rows q70/q71 consume — one definition, no
+      // prose-enforced mirroring
+      import s.implicits._
+      bpeVocabRows(s, dir).toDF("token", "token_id")
+    })
+  )
+}

@@ -88,8 +88,14 @@ class SparkPipelineSpec extends AnyFunSuite {
 
   test("driver contract: entry() returns rows and every query has a runner") {
     assert(SparkEntry.entry(spark).count() > 0)
-    // every oracle key refers to an existing query
-    SparkEntry.oracleSql.keys.foreach(k => assert(SparkEntry.queries.contains(k), k))
+    // 55 distinct names, each with exactly one oracle
+    assert(SparkEntry.queries.size == 55)
+    assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
+    // a name stated in two family tables fails the merge instead of one
+    // entry silently replacing the other
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.merge(Seq("qa" -> 1, "qb" -> 2), Seq("qb" -> 3)))
+    assert(e.getMessage.contains("qb"), e.getMessage)
   }
 
   test("every {OUT} side table referenced by oracle SQL is materialized") {
