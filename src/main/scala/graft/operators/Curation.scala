@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -176,16 +176,15 @@ object Curation {
       sep: String = "\n", minCount: Long = 3): DataFrame = {
     require(minCount >= 2, s"minCount must be >= 2, got $minCount")
     require(sep.nonEmpty, "sep must be non-empty")
-    // materialized ONCE: `textCol` is caller-supplied and may be an
+    // pinned ONCE: `textCol` is caller-supplied and may be an
     // arbitrarily expensive expression (q65 synthesizes its paragraph
     // structure in it), and this operator evaluates it through THREE
     // consumers — the hot-paragraph count, the anti-join's kept stream,
     // and the null-flag frame. Measured at bench scale the projection
-    // alone was 0.33 s × 3 of a 1.86 s leg; the checkpoint pays one
+    // alone was 0.33 s × 3 of a 1.86 s leg; the pin pays one
     // local write instead (the dedupCorpus lifecycle-stage precedent —
     // a production corpus rewrite materializes its input view once).
-    val base = docs.select(col(idCol).as("_id"), textCol.as("_t"))
-      .localCheckpoint()
+    val base = GraftBridge.pin(docs.select(col(idCol).as("_id"), textCol.as("_t")))
     val paras = base.select(col("_id"),
       posexplode(split(col("_t"), java.util.regex.Pattern.quote(sep)))
         .as(Seq("_pos", "_p")))

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftBridge.pin
 import org.apache.spark.sql.functions._
 
 /** Deduplication family for a training-data pipeline: exact, MinHash+LSH,
@@ -198,14 +199,13 @@ object Dedup {
       docs: DataFrame, idCol: String, textCol: String,
       threshold: Double, shingleK: Int = 3): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // materialized ONCE: the posting table feeds the df aggregation AND the
+    // pinned ONCE: the posting table feeds the df aggregation AND the
     // join back AND (through `prefix`) both sides of the posting self-join —
-    // without the checkpoint the shingling pass re-executes per consumer
+    // without the pin the shingling pass re-executes per consumer
     // (measured: the prefix chain paid ~4 full posting passes at bench
     // scale). Same lifecycle-stage precedent as dedupCorpus's exact table:
     // a production run materializes the inverted index before joining it.
-    val postings = shinglePostings(docs, idCol, textCol, shingleK)
-      .localCheckpoint()
+    val postings = pin(shinglePostings(docs, idCol, textCol, shingleK))
     val dfreq = postings.groupBy("shingle").agg(count(lit(1)).as("df"))
     val ranked = postings.join(dfreq, Seq("shingle"))
       .withColumn("rk", row_number().over(
@@ -215,11 +215,10 @@ object Dedup {
     // floor((1-t)*sz)+1 form computes prefix 1 where the theorem needs 2
     // and a J=0.8 pair is silently never generated (false negative). The
     // epsilon only ever LENGTHENS the prefix — completeness is one-sided.
-    val prefix = ranked
+    val prefix = pin(ranked
       .filter(col("rk") <=
         col("sz") - ceil(lit(threshold) * col("sz") - lit(FpEps)) + 1)
-      .select("shingle", "id", "sz")
-      .localCheckpoint() // feeds both sides of the self-join below
+      .select("shingle", "id", "sz")) // feeds both sides of the self-join below
     val a = prefix.select(col("shingle"), col("id").as("id_a"), col("sz").as("sz_a"))
     val b = prefix.select(col("shingle"), col("id").as("id_b"), col("sz").as("sz_b"))
     a.join(b, Seq("shingle"))
@@ -276,17 +275,15 @@ object Dedup {
     import spark.implicits._
     // one shingling pass, reused by the hot-shingle probe and both pair
     // generators (the ngramCandidates materialization rationale)
-    val postings = shinglePostings(docs, idCol, textCol, shingleK)
-      .localCheckpoint()
+    val postings = pin(shinglePostings(docs, idCol, textCol, shingleK))
     // HOT shingles (df > cap) are tiny BY CONSTRUCTION of the cap (at most
     // |postings| / cap of them) — one partial-agg count probe finds them;
     // the common case (every df under the cap) costs exactly that probe and
     // routes everything through the grouped kernel with NO join at all.
-    val hotShingles = postings.groupBy("shingle")
+    val hotShingles = pin(postings.groupBy("shingle")
       .agg(count(lit(1)).as("df"))
       .filter(col("df") > hotDfCap)
-      .select("shingle")
-      .localCheckpoint() // feeds the anti + semi splits below (tiny)
+      .select("shingle")) // feeds the anti + semi splits below (tiny)
     val anyHot = !hotShingles.isEmpty
     // COLD shingles: group each shingle's posting list once and enumerate
     // its C(df, 2) id pairs directly in a typed kernel, size filter applied
@@ -523,11 +520,11 @@ object Dedup {
     * ~log₂(n) rounds instead of n; the loop still runs to a fixed point and
     * THROWS if it takes more than `MaxStarRounds` (silent non-convergence
     * would leave duplicate keepers). Each round shuffles only the PAIR set —
-    * the corpus is never re-shuffled — and localCheckpoints to truncate
-    * lineage. A pair set of at most 2^20 rows skips the loop for a
-    * union-find over the collected pairs, with the same labels (see
-    * [[nearDupClustersWithRounds]]); no option picks the path or the round
-    * budget.
+    * the corpus is never re-shuffled — and pins its edges, so a round does
+    * not re-execute the rounds before it. A pair set of at most 2^20 rows
+    * skips the loop for a union-find over the collected pairs, with the
+    * same labels (see [[nearDupClustersWithRounds]]); no option picks the
+    * path or the round budget.
     * Returns (id, cluster_id = min doc id of the component). */
   def nearDupClusters(pairs: DataFrame): DataFrame =
     nearDupClustersWithRounds(pairs)._1
@@ -548,7 +545,7 @@ object Dedup {
     *
     * Small-graph fast path (`localSolveMaxPairs`): when the materialized
     * pair set is at most that many rows — ONE count over the already-
-    * checkpointed input — the components are solved with a driver-side
+    * pinned input — the components are solved with a driver-side
     * union-find (min label per component) instead of the iterative
     * distributed loop, and `rounds` is reported as 0. Near-dup pair sets
     * are vanishingly small next to their corpus by construction (LSH emits
@@ -564,12 +561,12 @@ object Dedup {
       pairs: DataFrame, maxRounds: Int = MaxStarRounds,
       localSolveMaxPairs: Long = LocalSolveMaxPairs): (DataFrame, Int) = {
     val spark = pairs.sparkSession
-    // Materialize the INPUT once and derive nodes + edges from it: two
-    // independent localCheckpoints here would each re-execute the whole
+    // Pin the INPUT once and derive nodes + edges from it: two
+    // independent pins here would each re-execute the whole
     // upstream pair-generation pipeline (for dedupCorpus that is the full
     // minhash band/verify chain — measured as the dominant cost of the
     // q49 leg, paid twice before the loop even started).
-    val base = pairs.select(col("id_a"), col("id_b")).localCheckpoint()
+    val base = pin(pairs.select(col("id_a"), col("id_b")))
     if (localSolveMaxPairs > 0 && base.count() <= localSolveMaxPairs) {
       import spark.implicits._
       val rows = base.collect()
@@ -609,14 +606,12 @@ object Dedup {
       return (spark.createDataset(out.toIndexedSeq)
         .toDF("id", "cluster_id"), 0)
     }
-    val nodes = base.select(col("id_a").as("id"))
+    val nodes = pin(base.select(col("id_a").as("id"))
       .union(base.select(col("id_b").as("id")))
-      .distinct()
-      .localCheckpoint()
-    var edges = base.select(col("id_a").as("u"), col("id_b").as("v"))
+      .distinct())
+    var edges = pin(base.select(col("id_a").as("u"), col("id_b").as("v"))
       .filter(col("u") =!= col("v"))
-      .dropDuplicates("u", "v")
-      .localCheckpoint()
+      .dropDuplicates("u", "v"))
     // fixed-point detection: an order-insensitive fingerprint of the edge
     // SET (count + two independent hash XORs — edges are deduplicated, so
     // XOR over distinct hashes is sound, overflow-free under ANSI, and one
@@ -639,10 +634,10 @@ object Dedup {
       val both = edges.select(col("u"), col("v"))
         .union(edges.select(col("v").as("u"), col("u").as("v")))
       val largeMin = both.groupBy("u").agg(least(min(col("v")), first(col("u"))).as("m"))
-      // NOT checkpointed: the small-star step below references it twice,
+      // NOT pinned: the small-star step below references it twice,
       // but both branches contain byte-identical exchange subplans, which
       // Spark executes once (ReusedExchange) — so one materialization per
-      // ROUND (afterSmall's) is enough. At sf0.1 the extra localCheckpoint
+      // ROUND (afterSmall's) is enough. At sf0.1 the extra pin
       // here was ~40% of the loop's wall time, pure scheduling overhead.
       val afterLarge = both.join(largeMin, Seq("u"))
         .filter(col("v") > col("u"))
@@ -654,13 +649,11 @@ object Dedup {
         greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
         .dropDuplicates("u", "v")
       val smallMin = oriented.groupBy("u").agg(min(col("v")).as("m"))
-      val afterSmall = oriented.join(smallMin, Seq("u"))
+      edges = pin(oriented.join(smallMin, Seq("u"))
         .select(col("v").as("u"), col("m").as("v"))
         .union(smallMin.select(col("u"), col("m").as("v")))
         .filter(col("u") =!= col("v"))
-        .dropDuplicates("u", "v")
-        .localCheckpoint()
-      edges = afterSmall
+        .dropDuplicates("u", "v"))
       val fpNew = fingerprint(edges)
       converged = fpNew == fp
       fp = fpNew
@@ -688,8 +681,8 @@ object Dedup {
     // materialization the anti-join re-executes the exact-dedup groupBy of
     // the whole corpus. At 100 TB a production run writes this lifecycle
     // stage to a table anyway (REHEARSAL's extract->dedup flow does);
-    // localCheckpoint is the single-job stand-in for that write.
-    val exact = exactDedup(docs, idCol, textCol).localCheckpoint()
+    // the pin is the single-job stand-in for that write.
+    val exact = pin(exactDedup(docs, idCol, textCol))
     val pairs = minhashNearDups(exact, idCol, textCol, threshold = threshold)
     val clusters = nearDupClusters(pairs)
     val losers = clusters.filter(col("cluster_id") =!= col("id")).select(col("id"))

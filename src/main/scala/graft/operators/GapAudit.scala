@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Scale-safe missing-key gap audit — the reference's --status gap detection
@@ -16,13 +16,11 @@ object GapAudit {
 
   /** Returns (gap_start, gap_end, missing) rows: keys gap_start and gap_end
     * exist, everything strictly between them is missing. */
-  def gaps(keys: DataFrame, keyCol: String, partitions: Int = 0): DataFrame = {
+  def gaps(keys: DataFrame, keyCol: String): DataFrame = {
     val spark = keys.sparkSession
     import spark.implicits._
-    val p = if (partitions > 0) partitions
-      else spark.sessionState.conf.numShufflePartitions
     val distinctKeys = keys.select(col(keyCol).cast("long").as("k")).distinct()
-      .repartitionByRange(p, col("k"))
+      .repartitionByRange(spark.sessionState.conf.numShufflePartitions, col("k"))
       .sortWithinPartitions("k")
 
     // phase 1: intra-partition gaps + per-partition (first, last). Boundary
@@ -30,7 +28,7 @@ object GapAudit {
     // any long is a legitimate key for this general-purpose operator):
     // bound=true → (a=partition id, b=first key, c=last key);
     // bound=false → (a=gap_start, b=gap_end, c=missing).
-    val local = distinctKeys.as[Long].mapPartitions { it =>
+    val local = GraftBridge.pin(distinctKeys.as[Long].mapPartitions { it =>
       if (!it.hasNext) Iterator.empty
       else {
         val first = it.next()
@@ -44,7 +42,7 @@ object GapAudit {
         val pid = org.apache.spark.TaskContext.getPartitionId()
         Iterator((true, pid.toLong, first, prev)) ++ out.iterator
       }
-    }.toDF("bound", "a", "b", "c").cache()
+    }.toDF("bound", "a", "b", "c"))
 
     // phase 2: stitch boundaries (ordered by partition id = range order)
     val bounds = local.filter(col("bound"))
@@ -56,14 +54,8 @@ object GapAudit {
         (l.getLong(1), r.getLong(0), r.getLong(0) - l.getLong(1) - 1)
     }.toSeq
 
-    // materialize the intra-partition gaps off the cache, then release it —
-    // the caller would otherwise hold executor memory for the session
     val inner = local.filter(!col("bound"))
       .select(col("a").as("gap_start"), col("b").as("gap_end"), col("c").as("missing"))
-      .localCheckpoint()
-    local.unpersist()
-
-    import spark.implicits._
     val stitchedDf = stitched.toDF("gap_start", "gap_end", "missing")
     inner.union(stitchedDf)
   }

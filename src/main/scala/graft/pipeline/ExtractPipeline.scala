@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core._
@@ -220,16 +220,12 @@ object ExtractPipeline {
     *
     * `repartitionByRange` runs a SAMPLING job over its input to pick range
     * bounds — an expensive upstream (extract + dedup) would execute twice.
-    * The input is therefore materialized once with an eager localCheckpoint:
-    * unlike persist(), the blocks are freed by the ContextCleaner when the
-    * plan is GC'd instead of living in the CacheManager for the session
-    * (Bench runs each query 3×; leaked pins would stack). Trade-off: a lost
-    * executor fails the query instead of recomputing — acceptable for the
+    * The input is therefore pinned once (`GraftBridge.pin`). This is the
     * fixture-mode global sort; at petabyte scale this sink is not used at
     * all — ResumableExtract's bucketed, sorted-within-bucket output is the
     * scale sink. */
   def ordered(df: DataFrame): DataFrame = {
-    val pinned = df.localCheckpoint()
+    val pinned = GraftBridge.pin(df)
     pinned.repartitionByRange(col("conv_id"), col("turn_idx"), col("block_ordinal"),
         col("row_ordinal"), col("module_ordinal"))
       .sortWithinPartitions("conv_id", "turn_idx", "block_ordinal",
@@ -279,19 +275,16 @@ object ExtractPipeline {
     * Input must already be filtered to the turns to include; output is
     * (conv_id, prose_turns, conversation_text, n_chars), identical to the
     * naive sort_array(collect_list(all turns)) form. */
-  def conversationText(clean: DataFrame, partitions: Int = 0): DataFrame = {
+  def conversationText(clean: DataFrame): DataFrame = {
     val spark = clean.sparkSession
     import spark.implicits._
-    val p = if (partitions > 0) partitions
-      else spark.sessionState.conf.numShufflePartitions
-    // materialize once (eager localCheckpoint) so repartitionByRange's
-    // range-sampling pass doesn't recompute the upstream extraction; unlike
-    // persist(), checkpoint blocks are released by the ContextCleaner when
-    // the plan is garbage collected — no session-lifetime cache entry
-    val pinned = clean.select(col("conv_id"), col("turn_idx"), col("clean_text"))
-      .localCheckpoint()
+    // pinned so repartitionByRange's range-sampling pass doesn't recompute
+    // the upstream extraction
+    val pinned = GraftBridge.pin(
+      clean.select(col("conv_id"), col("turn_idx"), col("clean_text")))
     val segs = pinned
-      .repartitionByRange(p, col("conv_id"), col("turn_idx"))
+      .repartitionByRange(spark.sessionState.conf.numShufflePartitions,
+        col("conv_id"), col("turn_idx"))
       .sortWithinPartitions("conv_id", "turn_idx")
       .as[(String, Int, String)]
       .mapPartitions { it =>

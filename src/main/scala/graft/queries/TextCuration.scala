@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry.{Query, load, t}
@@ -142,14 +142,12 @@ private[graft] object TextCuration {
       // benchmark decontamination: drop candidate docs whose fingerprint
       // collides with the (deterministically chosen) eval split
       val d = load(s, dir, "documents").select(col("doc_id"), col("text"))
-      // localCheckpoint: fp feeds BOTH join sides — without it the
-      // shingle+md5 fingerprint pipeline (the query's dominant cost) would
-      // execute twice; checkpoint blocks free with the plan (no session pin)
-      val fp = d.select(col("doc_id"),
+      // pinned: fp feeds BOTH join sides — without it the shingle+md5
+      // fingerprint pipeline (the query's dominant cost) would execute twice
+      val fp = GraftBridge.pin(d.select(col("doc_id"),
         TextStats.fingerprintCol(col("text")).as("fp"),
         (substring(md5(concat(lit("s55|"), col("doc_id").cast("string"))), 1, 1)
-          === "0").as("is_eval"))
-        .localCheckpoint()
+          === "0").as("is_eval")))
       graft.operators.Sampling.decontaminate(
         fp.filter(!col("is_eval")).select(col("doc_id"), col("fp")),
         fp.filter(col("is_eval")), "fp")
@@ -395,11 +393,10 @@ private[graft] object TextCuration {
       val d = load(s, dir, "documents")
       // ONE corpus encode: the id streams are the source of truth and the
       // packing budget derives from them (token count == id count), so the
-      // sink doesn't pay tokenCounts' second pass; localCheckpoint because
-      // ids feed both the budget and the final join (q55's precedent)
-      val ids = graft.operators.Bpe.tokenizeIds(d, "doc_id",
-        bpeText(col("text")), bpeEncoder(s, dir), bpeVocabRows(s, dir).toMap)
-        .localCheckpoint()
+      // sink doesn't pay tokenCounts' second pass; pinned because ids feed
+      // both the budget and the final join (q55's precedent)
+      val ids = GraftBridge.pin(graft.operators.Bpe.tokenizeIds(d, "doc_id",
+        bpeText(col("text")), bpeEncoder(s, dir), bpeVocabRows(s, dir).toMap))
       val counts = ids.select(col("doc_id"),
         when(col("ids_str") === "", lit(0L))
           .otherwise(size(split(col("ids_str"), ",")).cast("long"))

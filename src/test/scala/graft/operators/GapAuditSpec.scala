@@ -23,8 +23,10 @@ class GapAuditSpec extends AnyFunSuite {
   }
 
   private def twoPhase(keys: DataFrame, partitions: Int): Set[(Long, Long, Long)] =
-    GapAudit.gaps(keys, "k", partitions)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    SharedSpark.withPartitions(partitions) {
+      GapAudit.gaps(keys, "k")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    }
 
   test("matches the window oracle on a seeded random key set, any partitioning") {
     val rnd = new scala.util.Random(42)

@@ -24,6 +24,10 @@ object SharedSpark {
       case None => spark.conf.unset(key)
     }
   }
+
+  /** Runs `body` with `spark.sql.shuffle.partitions` set to `p`. */
+  def withPartitions[T](p: Int)(body: => T): T =
+    withConf("spark.sql.shuffle.partitions", p.toString)(body)
 }
 
 class TextStatsSpec extends AnyFunSuite {

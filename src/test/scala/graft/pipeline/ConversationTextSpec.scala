@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.operators.SharedSpark.withPartitions
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -36,7 +37,8 @@ class ConversationTextSpec extends AnyFunSuite {
     val df = rnd.shuffle(rows).toDF("conv_id", "turn_idx", "clean_text")
     val oracle = asMap(naive(df))
     for (p <- Seq(1, 3, 8)) {
-      assert(asMap(ExtractPipeline.conversationText(df, p)) == oracle, s"p=$p")
+      assert(withPartitions(p)(asMap(ExtractPipeline.conversationText(df))) == oracle,
+        s"p=$p")
     }
   }
 
@@ -45,8 +47,7 @@ class ConversationTextSpec extends AnyFunSuite {
     val small = (0 until 5).map(t => ("small", t, s"s $t"))
     val df = (mega ++ small).toDF("conv_id", "turn_idx", "clean_text")
       .repartition(16) // scatter
-    val out = ExtractPipeline.conversationText(df, 8)
-    val got = asMap(out)
+    val got = withPartitions(8)(asMap(ExtractPipeline.conversationText(df)))
     assert(got("mega")._1 == 20000L)
     assert(got("mega")._2 == (0 until 20000).map(t => s"turn $t").mkString("\n\n"))
     assert(got("small")._2 == (0 until 5).map(t => s"s $t").mkString("\n\n"))
@@ -56,7 +57,7 @@ class ConversationTextSpec extends AnyFunSuite {
   test("non-contiguous turn_idx values keep sorted order") {
     val df = Seq(("c", 90, "last"), ("c", 5, "first"), ("c", 40, "mid"))
       .toDF("conv_id", "turn_idx", "clean_text")
-    val out = ExtractPipeline.conversationText(df, 4).collect().head
+    val out = withPartitions(4)(ExtractPipeline.conversationText(df).collect().head)
     assert(out.getString(2) == "first\n\nmid\n\nlast")
   }
 }
