@@ -15,29 +15,24 @@ object EntityParser {
   val CommunityStartId = 9000 // annuary_register_parser.py:6
   val MaxNumId = 9850 // annuary_register_parser.py:7
 
-  // The reference's `^...$` patterns (annuary_register_parser.py:10-14) as
-  // data: kept for the differential spec; the parse path uses the
-  // allocation-free char-class scans below (each fullMatch allocated a
-  // Matcher, ~5 per header — measured 2.9 KB/header, AllocProbe).
-  private[core] val NumIdPattern = "^[0-9]*$".r
-  private[core] val LetIdPattern = "^[A-Z]*$".r
-  private[core] val PersonNamePattern = """^[A-Z0-9+*". \(\)\/]*$""".r
-  private[core] val CommunityNamePattern = """^[A-Z0-9\-+*. \(\)\/]*$""".r
-  private val ParenthesisGroup = """\(([A-Za-z0-9]+)\)""".r
-
   final case class ParseFailure(code: String, detail: String)
 
-  // Python's re.match anchors at the start only; with `^...$` patterns that
-  // is full-string match (annuary_register_parser.py uses ^..$ everywhere);
-  // empty strings match the `*` quantifier in all four patterns.
+  // The reference's `^...$` patterns (annuary_register_parser.py:10-14) as
+  // allocation-free char-class scans (each fullMatch allocated a Matcher,
+  // ~5 per header — measured 2.9 KB/header, AllocProbe); ParserSpec checks
+  // each scan against its pattern. Python's re.match anchors at the start
+  // only; with `^...$` patterns that is full-string match
+  // (annuary_register_parser.py uses ^..$ everywhere); empty strings match
+  // the `*` quantifier in all four patterns.
   @inline private def isAsciiDigit(c: Char): Boolean = c >= '0' && c <= '9'
   private[core] def allDigits(s: String): Boolean = { // ^[0-9]*$
     var i = 0; while (i < s.length) { if (!isAsciiDigit(s.charAt(i))) return false; i += 1 }
     true
   }
-  private[core] def allUpper(s: String): Boolean = { // ^[A-Z]*$
-    var i = 0
-    while (i < s.length) {
+  /** ^[A-Z]*$ over s[lo, hi). */
+  private[core] def allUpper(s: String, lo: Int, hi: Int): Boolean = {
+    var i = lo
+    while (i < hi) {
       val c = s.charAt(i); if (c < 'A' || c > 'Z') return false; i += 1
     }
     true
@@ -124,15 +119,8 @@ object EntityParser {
 
     // letters id: >= 2 chars, all A-Z (substring materialized only when
     // it survives into the result or an error detail — i.e. always small)
-    if (i1 - i0 < 2)
+    if (i1 - i0 < 2 || !allUpper(registerStr, i0, i1))
       return Left(ParseFailure(ErrorCode.BadLetterId, registerStr.substring(i0, i1)))
-    var p = i0
-    while (p < i1) {
-      val c = registerStr.charAt(p)
-      if (c < 'A' || c > 'Z')
-        return Left(ParseFailure(ErrorCode.BadLetterId, registerStr.substring(i0, i1)))
-      p += 1
-    }
     val lettersId = registerStr.substring(i0, i1)
 
     // numeric id parsed straight off the span. Post-regex overflow = an
@@ -141,7 +129,7 @@ object EntityParser {
     // (annuary_register_parser.py:89-97), so any all-digit value beyond
     // MaxNumId — Int-overflowing or not — is ID_OUT_OF_RANGE, exactly the
     // toInt-catch semantics this replaces; parseNumIdOnly already agrees.
-    p = j0
+    var p = j0
     while (p < j1) {
       if (!isAsciiDigit(registerStr.charAt(p)))
         return Left(ParseFailure(ErrorCode.BadNumericId, registerStr.substring(j0, j1)))
@@ -184,7 +172,7 @@ object EntityParser {
     // Match per header otherwise; equivalence: the alnum run is maximal so
     // the regex has no backtracking alternatives, and the scan advances one
     // position on failure exactly like findFirstMatchIn (ParserSpec
-    // differential pins this against the retained pattern)
+    // differential pins this against the reference regex)
     locally {
       var s = 0
       var found: String = null

@@ -98,9 +98,9 @@ object Dedup {
     *
     * Cost disciplines, all measured:
     *  - shingle arrays are projected ONCE PER DOC on the join build side,
-    *    never inlined per pair (inlining ngramJaccard re-evaluates the
-    *    shingle expression four times per candidate pair — ~2.7 s extra at
-    *    sf0.01);
+    *    never inlined per pair (a per-pair Column-form Jaccard re-evaluates
+    *    the shingle expression four times per candidate pair — ~2.7 s extra
+    *    at sf0.01);
     *  - corpus-wide shingle projection joined on both pair sides in ONE
     *    job — the scans overlap across the cluster and nothing is
     *    materialized. Bench corpora with planted duplicates have ~80% of
@@ -142,13 +142,6 @@ object Dedup {
     verifyJaccard(docs, idCol, textCol,
       minhashCandidates(docs, idCol, textCol, k, bands, shingleK),
       threshold, shingleK)
-
-  /** Exact word-n-gram Jaccard between two text columns — the verification
-    * primitive as one Column (fused native expression; dedup happens inside
-    * ArrayJaccard). */
-  private[operators] def ngramJaccard(textA: Column, textB: Column, k: Int = 3): Column =
-    coalesce(graft.functions.ArrayJaccard(
-      TextStats.shinglesCol(textA, k), TextStats.shinglesCol(textB, k)), lit(0.0))
 
   // ---- n-gram Jaccard via prefix-filtered inverted index -------------------
 

@@ -198,7 +198,7 @@ object ExtractPipeline {
       .reduceGroups((a, b) => if (lt(a, b)) a else b)
       .map(_._2)
   }
-  private[graft] def lt(a: EntityRegister, b: EntityRegister): Boolean = {
+  private def lt(a: EntityRegister, b: EntityRegister): Boolean = {
     // Salvaged minimal registers (M10: empty text_id) always lose to a real
     // register for the same id — the reference resolves the salvaged id
     // against the EXISTING annuary entry (diary_ocr.py:180-182), so

@@ -1,187 +1,21 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.core._
-import graft.pipeline.ExtractPipeline
-
-/** Per-conversation reassembly state: arrival-order (turn_idx, clean_text)
-  * pairs + max event time seen. The state IS the conversation — the
-  * aggregate-tier trade-off (see plans.OrderedConcat); use the streaming
-  * form for live tails and the batch two-phase `conversationText` for
-  * closed corpora. */
-final case class ConvBuffer(keys: Seq[Int], texts: Seq[String], maxTs: Long)
-
-/** Emitted assembled conversation (same shape as batch conversationText). */
-final case class ConvAssembly(conv_id: String, prose_turns: Long,
-    conversation_text: String, n_chars: Int)
-
-/** Structured Streaming face of the extractor.
+/** Structured Streaming face of the engine: the streaming twin of
+  * operators/RangeJoin.
   *
   * The reference is a resumable batch pipeline with NO streaming (SURVEY
-  * §2.9) — this is additive capability, not a port: a transcript turn
-  * stream (`readStream` on the same input_hint schema) flows through the
-  * batch extraction itself — `ExtractPipeline.modules` / `errors` over
-  * `ExtractPipeline.extract(stream, ctx)`, stateless per turn, so it is
-  * trivially streamable — plus a watermarked per-conversation windowed
-  * aggregate for the metrics channel. Resume in streaming mode is the
-  * engine's checkpointing (`checkpointLocation`), the streaming twin of the
-  * batch manifest (ResumableExtract).
+  * §2.9); this is additive capability, not a port. Extraction needs no
+  * operator here: a transcript turn stream (`readStream` on the same
+  * input_hint schema) runs through the batch path itself,
+  * `ExtractPipeline.modules` / `errors` over `ExtractPipeline.extract`,
+  * which is stateless per turn. Resume in streaming mode is the engine's
+  * checkpointing (`checkpointLocation`), the streaming twin of the batch
+  * manifest (ResumableExtract).
   */
 object StreamingExtract {
-
-  /** Streaming first-wins entity dedup — the stateful-streaming twin of the
-    * reference's `add_register` (insert iff key absent,
-    * /root/reference/src/annuary/annuary_data.py:91-96) and of the batch
-    * `dedupEntities`: per num_id, the first micro-batch to carry the key
-    * emits exactly one register (ties WITHIN a batch resolved by the same
-    * salvage-aware total order as batch dedup, so a real register beats a
-    * salvaged minimal one arriving together); every later arrival is
-    * dropped. `flatMapGroupsWithState` with a one-boolean state per key —
-    * the custom-state primitive the engine uses where windowed aggregation
-    * can't express "keep the first forever". State is one boolean per
-    * distinct entity id (≤ 9850 here); for unbounded key spaces, bound it
-    * with a GroupStateTimeout appropriate to the source's replay horizon. */
-  def firstWinsEntityStream(entities: Dataset[EntityRegister]): Dataset[EntityRegister] = {
-    val spark = entities.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    entities.groupByKey(_.num_id)
-      .flatMapGroupsWithState[Boolean, EntityRegister](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: Int, rows: Iterator[EntityRegister], state: GroupState[Boolean]) =>
-          if (state.exists) Iterator.empty
-          else {
-            state.update(true)
-            rows.reduceOption((a, b) =>
-              if (ExtractPipeline.lt(a, b)) a else b).iterator
-          }
-      }
-  }
-
-  /** Streaming already-read skip — the J4 resume prune for at-least-once
-    * sources: a (conv_id, turn_idx) pair passes the FIRST time it is seen,
-    * replays are dropped, making downstream extraction exactly-once per
-    * turn. Keyed per turn (one boolean of state each) so a
-    * mega-conversation never concentrates state on one key.
-    *
-    * The turn key space is corpus-sized, so state MUST be bounded for a
-    * long-running stream: pass `replayHorizon` (e.g. "1 hour") matching the
-    * source's maximum replay window and each key's state is dropped after
-    * that much processing time — replays beyond the horizon would then pass
-    * again, which is exactly the at-least-once contract the horizon
-    * encodes. None keeps state forever (small/bounded corpora only). */
-  def dedupTurnsStream(turns: Dataset[Turn],
-      replayHorizon: Option[String] = None): Dataset[Turn] = {
-    val spark = turns.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val timeoutConf =
-      if (replayHorizon.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    turns.groupByKey(t => (t.conv_id, t.turn_idx))
-      .flatMapGroupsWithState[Boolean, Turn](OutputMode.Append, timeoutConf) {
-        (_: (String, Int), rows: Iterator[Turn], state: GroupState[Boolean]) =>
-          if (state.hasTimedOut) {
-            state.remove() // horizon passed: forget the key
-            Iterator.empty
-          } else if (state.exists) {
-            // GroupState clears the stored timeout on every invocation that
-            // does not re-arm it — replays MUST re-set the duration or the
-            // replayed keys (the common case) would leak state forever
-            replayHorizon.foreach(state.setTimeoutDuration)
-            Iterator.empty
-          } else {
-            state.update(true)
-            replayHorizon.foreach(state.setTimeoutDuration)
-            if (rows.hasNext) Iterator.single(rows.next()) else Iterator.empty
-          }
-      }
-  }
-
-  /** Streaming ordered conversation reassembly — the event-time twin of
-    * batch q29/q52: per conversation, buffer the clean turn texts as they
-    * arrive (any order), and emit the `turn_idx`-ordered concatenation once
-    * the event-time watermark passes the conversation's last activity plus
-    * `quietGapMs` (the "conversation closed" signal — the temporal analog of
-    * q48's session gap). Late turns within `lateness` reorder correctly
-    * because ordering happens at emission, not arrival.
-    *
-    * Replayed turns must be deduplicated upstream (`dedupTurnsStream`) —
-    * this operator buffers every arrival. State per key is the whole
-    * conversation (documented aggregate-tier trade-off above). */
-  def conversationStream(turns: Dataset[Turn], ctx: ModuleParser.Context,
-      lateness: String = "10 minutes",
-      quietGapMs: Long = 30L * 60 * 1000): Dataset[ConvAssembly] = {
-    val spark = turns.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    // A quiet gap shorter than the watermark delay would let a group time out
-    // and emit while late turns inside `lateness` are still admissible — the
-    // same conversation would then re-open and emit a SECOND partial row.
-    // Enforce the invariant instead of documenting it.
-    val latenessMs = {
-      val iv = org.apache.spark.sql.catalyst.util.IntervalUtils.stringToInterval(
-        org.apache.spark.unsafe.types.UTF8String.fromString(lateness))
-      require(iv.months == 0, s"lateness '$lateness' must be a day-time interval")
-      iv.days * 86400000L + iv.microseconds / 1000L
-    }
-    require(quietGapMs >= latenessMs,
-      s"quietGapMs ($quietGapMs ms) must be >= watermark lateness '$lateness' " +
-        s"($latenessMs ms), or closed conversations can re-open and double-emit")
-    val bc = spark.sparkContext.broadcast(ctx)
-    val clean = turns
-      .select(col("conv_id"), col("turn_idx"), col("text"), col("ts"))
-      .as[(String, Int, String, java.sql.Timestamp)]
-      .mapPartitions { it =>
-        val c = bc.value
-        val scratch = new Tokenizer.Scratch
-        it.flatMap { case (conv, idx, text, ts) =>
-          val ct = Extractor.extract(conv, idx, text, c, scratch).clean
-          if (ct.clean_text.nonEmpty) Iterator.single((conv, idx, ct.clean_text, ts))
-          else Iterator.empty
-        }
-      }
-      .toDF("conv_id", "turn_idx", "clean_text", "ts")
-      .withWatermark("ts", lateness)
-    clean.as[(String, Int, String, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[ConvBuffer, ConvAssembly](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (conv: String, rows: Iterator[(String, Int, String, java.sql.Timestamp)],
-         state: GroupState[ConvBuffer]) =>
-          if (state.hasTimedOut) {
-            val st = state.get
-            state.remove()
-            // stable sort on turn_idx: ordering decided at emission
-            val ordered = st.keys.zip(st.texts).sortBy(_._1)
-            val text = ordered.iterator.map(_._2).mkString("\n\n")
-            // code POINTS, matching batch length()/the DuckDB oracle —
-            // String.length would count UTF-16 units (diverges on non-BMP)
-            Iterator.single(ConvAssembly(conv, ordered.size.toLong, text,
-              text.codePointCount(0, text.length)))
-          } else {
-            val st0 = state.getOption.getOrElse(ConvBuffer(Vector.empty, Vector.empty, 0L))
-            // batch-local buffers, ONE concat per invocation — per-row :+ on
-            // the decoded state Seq would copy the whole buffer per turn
-            val newKeys = scala.collection.mutable.ArrayBuffer.empty[Int]
-            val newTexts = scala.collection.mutable.ArrayBuffer.empty[String]
-            var maxTs = st0.maxTs
-            rows.foreach { r =>
-              newKeys += r._2
-              newTexts += r._3
-              maxTs = math.max(maxTs, r._4.getTime)
-            }
-            state.update(ConvBuffer(st0.keys ++ newKeys, st0.texts ++ newTexts, maxTs))
-            // close when the watermark passes last activity + quiet gap;
-            // the timestamp must sit strictly above the current watermark
-            state.setTimeoutTimestamp(
-              math.max(maxTs + quietGapMs, state.getCurrentWatermarkMs() + 1))
-            Iterator.empty
-          }
-      }
-  }
 
   /** Streaming point-in-interval join — the Structured Streaming twin of
     * operators/RangeJoin: every (point, interval) pair of equal `key` with
@@ -265,33 +99,6 @@ object StreamingExtract {
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
         IntervalJoinState.step)(
         Encoders.row(stateType), Encoders.row(StructType(pType.fields ++ iType.fields)))
-  }
-
-  /** Watermarked per-conversation tumbling-window metrics: modules extracted
-    * per conversation per minute of event time, tolerating `lateness` of
-    * out-of-order turns — the streaming form of the metrics table (X1). */
-  def windowedMetrics(
-      turns: Dataset[Turn], ctx: ModuleParser.Context,
-      lateness: String = "2 minutes", window: String = "1 minute"): DataFrame = {
-    val spark = turns.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(ctx)
-    val perTurn = turns
-      .select(col("conv_id"), col("turn_idx"), col("text"), col("ts"))
-      .as[(String, Int, String, java.sql.Timestamp)]
-      .mapPartitions { it =>
-        val c = bc.value
-        it.map { case (conv, idx, text, ts) =>
-          val ex = Extractor.extract(conv, idx, text, c)
-          (conv, ts, ex.modules.size.toLong, ex.errors.size.toLong)
-        }
-      }
-      .toDF("conv_id", "ts", "n_modules", "n_errors")
-    perTurn
-      .withWatermark("ts", lateness)
-      .groupBy(org.apache.spark.sql.functions.window(col("ts"), window), col("conv_id"))
-      .agg(sum("n_modules").as("modules"), sum("n_errors").as("errors"),
-        count(lit(1)).as("turns"))
   }
 }
 

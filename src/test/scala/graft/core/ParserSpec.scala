@@ -62,7 +62,12 @@ class EntityParserSpec extends AnyFunSuite {
 
 class CharClassScanSpec extends AnyFunSuite {
   // the hand scans ARE the reference regexes — pinned by differential
-  // property over a charset that straddles every class boundary
+  // property over a charset that straddles every class boundary. The
+  // reference's `^...$` patterns (annuary_register_parser.py:10-14):
+  private val NumIdPattern = "^[0-9]*$".r
+  private val LetIdPattern = "^[A-Z]*$".r
+  private val PersonNamePattern = """^[A-Z0-9+*". \(\)\/]*$""".r
+  private val CommunityNamePattern = """^[A-Z0-9\-+*. \(\)\/]*$""".r
   private val alphabet =
     "AZaz09+-*\". ()/\\[]{}<>_=,:;!?'é\n\t" + "BKQ158"
   private val rnd = new scala.util.Random(17)
@@ -72,12 +77,15 @@ class CharClassScanSpec extends AnyFunSuite {
   test("allDigits/allUpper/name scans == the reference ^...$ patterns") {
     val cases = Seq("", "A", "-", "\"", "0", "A-B", "A\"B") ++ Seq.fill(2000)(randStr())
     cases.foreach { s =>
-      assert(EntityParser.allDigits(s) == EntityParser.NumIdPattern.pattern.matcher(s).matches(), s)
-      assert(EntityParser.allUpper(s) == EntityParser.LetIdPattern.pattern.matcher(s).matches(), s)
+      assert(EntityParser.allDigits(s) == NumIdPattern.pattern.matcher(s).matches(), s)
+      assert(EntityParser.allUpper(s, 0, s.length) == LetIdPattern.pattern.matcher(s).matches(), s)
+      // the range form as parse calls it: a token inside a longer line
+      assert(EntityParser.allUpper(s"a$s ", 1, s.length + 1) ==
+        LetIdPattern.pattern.matcher(s).matches(), s)
       assert(EntityParser.personNameOk(s) ==
-        EntityParser.PersonNamePattern.pattern.matcher(s).matches(), s)
+        PersonNamePattern.pattern.matcher(s).matches(), s)
       assert(EntityParser.communityNameOk(s) ==
-        EntityParser.CommunityNamePattern.pattern.matcher(s).matches(), s)
+        CommunityNamePattern.pattern.matcher(s).matches(), s)
       assert(EntityParser.containsNumbers(s) == "\\d".r.findFirstIn(s).isDefined, s)
     }
   }
